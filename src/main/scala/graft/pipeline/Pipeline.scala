@@ -22,7 +22,9 @@ object Pipeline {
   def runner(dataRoot: String): DagRunner = new DagRunner(models(dataRoot))
 
   /** Build every model. `materializeDir=Some(dir)` gives dbt-style per-model
-    * table materialization; `None` lets Catalyst fuse across the whole DAG.
+    * table materialization; `None` composes the whole DAG lazily
+    * ([[Materialization.Compose]]), which is slower here because every
+    * consumer re-derives its shared ancestors.
     *
     * `select` is the reference's operational unit (`dbt build --select`,
     * `app/app.py:448`): names/globs with the `+` graph operators —
@@ -42,16 +44,7 @@ object Pipeline {
   def runCatalog(spark: SparkSession, dataRoot: String): Map[String, DataFrame] =
     runner(dataRoot).runAs(spark, Materialization.Catalog())
 
-  /** [[runCatalog]] with time travel: every run lands each model as a new
-    * `v=<n>` under `versionRoot/<schema>/<model>/` and re-points the catalog
-    * table at it — prior runs stay readable via
-    * `VersionedTable.read(spark, dir, Some(v))` (the snapshot-isolation face
-    * of the reference's Iceberg tables). */
-  def runVersioned(spark: SparkSession, dataRoot: String,
-      versionRoot: String): Map[String, DataFrame] =
-    runner(dataRoot).runAs(spark, Materialization.VersionedCatalog(versionRoot))
-
-  /** [[runVersioned]] upgraded to the FULL table contract (the README's
+  /** [[runCatalog]] upgraded to the FULL table contract (the README's
     * "incremental models" future enhancement, `README.md:45-46`, made real):
     * every selected model lands as an `op=overwrite` snapshot of a
     * [[graft.sources.VersionedHiddenTable]] under

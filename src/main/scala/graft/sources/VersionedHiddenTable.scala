@@ -20,12 +20,12 @@ final class CommitConflictException(val tableDir: String,
     s"concurrent commit on $tableDir: staged against base v=$expectedBase " +
       s"but v=$actualLatest has published since — rebase or re-run")
 
-/** Snapshot-versioned, hidden-partitioned table — the two facilities
-  * ([[graft.pipeline.VersionedTable]]'s WAP/time-travel protocol and
-  * [[HiddenPartitioning]]'s spec'd layout/pruning) composed the way a real
-  * Iceberg table is BOTH at once: immutable era data directories, each with
-  * its own partition spec and pruned under it, referenced by tiny
-  * per-snapshot manifests that publish atomically.
+/** Snapshot-versioned, hidden-partitioned table — the two facilities (a
+  * WAP/time-travel snapshot protocol and [[HiddenPartitioning]]'s spec'd
+  * layout/pruning) composed the way a real Iceberg table is BOTH at once:
+  * immutable era data directories, each with its own partition spec and
+  * pruned under it, referenced by tiny per-snapshot manifests that publish
+  * atomically.
   *
   * Layout (cf. Iceberg metadata/manifest split — snapshots reference data
   * files, they never copy them):
@@ -824,9 +824,7 @@ object VersionedHiddenTable {
   def create(spark: SparkSession, tableDir: String, df: DataFrame,
       transforms: Seq[Transform]): Long = {
     require(versions(spark, tableDir).isEmpty, s"table already exists: $tableDir")
-    val era = writeEra(spark, tableDir, df, transforms)
-    publish(spark, tableDir,
-      stageSnapshot(spark, tableDir, Seq(era), None, "create", Some(-1L)))
+    overwrite(spark, tableDir, df, transforms)
   }
 
   /** Full-content REPLACE with snapshot semantics — dbt's `table`
@@ -837,17 +835,21 @@ object VersionedHiddenTable {
     * overwrite step reports the NET row diff between runs — exactly the feed
     * an incremental downstream consumer folds forward instead of rebuilding.
     * Creates the table on first use (under `transforms`; an existing
-    * table's current spec wins, like [[appendOrCreate]]). Returns the
-    * published version. Unlike `op=replace` ([[compact]]), an overwrite is
-    * NOT content-preserving — the changelog always diffs it for real. */
+    * table's current spec wins, like [[appendOrCreate]]). `batchId` rides
+    * the publish rename as an `_batch-<id>` marker, as in [[append]].
+    * Returns the published version. Unlike `op=replace` ([[compact]]), an
+    * overwrite is NOT content-preserving — the changelog always diffs it
+    * for real. */
   def overwrite(spark: SparkSession, tableDir: String, df: DataFrame,
-      transforms: Seq[Transform] = Nil): Long = {
+      transforms: Seq[Transform] = Nil, batchId: Option[String] = None): Long = {
     val vs = mainVersions(spark, tableDir)
-    if (vs.isEmpty) return create(spark, tableDir, df, transforms)
-    val spec = currentSpec(spark, tableDir, snapshot(spark, tableDir, vs.max)._1)
+    val (spec, op, base) =
+      if (vs.isEmpty) (transforms, "create", -1L)
+      else (currentSpec(spark, tableDir, snapshot(spark, tableDir, vs.max)._1),
+        "overwrite", vs.max)
     val era = writeEra(spark, tableDir, df, spec)
     publish(spark, tableDir,
-      stageSnapshot(spark, tableDir, Seq(era), None, "overwrite", Some(vs.max)))
+      stageSnapshot(spark, tableDir, Seq(era), batchId, op, Some(base)))
   }
 
   /** Marker naming an era as SCHEMA-ONLY ([[evolveSchema]]): it carries the
@@ -1831,10 +1833,9 @@ object VersionedHiddenTable {
     * With `clusterBy`, the rewrite is Iceberg's rewrite-with-SORT-ORDER:
     * rows range-partition on the cluster keys into `ceil(bytes /
     * targetBytes)` write tasks (file count from the snapshot's ACTUAL
-    * bytes — the over-128MB sizing a table service does, the
-    * `VersionedTable.compactBySize` discipline), so inside every derived
-    * partition directory each task's file covers a narrow, pairwise-
-    * disjoint cluster-key span. That is exactly the layout
+    * bytes — the over-128MB sizing a table service does), so inside every
+    * derived partition directory each task's file covers a narrow,
+    * pairwise-disjoint cluster-key span. That is exactly the layout
     * [[StatsFileSkipping]] monetizes: after a clustered compaction,
     * key-range predicates skip most files at plan time — the maintenance
     * operation that turns an append-ordered table into a skippable one

@@ -280,19 +280,17 @@ object EventStream {
 
   // ---- streaming merge sink (the streaming face of i1) -----------------------
 
-  /** `foreachBatch` merge sink: each micro-batch upserts into a versioned
-    * parquet table via [[graft.pipeline.Incremental.upsert]] — the streaming
-    * face of the dbt incremental materialization. Each merge STAGES the new
-    * state and publishes it with the atomic WAP rename, tagged with the
-    * batch id ([[graft.pipeline.VersionedTable.writeAuditPublish]]): a
-    * direct `v=<n>` write would expose the half-written directory as the
-    * newest version to a concurrent [[latestVersion]] reader and leave a
-    * corrupt latest on crash. The riding `_batch-<id>` marker makes
-    * replays idempotent — a re-offered batch after a crash between publish
-    * and checkpoint commit is skipped, never re-merged. This is the manual
-    * core of what a transactional table format does with a commit log; at
-    * 100 TB the version list would live in a metastore, not a directory
-    * listing. */
+  /** `foreachBatch` merge sink: each micro-batch upserts into a
+    * [[graft.sources.VersionedHiddenTable]] via
+    * [[graft.pipeline.Incremental.upsert]] — the streaming face of the dbt
+    * incremental materialization. The folded state publishes as one
+    * `op=overwrite` snapshot ([[graft.sources.VersionedHiddenTable.overwrite]],
+    * one atomic manifest rename), so a concurrent [[readAuditedTable]] reader
+    * never observes a half-written state and a crash leaves the previous
+    * snapshot as the latest. The batch id rides that rename as an
+    * `_batch-<id>` marker, which makes replays idempotent: a batch re-offered
+    * after a crash between publish and checkpoint commit is skipped, never
+    * re-merged. */
   def startUpsertToParquet(events: DataFrame, tableDir: String,
       checkpoint: String, keys: Seq[String] = Seq("user_id")): StreamingQuery =
     events.withWatermark("ts", "10 minutes").writeStream
@@ -300,16 +298,15 @@ object EventStream {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
-        val vt = graft.pipeline.VersionedTable
-        if (!vt.publishedBatchIds(tableDir).contains(batchId.toString)) {
-          val versions = vt.versions(tableDir)
+        val vht = graft.sources.VersionedHiddenTable
+        if (!vht.publishedBatchIds(spark, tableDir).contains(batchId.toString)) {
           val base =
-            if (versions.isEmpty) batch.limit(0)
-            else spark.read.parquet(s"$tableDir/v=${versions.max}")
+            if (vht.versions(spark, tableDir).isEmpty) batch.limit(0)
+            else vht.read(spark, tableDir)
           val merged = graft.pipeline.Incremental
             .upsert(base, batch.toDF(), keys, "ts", "event_id")
-          vt.writeAuditPublish(spark, tableDir, merged,
-            batchId = Some(batchId.toString))(_ => Nil): Unit
+          vht.overwrite(spark, tableDir, merged,
+            batchId = Some(batchId.toString)): Unit
         }
       }
       .trigger(Trigger.AvailableNow())
@@ -317,10 +314,11 @@ object EventStream {
 
   /** `foreachBatch` SCD2 sink: each micro-batch folds into a versioned SCD2
     * history table via [[graft.pipeline.Incremental.scd2Apply]] — the
-    * streaming face of the dbt snapshot. Same versioned-parquet protocol as
-    * [[startUpsertToParquet]] (retry-idempotent, readers see complete
-    * versions); `IncrementalSpec` proves the per-batch fold converges to the
-    * batch rebuild, so the stream's history equals what a backfill computes.
+    * streaming face of the dbt snapshot. Same storage and replay protocol as
+    * [[startUpsertToParquet]] (one overwrite snapshot per batch, its batch
+    * marker riding the publish); `IncrementalSpec` proves the per-batch fold
+    * converges to the batch rebuild, so the stream's history equals what a
+    * backfill computes.
     */
   def startScd2ToParquet(events: DataFrame, tableDir: String,
       checkpoint: String, attr: String = "event_type"): StreamingQuery =
@@ -329,22 +327,19 @@ object EventStream {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
-        val vt = graft.pipeline.VersionedTable
-        // same staged-publish + batch-marker protocol as the upsert sink:
-        // no reader ever observes a partial version, replays skip
-        if (!vt.publishedBatchIds(tableDir).contains(batchId.toString)) {
-          val versions = vt.versions(tableDir)
+        val vht = graft.sources.VersionedHiddenTable
+        if (!vht.publishedBatchIds(spark, tableDir).contains(batchId.toString)) {
           val changes = batch.toDF().select(col("user_id"), col(attr), col("ts"),
             col("event_id"))
           val history =
-            if (versions.isEmpty)
+            if (vht.versions(spark, tableDir).isEmpty)
               graft.pipeline.Incremental.scd2Rebuild(changes.limit(0),
                 Seq("user_id"), attr, "ts", "event_id")
-            else spark.read.parquet(s"$tableDir/v=${versions.max}")
+            else vht.read(spark, tableDir)
           val next = graft.pipeline.Incremental
             .scd2Apply(history, changes, Seq("user_id"), attr, "ts", "event_id")
-          vt.writeAuditPublish(spark, tableDir, next,
-            batchId = Some(batchId.toString))(_ => Nil): Unit
+          vht.overwrite(spark, tableDir, next,
+            batchId = Some(batchId.toString)): Unit
         }
       }
       .trigger(Trigger.AvailableNow())
@@ -389,10 +384,15 @@ object EventStream {
             Seq(graft.sources.HiddenPartitioning.DayT("ts")),
             batchId = Some(batchId.toString))(audit) match {
             case Left(violations) =>
-              batch.write.mode("overwrite").parquet(s"$quarantineDir/batch=$batchId")
-              java.nio.file.Files.write(
-                java.nio.file.Paths.get(s"$quarantineDir/batch=$batchId/_violations.txt"),
-                violations.mkString("\n").getBytes("UTF-8")): Unit
+              val dir = s"$quarantineDir/batch=$batchId"
+              batch.write.mode("overwrite").parquet(dir)
+              // through the path's Hadoop FileSystem, like the parquet write:
+              // java.nio would resolve a `file:`/`hdfs:` URI as a local path
+              val report = new org.apache.hadoop.fs.Path(dir, "_violations.txt")
+              val out = report.getFileSystem(
+                batch.sparkSession.sessionState.newHadoopConf()).create(report, true)
+              try out.write(violations.mkString("\n").getBytes("UTF-8"))
+              finally out.close()
             case Right(_) => ()
           }
         }
@@ -448,19 +448,16 @@ object EventStream {
       .trigger(Trigger.AvailableNow())
       .start()
 
-  /** The audited append table: the latest snapshot's composite read (every
-    * published segment era, source columns only). An in-flight batch is an
-    * unreferenced era — invisible until its snapshot's atomic publish
-    * rename. Registers [[graft.sources.HiddenPartitioning]]'s pruning rule
-    * so a raw `ts` predicate prunes day directories in every era. */
+  /** The latest snapshot of any sink table above (audited append, upsert,
+    * SCD2, CDC merge): its composite read (every published era, source
+    * columns only). An in-flight batch is an unreferenced era — invisible
+    * until its snapshot's atomic publish rename. Registers
+    * [[graft.sources.HiddenPartitioning]]'s pruning rule so a raw `ts`
+    * predicate prunes day directories in every era. */
   def readAuditedTable(spark: SparkSession, tableDir: String): DataFrame = {
     graft.sources.HiddenPartitioning.register(spark)
     graft.sources.VersionedHiddenTable.read(spark, tableDir)
   }
-
-  /** Latest materialized version of a [[startUpsertToParquet]] table. */
-  def latestVersion(spark: SparkSession, tableDir: String): DataFrame =
-    graft.pipeline.VersionedTable.read(spark, tableDir)
 
   // ---- stateful sessionization (flatMapGroupsWithState) ---------------------
 

@@ -177,6 +177,32 @@ class IncrementalSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("schema evolution: mergeSchema unions file schemas; old files read nulls") {
+    // the lakehouse add-a-column path: a later batch lands with an extra
+    // column and a widened reader sees the union schema — old rows surface
+    // NULL for the new column, new rows carry it; column pruning still
+    // reaches the scan when the new column is not selected
+    val s = spark
+    import s.implicits._
+    val tbl = java.nio.file.Files.createTempDirectory("graft-se").toString
+    (1L to 50L).map(k => (k, s"p$k")).toDF("k", "v")
+      .write.parquet(s"$tbl/batch=0")
+    (51L to 80L).map(k => (k, s"p$k", k * 10)).toDF("k", "v", "score")
+      .write.parquet(s"$tbl/batch=1")
+
+    val merged = spark.read.option("mergeSchema", "true").parquet(tbl)
+    assert(merged.schema.fieldNames.sorted.toSeq === Seq("batch", "k", "score", "v"))
+    assert(merged.count() === 80)
+    assert(merged.filter(col("score").isNull).count() === 50,
+      "pre-evolution rows read NULL for the added column")
+    assert(merged.filter(col("score") === col("k") * 10).count() === 30,
+      "post-evolution rows carry their values")
+    // pruning: a projection without `score` must not read it from the scan
+    val p = merged.select(col("k"), col("v")).queryExecution.executedPlan.toString
+    val read = p.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
+    assert(!read.contains("score"), s"unselected evolved column must prune: $read")
+  }
+
   test("aggState folds converge to the one-shot aggregate in ANY arrival order") {
     // the i6 contract: mergeAggState is associative+commutative, so every
     // permutation of batch arrival produces the identical state

@@ -449,44 +449,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .contains("mart_sgp_factors"))
   }
 
-  test("versioned catalog: two pipeline runs leave two readable versions of a mart", graft.Slow) {
-    val vroot = Files.createTempDirectory("graft-vcat").toString
-    Pipeline.runVersioned(spark, root, vroot)
-    Pipeline.runVersioned(spark, root, vroot)
-    val martDir = s"$vroot/main/mart_preseason_overall_rankings_oc"
-    val vs = VersionedTable.versions(martDir)
-    assert(vs == Seq(0L, 1L), s"two runs must leave v=0 and v=1, got $vs")
-    val v0 = VersionedTable.read(spark, martDir, Some(0L))
-    val v1 = VersionedTable.read(spark, martDir, Some(1L))
-    assert(v0.count() > 0 && v0.count() === v1.count(),
-      "same inputs: both versions readable with identical row counts")
-    // the catalog name points at the NEWEST version
-    val cat = spark.table("main.mart_preseason_overall_rankings_oc")
-    assert(cat.count() === v1.count())
-    assert(cat.inputFiles.forall(_.contains("v=1")),
-      s"catalog table must read v=1, reads: ${cat.inputFiles.take(3).mkString(",")}")
-    // the storage contract reaches the parity marts: every published version
-    // carries a per-file stats manifest (it rode the publish rename), so a
-    // bare count folds to metadata and the SQL metadata face answers scan-free
-    assert(new java.io.File(s"$martDir/v=1/${graft.sources.FileStats.StatsFile}").isFile,
-      "published mart versions must carry their stats manifest")
-    graft.sources.HiddenPartitioning.register(spark)
-    val bare = v1.agg(org.apache.spark.sql.functions.count(
-      org.apache.spark.sql.functions.lit(1)).as("n"))
-    assert(bare.head().getLong(0) == v1.count())
-    assert(bare.queryExecution.optimizedPlan.collectFirst {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l
-    }.isDefined, "a mart count(*) must fold from the manifest:\n" +
-      bare.queryExecution.optimizedPlan.treeString)
-    graft.functions.GraftFunctions.register(spark)
-    assert(spark.sql(s"SELECT sum(rows) AS n FROM graft_files('$martDir/v=1')")
-      .head().getLong(0) == v1.count(),
-      "graft_files must answer over a mart version from its manifest")
-    // vacuum retires v=0; v=1 survives
-    assert(VersionedTable.vacuum(martDir, keep = 1) == Seq(0L))
-    assert(VersionedTable.versions(martDir) == Seq(1L))
-  }
-
   test("versioned-hidden marts: overwrite snapshots per run; run-over-run CDC folds forward exactly") {
     val VHT = graft.sources.VersionedHiddenTable
     val vroot = Files.createTempDirectory("graft-vhtmart").toString
@@ -515,6 +477,31 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .unionByName(ch.filter(col("_change_type") === "insert").drop(meta: _*))
     assert(key(folded) == key(v1),
       "fold(v0, changes) must reproduce the rebuilt mart exactly")
+    // the storage contract reaches the parity marts: every published
+    // snapshot's era carries its per-file stats manifest (written before the
+    // publish), so a bare count folds to metadata and the SQL metadata face
+    // answers scan-free
+    graft.functions.GraftFunctions.register(spark)
+    val eras = spark.sql(s"SELECT version, eras FROM graft_snapshots('$dir')")
+      .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+    assert(eras.keySet == Set(0L, 1L))
+    eras.values.flatten.foreach(e => assert(
+      new java.io.File(s"$dir/data/$e/${graft.sources.FileStats.StatsFile}").isFile,
+      s"published mart era $e must carry its stats manifest"))
+    graft.sources.HiddenPartitioning.register(spark)
+    val bare = VHT.read(spark, dir).agg(count(lit(1)).as("n"))
+    assert(bare.head().getLong(0) == v1.count())
+    assert(bare.queryExecution.optimizedPlan.collectFirst {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l
+    }.isDefined, "a mart count(*) must fold from the manifest:\n" +
+      bare.queryExecution.optimizedPlan.treeString)
+    assert(spark.sql(s"SELECT sum(rows) AS n FROM graft_files('$dir')")
+      .head().getLong(0) == v1.count(),
+      "graft_files must answer over the mart's era from its manifest")
+    // vacuum retires snapshot 0; snapshot 1 stays readable
+    assert(VHT.vacuum(spark, dir, keep = 1) == Seq(0L))
+    assert(VHT.versions(spark, dir) == Seq(1L))
+    assert(key(VHT.read(spark, dir, Some(1L))) == key(v1))
   }
 
   test("fused mode produces the same mart as materialized mode", graft.Slow) {

@@ -397,8 +397,8 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     // from storage.
     val tbl = java.nio.file.Files.createTempDirectory("graft-ivf").toString
     val cells = VectorOps.kmeansCellsForTest(spark, sf01, k = 8, iters = 3, initSeed = 1L)
-    cells.write.parquet(s"$tbl/v=0")
-    val reloaded = graft.pipeline.VersionedTable.read(spark, tbl)
+    graft.sources.VersionedHiddenTable.overwrite(spark, tbl, cells): Unit
+    val reloaded = graft.sources.VersionedHiddenTable.read(spark, tbl)
     val live = VectorOps.ivfProbeForTest(cells, nprobe = 2)
       .collect().map(_.toString).sorted
     val cold = VectorOps.ivfProbeForTest(reloaded, nprobe = 2)

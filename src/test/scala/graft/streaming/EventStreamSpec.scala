@@ -333,7 +333,7 @@ class EventStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
       input.toDF().withColumn("props", lit("{}")), tbl, cp)
     q1.processAllAvailable()
     q1.stop()
-    val got = EventStream.latestVersion(spark, tbl)
+    val got = EventStream.readAuditedTable(spark, tbl)
       .select("user_id", "event_id", "event_type")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     assert(got === Set((1L, 12L, "b"), (2L, 11L, "a"), (3L, 13L, "a")),
@@ -356,7 +356,8 @@ class EventStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val run1 = EventStream.startUpsertToParquet(
       input.toDF().withColumn("props", lit("{}")), tbl, cp)
     run1.processAllAvailable(); run1.stop()
-    val versionsAfterRun1 = graft.pipeline.VersionedTable.versions(tbl)
+    val vht = graft.sources.VersionedHiddenTable
+    val versionsAfterRun1 = vht.versions(sp, tbl)
 
     // data arriving while the query is DOWN
     input.addData(Seq(ev(22, 5, 1, "b", 3), ev(23, 6, 3, "a", 4)))
@@ -364,16 +365,18 @@ class EventStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
       input.toDF().withColumn("props", lit("{}")), tbl, cp)
     run2.processAllAvailable(); run2.stop()
 
-    val newVersions = graft.pipeline.VersionedTable.versions(tbl)
-      .diff(versionsAfterRun1)
+    val newVersions = vht.versions(sp, tbl).diff(versionsAfterRun1)
     assert(newVersions.nonEmpty, "the resumed run must commit new versions")
     assert(newVersions.forall(v => v > versionsAfterRun1.max),
       s"batch ids must CONTINUE from the checkpoint, got $newVersions after $versionsAfterRun1")
-    val got = EventStream.latestVersion(spark, tbl)
+    val got = EventStream.readAuditedTable(spark, tbl)
       .select("user_id", "event_id", "event_type")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     assert(got === Set((1L, 22L, "b"), (2L, 21L, "a"), (3L, 23L, "a")),
       s"state after restart must equal the never-stopped run, got $got")
+    // every snapshot carries its batch marker (it rode the overwrite's
+    // publish rename), so a re-offered batch is skipped, never re-merged
+    assert(vht.publishedBatchIds(sp, tbl).size == vht.versions(sp, tbl).size)
   }
 
   test("streaming SCD2 sink: folded history equals the batch rebuild (i3 twin)") {
@@ -398,7 +401,7 @@ class EventStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
           expr("unix_micros(valid_to)").as("t"))
         .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
           if (r.isNullAt(3)) -1L else r.getLong(3))).toSet
-    val streamed = canon(EventStream.latestVersion(spark, tbl))
+    val streamed = canon(EventStream.readAuditedTable(spark, tbl))
     val rebuilt = canon(graft.pipeline.Incremental.scd2Rebuild(
       log.toDF().withColumn("props", lit("{}"))
         .select(col("user_id"), col("event_type"), col("ts"), col("event_id")),
@@ -711,68 +714,73 @@ class EventStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("audited streaming sink: bad batches quarantine, good batches publish, replay idempotent") {
-    val sp = spark
-    import sp.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-wapstream").toString
-    val (in, tbl, quar) = (s"$root/in", s"$root/table", s"$root/quarantine")
-    def land(n: Int, typ: String, base: Long): Unit =
-      (1 to n).map(i => (base + i,
-          new Timestamp(1700000000000L + i * 1000L), i.toLong, typ, i * 1.0, "{}"))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("append").parquet(in)
-    land(10, "view", 0)    // good
-    land(5, "error", 100)  // audit-failing
-    land(7, "click", 200)  // good
-    def audit(df: org.apache.spark.sql.DataFrame): Seq[String] = {
-      val bad = df.filter(col("event_type") === "error").count()
-      if (bad > 0) Seq(s"$bad error-type rows") else Nil
+    // the quarantine dir as a bare path and as a `file:` URI: the sink must
+    // land the batch and its violation report under either form
+    Seq[String => String](identity, p => s"file:$p").foreach { quarantineArg =>
+      val sp = spark
+      import sp.implicits._
+      val root = java.nio.file.Files.createTempDirectory("graft-wapstream").toString
+      val (in, tbl, quar) = (s"$root/in", s"$root/table", s"$root/quarantine")
+      def land(n: Int, typ: String, base: Long): Unit =
+        (1 to n).map(i => (base + i,
+            new Timestamp(1700000000000L + i * 1000L), i.toLong, typ, i * 1.0, "{}"))
+          .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+          .coalesce(1).write.mode("append").parquet(in)
+      land(10, "view", 0)    // good
+      land(5, "error", 100)  // audit-failing
+      land(7, "click", 200)  // good
+      def audit(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+        val bad = df.filter(col("event_type") === "error").count()
+        if (bad > 0) Seq(s"$bad error-type rows") else Nil
+      }
+      def run(): Unit = {
+        val stream = sp.readStream.schema(EventStream.eventSchema)
+          .option("maxFilesPerTrigger", "1").parquet(in)
+        val q = EventStream.startAuditedAppend(stream, tbl, quarantineArg(quar),
+          s"$root/ckpt")(audit)
+        q.processAllAvailable(); q.stop()
+      }
+      run()
+      // the table = union of PUBLISHED segments: exactly the good rows, and
+      // no error row is ever visible to a reader
+      val table = EventStream.readAuditedTable(sp, tbl)
+      assert(table.count() === 17)
+      assert(table.filter(col("event_type") === "error").count() === 0,
+        "an unaudited/failed row must never be readable")
+      // the failed batch is quarantined WITH its violation report
+      val qDirs = new java.io.File(quar).listFiles().filter(_.isDirectory)
+      assert(qDirs.length == 1, s"exactly one quarantined batch: ${qDirs.toSeq}")
+      assert(sp.read.parquet(qDirs.head.getPath).count() === 5)
+      val report = java.nio.file.Files.readString(
+        java.nio.file.Paths.get(qDirs.head.getPath, "_violations.txt"))
+      assert(report == "5 error-type rows", s"violation report: $report")
+      // the batch-id marker lives INSIDE each published snapshot (it rode the
+      // publish rename) — marker and commit are atomic, so there is no crash
+      // window in which a published batch could be re-offered and re-published
+      val segs = new java.io.File(tbl).listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("v="))
+      assert(segs.nonEmpty && segs.forall(
+          _.listFiles().exists(_.getName.startsWith("_batch-"))),
+        "every published snapshot must carry its batch-id marker")
+      assert(!new java.io.File(s"$tbl/_published_batches").exists(),
+        "no separate post-publish marker dir — that design had a crash window")
+      // the sink's storage face is the versioned hidden-partitioned table:
+      // every published era is day-partitioned by ts, hidden from the reader
+      assert(EventStream.readAuditedTable(sp, tbl).columns.toSet ==
+        EventStream.eventSchema.fieldNames.toSet,
+        "derived partition columns must stay hidden from the stream's readers")
+      // replay idempotency: a restarted query with one NEW file appends only
+      // the new rows — published batches are never re-published
+      val vht = graft.sources.VersionedHiddenTable
+      val vsBefore = vht.versions(sp, tbl).size
+      land(3, "view", 300)
+      run()
+      assert(EventStream.readAuditedTable(sp, tbl).count() === 20)
+      assert(vht.versions(sp, tbl).size == vsBefore + 1,
+        "exactly one new snapshot for the one new file")
+      // pre-append snapshots still time-travel (the good rows before the late file)
+      assert(vht.read(sp, tbl, Some(vht.versions(sp, tbl).max - 1)).count() === 17)
     }
-    def run(): Unit = {
-      val stream = sp.readStream.schema(EventStream.eventSchema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      val q = EventStream.startAuditedAppend(stream, tbl, quar, s"$root/ckpt")(audit)
-      q.processAllAvailable(); q.stop()
-    }
-    run()
-    // the table = union of PUBLISHED segments: exactly the good rows, and
-    // no error row is ever visible to a reader
-    val table = EventStream.readAuditedTable(sp, tbl)
-    assert(table.count() === 17)
-    assert(table.filter(col("event_type") === "error").count() === 0,
-      "an unaudited/failed row must never be readable")
-    // the failed batch is quarantined WITH its violation report
-    val qDirs = new java.io.File(quar).listFiles().filter(_.isDirectory)
-    assert(qDirs.length == 1, s"exactly one quarantined batch: ${qDirs.toSeq}")
-    assert(sp.read.parquet(qDirs.head.getPath).count() === 5)
-    val report = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(qDirs.head.getPath, "_violations.txt"))
-    assert(report == "5 error-type rows", s"violation report: $report")
-    // the batch-id marker lives INSIDE each published snapshot (it rode the
-    // publish rename) — marker and commit are atomic, so there is no crash
-    // window in which a published batch could be re-offered and re-published
-    val segs = new java.io.File(tbl).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("v="))
-    assert(segs.nonEmpty && segs.forall(
-        _.listFiles().exists(_.getName.startsWith("_batch-"))),
-      "every published snapshot must carry its batch-id marker")
-    assert(!new java.io.File(s"$tbl/_published_batches").exists(),
-      "no separate post-publish marker dir — that design had a crash window")
-    // the sink's storage face is the versioned hidden-partitioned table:
-    // every published era is day-partitioned by ts, hidden from the reader
-    assert(EventStream.readAuditedTable(sp, tbl).columns.toSet ==
-      EventStream.eventSchema.fieldNames.toSet,
-      "derived partition columns must stay hidden from the stream's readers")
-    // replay idempotency: a restarted query with one NEW file appends only
-    // the new rows — published batches are never re-published
-    val vht = graft.sources.VersionedHiddenTable
-    val vsBefore = vht.versions(sp, tbl).size
-    land(3, "view", 300)
-    run()
-    assert(EventStream.readAuditedTable(sp, tbl).count() === 20)
-    assert(vht.versions(sp, tbl).size == vsBefore + 1,
-      "exactly one new snapshot for the one new file")
-    // pre-append snapshots still time-travel (the good rows before the late file)
-    assert(vht.read(sp, tbl, Some(vht.versions(sp, tbl).max - 1)).count() === 17)
   }
 
   test("CDC merge sink: per-batch MERGE snapshots fold to the last-writer-wins fixpoint") {
