@@ -87,15 +87,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val prevPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", "bench_out.json")
     val prev = loadPrev(prevPath)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the SQL catalog's read-path rewrite (s30) installs only at session
-      // build; everything else stays session-locally registered
-      .config("spark.sql.extensions", "graft.sources.GraftSqlExtensions")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     val wall0 = System.nanoTime()

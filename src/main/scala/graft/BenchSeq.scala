@@ -1,16 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
-/** Dev harness: time individual registry queries (`runMain graft.BenchSeq x
-  * <name> <name> ...`), with a watchdog that dumps all thread stacks if a
-  * query exceeds 90 s — for diagnosing intermittent local-mode stalls. */
+/** Dev harness: time individual registry queries one at a time
+  * (`runMain graft.BenchSeq x <name> <name> ...`; no names runs them all)
+  * with [[Bench]]'s noop sink, which evaluates every output column where
+  * `count()` would let Catalyst prune computed ones. A watchdog dumps the
+  * executor thread stacks if a query exceeds 90 s — for diagnosing
+  * intermittent local-mode stalls. */
 object BenchSeq {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.sources.GraftSqlExtensions")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Graft.session(32)
     spark.sparkContext.setLogLevel("ERROR")
     val names = args.drop(1).toSeq match {
       case Nil => SparkEntry.queries.keys.toSeq
@@ -35,7 +33,8 @@ object BenchSeq {
       })
       watchdog.setDaemon(true)
       watchdog.start()
-      try SparkEntry.queries(name)(spark, sfDir).count()
+      try SparkEntry.queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
       catch { case e: Throwable => println(s"[seq] $name FAILED ${e.getMessage.take(100)}") }
       done = true
       println(f"[seq] $name ${(System.nanoTime()-t0)/1e9}%.2f s")

@@ -1,15 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 object KernelBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Graft.session(32)
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
-    // temporarily drop the rewrite rule so the composed form stays composed
-    spark.experimental.extraOptimizations = Nil
+    // exclude the rewrite rule so the composed form stays composed
+    spark.conf.set("spark.sql.optimizer.excludedRules",
+      graft.functions.RewriteVectorFolds.ruleName)
     val emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
       .selectExpr("vec_id", "transform(embedding, x -> cast(x as double)) AS v")
     emb.createOrReplaceTempView("e")

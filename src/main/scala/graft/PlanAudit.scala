@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Prints `explain(formatted)` for selected registry queries and greps the
   * physical plans for the scale-critical properties (filter/column pushdown,
@@ -23,12 +22,7 @@ object PlanAudit {
       "a1_groupby_aggregates", "j1_inner_equijoin", "p6_like_between_in",
       "w1_rownumber_partitioned", "e1_ann_bruteforce_topk", "d3_dedup_minhash_lsh",
       "s4_latest_snapshot", "m2_frame_sample")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.filter(q => wanted.contains(q._1)).foreach { case (name, fn) =>
       val df = fn(spark, sfDir)

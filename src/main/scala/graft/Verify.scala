@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,16 +12,7 @@ object Verify {
       case _ => sys.error("usage: Verify <sfDir> <outDir> [namePrefix...]")
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the SQL catalog's read-path rewrite (s30) installs only at session
-      // build; everything else stays session-locally registered
-      .config("spark.sql.extensions", "graft.sources.GraftSqlExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
+import scala.reflect.{ClassTag, classTag}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -245,93 +244,44 @@ object RewriteVectorFolds extends org.apache.spark.sql.catalyst.rules.Rule[
   }
 }
 
-/** Registration: session-local (temp functions + optimizer rule) for library
-  * use, plus a `SparkSessionExtensions` hook for cluster-wide
-  * `spark.sql.extensions=graft.functions.GraftExtensions`. */
+/** The native functions [[graft.sources.GraftSqlExtensions]] injects at
+  * session build, each with its arity check and its `DESCRIBE FUNCTION`
+  * class. */
 object GraftFunctions {
+
+  type FunctionDescription = (FunctionIdentifier, ExpressionInfo, FunctionBuilder)
 
   /** Arity-checked builders: a wrong-argument-count call must surface as
     * the standard analysis error, not an IndexOutOfBoundsException from
     * `args(1)` during resolution. */
-  private def binary(name: String,
-      f: (Expression, Expression) => Expression): Seq[Expression] => Expression =
-    args => {
+  private def binary[E <: Expression: ClassTag](name: String,
+      f: (Expression, Expression) => E): FunctionDescription =
+    describe[E](name, args => {
       require(args.length == 2,
         s"$name requires exactly 2 arguments, got ${args.length}")
       f(args(0), args(1))
-    }
-  private def unary(name: String,
-      f: Expression => Expression): Seq[Expression] => Expression =
-    args => {
+    })
+  private def unary[E <: Expression: ClassTag](name: String,
+      f: Expression => E): FunctionDescription =
+    describe[E](name, args => {
       require(args.length == 1,
         s"$name requires exactly 1 argument, got ${args.length}")
       f(args(0))
-    }
+    })
+  private def describe[E: ClassTag](name: String,
+      builder: FunctionBuilder): FunctionDescription =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(classTag[E].runtimeClass.getName, name), builder)
 
-  private[functions] val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "graft_dot" -> binary("graft_dot", DotProduct),
-    "graft_cosine" -> binary("graft_cosine", CosineSimilarity),
-    "graft_qdot" -> binary("graft_qdot", QDotProduct),
-    "graft_ql2" -> binary("graft_ql2", QL2Distance),
-    "graft_qnorm2" -> unary("graft_qnorm2", QNorm2),
-    "graft_qmatmul" -> binary("graft_qmatmul", QMatVec),
-    "graft_minhash" -> binary("graft_minhash", MinHashSignature),
-    "graft_nfc" -> unary("graft_nfc", NfcNormalize),
-    "graft_nfkc" -> unary("graft_nfkc", NfkcNormalize),
-    "graft_strip_accents" -> unary("graft_strip_accents", StripAccents))
-
-  // guards the read-modify-write on the extraOptimizations var — the same
-  // hazard (lost or duplicated entry under concurrent registration) as
-  // NativePlans' strategy install
-  private val registerLock = new Object
-
-  /** Idempotent per-session registration; call before using the functions
-    * through `expr("graft_cosine(...)")`. Thread-safe. */
-  def register(spark: SparkSession): Unit = {
-    fns.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "scala_udf")
-    }
-    // table-valued functions: the SQL face of graft tables + metadata tables
-    graft.sources.GraftTableFunctions.fns.foreach { case (name, builder) =>
-      spark.sessionState.tableFunctionRegistry
-        .createOrReplaceTempFunction(name, builder, "scala_udf")
-    }
-    registerLock.synchronized {
-      if (!spark.experimental.extraOptimizations.contains(RewriteVectorFolds))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ RewriteVectorFolds
-    }
-  }
-}
-
-/** Cluster-wide face (`spark.sql.extensions=graft.functions.GraftExtensions`):
-  * MUST register the same function surface as [[GraftFunctions.register]] —
-  * a deployment configured only through extensions would otherwise lose the
-  * string-normalization kernels mid-query with "Undefined function". */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    val info = Map(
-      "graft_dot" -> classOf[DotProduct], "graft_cosine" -> classOf[CosineSimilarity],
-      "graft_qdot" -> classOf[QDotProduct], "graft_ql2" -> classOf[QL2Distance],
-      "graft_qnorm2" -> classOf[QNorm2], "graft_qmatmul" -> classOf[QMatVec],
-      "graft_minhash" -> classOf[MinHashSignature],
-      "graft_nfc" -> classOf[NfcNormalize], "graft_nfkc" -> classOf[NfkcNormalize],
-      "graft_strip_accents" -> classOf[StripAccents])
-    GraftFunctions.fns.foreach { case (name, builder) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo(info(name).getName, name), builder))
-    }
-    graft.sources.GraftTableFunctions.fns.foreach { case (name, builder) =>
-      ext.injectTableFunction((FunctionIdentifier(name),
-        new ExpressionInfo(graft.sources.GraftTableFunctions.getClass.getName, name),
-        builder))
-    }
-    ext.injectResolutionRule(session => graft.sources.GraftCatalogRewrite(session))
-    ext.injectOptimizerRule(_ => RewriteVectorFolds)
-    ext.injectOptimizerRule(_ => graft.sources.HiddenPartitionPruning)
-    ext.injectOptimizerRule(_ => graft.sources.StatsFileSkipping)
-    ext.injectOptimizerRule(_ => graft.sources.StatsCountPushdown)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    ext.injectPlannerStrategy(_ => graft.plans.BandJoinStrategy)
-  }
+  private[graft] val fns: Seq[FunctionDescription] = Seq(
+    binary("graft_dot", DotProduct),
+    binary("graft_cosine", CosineSimilarity),
+    binary("graft_qdot", QDotProduct),
+    binary("graft_ql2", QL2Distance),
+    unary("graft_qnorm2", QNorm2),
+    binary("graft_qmatmul", QMatVec),
+    binary("graft_minhash", MinHashSignature),
+    unary("graft_nfc", NfcNormalize),
+    unary("graft_nfkc", NfkcNormalize),
+    unary("graft_strip_accents", StripAccents))
 }

@@ -39,12 +39,7 @@ object GoldenGen {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session(4)
     spark.sparkContext.setLogLevel("ERROR")
     val d = digests(spark)
     gated.foreach(n => println(s"""    "$n" -> "${d(n)}","""))

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 
 /** End-to-end demo of the reference-parity DAG: generate reference-shaped
   * fixture feeds, run all 40 models (dbt-style materialization), print the
@@ -20,12 +19,7 @@ object PipelineDemo {
     }
     val warehouse = args.lift(1).getOrElse(
       Files.createTempDirectory("graft-warehouse").toString)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     spark.sparkContext.setLogLevel("WARN")
     val out = Pipeline.run(spark, dataRoot, materializeDir = Some(warehouse))
     println(s"[demo] built ${out.size} models into $warehouse")

@@ -1,15 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Attribute
 
 /** User-facing face of the native [[AsOfJoin]] operator. */
 object AsOf {
-
-  /** Idempotently install [[AsOfJoinStrategy]] into the session planner
-    * (thread-safe — [[NativePlans.install]]). */
-  def install(spark: SparkSession): Unit =
-    NativePlans.install(spark, AsOfJoinStrategy)
 
   /** As-of join `left` with `right`: for each left row, the payload of the
     * last right row of the same `key` with (ts, tie) at or before the left
@@ -31,7 +26,6 @@ object AsOf {
     require(payload.forall(c => !left.columns.contains(c)),
       "payload columns must not collide with left columns")
     val spark = left.sparkSession
-    install(spark)
     val lPlan = left.queryExecution.analyzed
     // self-join lineage split — see NativePlans.realiased
     val rPlan = NativePlans.realiased(right)

@@ -1,16 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.types.LongType
 
 /** User-facing face of the native [[BandJoin]] operator. */
 object Band {
-
-  /** Idempotently install [[BandJoinStrategy]] into the session planner
-    * (thread-safe — [[NativePlans.install]]). */
-  def install(spark: SparkSession): Unit =
-    NativePlans.install(spark, BandJoinStrategy)
 
   /** Band join `early` with `late`: every (early, late) pair sharing `key`
     * with 0 < late.ts - early.ts <= range. Output columns are early's then
@@ -28,7 +23,6 @@ object Band {
       "band join sides must not share column names besides the key; " +
         s"shared: ${early.columns.toSet.intersect(late.columns.toSet) - key}")
     val spark = early.sparkSession
-    install(spark)
     val lPlan = early.queryExecution.analyzed
     // self-join lineage split — see NativePlans.realiased
     val rPlan = NativePlans.realiased(late)

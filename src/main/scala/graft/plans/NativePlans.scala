@@ -1,30 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.SparkStrategy
 
 /** Shared builder scaffolding for the native operators ([[AsOf]]/[[Band]]) —
   * single-sourced so a fix to one face can never silently miss the other.
   */
 private[plans] object NativePlans {
-
-  /** JVM-wide guard for the read-modify-write on
-    * `spark.experimental.extraStrategies` (a plain `var`): two builder
-    * threads first-installing concurrently — exactly what the registry's
-    * concurrent-build contract allows for t4 (as-of) and t5 (band) — would
-    * otherwise lose one strategy ("No plan for AsOfJoin" at planning) or
-    * append a duplicate past the contains() check. */
-  private val installLock = new Object
-
-  /** Idempotently install `strategy` into the session planner. */
-  def install(spark: SparkSession, strategy: SparkStrategy): Unit =
-    installLock.synchronized {
-      if (!spark.experimental.extraStrategies.contains(strategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ strategy
-    }
 
   /** Resolve a column of an analyzed plan by name, or fail with the plan's
     * actual columns. */

@@ -882,7 +882,6 @@ object AggWindowOps extends QueryPack {
   private val st8 = GQuery(
     "st8_cdc_merge_sink",
     (s, dir) => {
-      graft.sources.HiddenPartitioning.register(s)
       val VHT = graft.sources.VersionedHiddenTable
       val vhtDir = Tables.scratchOnce(dir, "vht_cdc_sink",
           done = VHT.completedThrough(_, 3L)) { path =>
@@ -1811,7 +1810,6 @@ object AggWindowOps extends QueryPack {
   private val f18 = GQuery(
     "f18_unicode_normalization",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       // first accent DECOMPOSED (e + U+0301), second COMPOSED (U+00E9);
       // explicit escapes because the two forms render identically in source
       val planted = concat(substring(col("text"), 1, 12), lit(" caf"),

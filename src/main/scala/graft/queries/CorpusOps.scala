@@ -557,7 +557,7 @@ object CorpusOps extends QueryPack {
         .select(col("doc_id"), col("hv")).distinct()
       // (r13 note: splitting the two COUNT(DISTINCT)s — semi join for the
       // shingle count, pre-deduped fan-out for the doc count — measured
-      // SLOWER at sf0.1 (1.5 → 2.2 s, D19Profile): the DF cap keeps the
+      // SLOWER at sf0.1 (1.5 → 2.2 s, OPTIMIZATION_r13.md): the DF cap keeps the
       // fan-out small enough that one Expand beats two joins. Left as-is.)
       test.join(train, Seq("hv"))
         .groupBy(col("doc_id"))

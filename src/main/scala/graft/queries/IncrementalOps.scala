@@ -480,7 +480,6 @@ object IncrementalOps extends QueryPack {
   private val i12 = GQuery(
     "i12_overwrite_run_cdc",
     (s, dir) => {
-      graft.sources.HiddenPartitioning.register(s)
       val VHT = graft.sources.VersionedHiddenTable
       val vhtDir = Tables.scratchOnce(dir, "vht_events_runs",
           done = p => scala.util.Try(

@@ -1884,7 +1884,6 @@ object RelationalOps extends QueryPack {
   private val s15 = GQuery(
     "s15_hidden_partitioning",
     (s, dir) => {
-      graft.sources.HiddenPartitioning.register(s)
       val hpDir = Tables.scratchOnce(dir, "hp_events",
           done = graft.sources.HiddenPartitioning.exists) { path =>
         graft.sources.HiddenPartitioning.write(t(s, dir, "events"), path, Seq(
@@ -1926,7 +1925,6 @@ object RelationalOps extends QueryPack {
   private val s16 = GQuery(
     "s16_partition_spec_evolution",
     (s, dir) => {
-      graft.sources.HiddenPartitioning.register(s)
       val hpDir = Tables.scratchOnce(dir, "hp_events_evo",
           done = graft.sources.HiddenPartitioning.evolvedExists(_, 1)) { path =>
         val ev = t(s, dir, "events")
@@ -1976,7 +1974,6 @@ object RelationalOps extends QueryPack {
   private val s17 = GQuery(
     "s17_versioned_hidden",
     (s, dir) => {
-      graft.sources.HiddenPartitioning.register(s)
       val VHT = graft.sources.VersionedHiddenTable
       val vhtDir = Tables.scratchOnce(dir, "vht_events",
           done = VHT.completedThrough(_, 3L)) { path =>
@@ -2059,7 +2056,6 @@ object RelationalOps extends QueryPack {
   private val s18 = GQuery(
     "s18_stats_skipping_scan",
     (s, dir) => {
-      graft.sources.HiddenPartitioning.register(s)
       graft.sources.HiddenPartitioning.read(s, hpEventsStats(s, dir))
         .filter(col("ts") >= "2024-01-08" && col("ts") < "2024-01-10" &&
           col("user_id").between(10L, 40L))
@@ -2116,7 +2112,6 @@ object RelationalOps extends QueryPack {
   private val s20 = GQuery(
     "s20_metadata_count",
     (s, dir) => {
-      graft.sources.HiddenPartitioning.register(s)
       graft.sources.HiddenPartitioning.read(s, hpEventsStats(s, dir))
         .agg(count(lit(1)).as("n_rows"))
     },
@@ -2141,7 +2136,6 @@ object RelationalOps extends QueryPack {
   private val s21 = GQuery(
     "s21_row_level_delete",
     (s, dir) => {
-      graft.sources.HiddenPartitioning.register(s)
       val VHT = graft.sources.VersionedHiddenTable
       val delPred = col("ts") >= "2024-01-18" && col("ts") < "2024-01-25" &&
         col("user_id").between(10L, 40L)
@@ -2201,7 +2195,6 @@ object RelationalOps extends QueryPack {
   private val s22 = GQuery(
     "s22_merge_on_read_delete",
     (s, dir) => {
-      graft.sources.HiddenPartitioning.register(s)
       val VHT = graft.sources.VersionedHiddenTable
       val delPred = col("ts") >= "2024-01-10" && col("ts") < "2024-01-14" &&
         col("user_id").between(3L, 9L) // user ids 0-14 exist at every scale
@@ -2280,7 +2273,6 @@ object RelationalOps extends QueryPack {
   private val s23 = GQuery(
     "s23_row_level_update",
     (s, dir) => {
-      graft.sources.HiddenPartitioning.register(s)
       val VHT = graft.sources.VersionedHiddenTable
       val upPred = col("ts") >= "2024-01-18" && col("ts") < "2024-01-25" &&
         col("user_id").between(10L, 40L)
@@ -2338,7 +2330,6 @@ object RelationalOps extends QueryPack {
     * (op=replace: no logical change) → v4 copy-on-write UPDATE(user_id
     * 20–29: value+100) → v5 rollback to v2 (net reversal of the update). */
   private[queries] def vhtCdcEvents(s: SparkSession, dir: String): String = {
-    graft.sources.HiddenPartitioning.register(s)
     val VHT = graft.sources.VersionedHiddenTable
     Tables.scratchOnce(dir, "vht_events_cdc_u10_14",
         done = VHT.completedThrough(_, 5L)) { path =>
@@ -2429,7 +2420,6 @@ object RelationalOps extends QueryPack {
   private val s25 = GQuery(
     "s25_storage_merge",
     (s, dir) => {
-      graft.sources.HiddenPartitioning.register(s)
       val VHT = graft.sources.VersionedHiddenTable
       val vhtDir = Tables.scratchOnce(dir, "vht_events_merge",
           done = VHT.completedThrough(_, 2L)) { path =>
@@ -2504,7 +2494,6 @@ object RelationalOps extends QueryPack {
   private val s26 = GQuery(
     "s26_tag_pinned_read",
     (s, dir) => {
-      graft.sources.HiddenPartitioning.register(s)
       val VHT = graft.sources.VersionedHiddenTable
       val delPred = col("ts") >= "2024-01-20" && col("user_id").between(0L, 7L)
       val vhtDir = Tables.scratchOnce(dir, "vht_events_tagged",
@@ -2565,7 +2554,6 @@ object RelationalOps extends QueryPack {
   private val s27 = GQuery(
     "s27_schema_evolution_storage",
     (s, dir) => {
-      graft.sources.HiddenPartitioning.register(s)
       val VHT = graft.sources.VersionedHiddenTable
       val vhtDir = Tables.scratchOnce(dir, "vht_events_schema_evo",
           done = VHT.completedThrough(_, 1L)) { path =>
@@ -2622,7 +2610,6 @@ object RelationalOps extends QueryPack {
   private val s28 = GQuery(
     "s28_table_maintenance",
     (s, dir) => {
-      graft.sources.HiddenPartitioning.register(s)
       val VHT = graft.sources.VersionedHiddenTable
       val vhtDir = Tables.scratchOnce(dir, "vht_events_svc",
           done = p => scala.util.Try(
@@ -2750,7 +2737,6 @@ object RelationalOps extends QueryPack {
   private val s29 = GQuery(
     "s29_occ_concurrent_merge",
     (s, dir) => {
-      graft.sources.HiddenPartitioning.register(s)
       val VHT = graft.sources.VersionedHiddenTable
       val vhtDir = Tables.scratchOnce(dir, "vht_events_occ",
           done = p => scala.util.Try(
@@ -2801,7 +2787,6 @@ object RelationalOps extends QueryPack {
   private val s30 = GQuery(
     "s30_sql_catalog_dml",
     (s, dir) => {
-      graft.sources.HiddenPartitioning.register(s)
       val VHT = graft.sources.VersionedHiddenTable
       val whDir = Tables.scratchOnce(dir, "vht_events_sqlcat",
           done = p => scala.util.Try(
@@ -2869,7 +2854,6 @@ object RelationalOps extends QueryPack {
   private val s31 = GQuery(
     "s31_positional_deletes",
     (s, dir) => {
-      graft.sources.HiddenPartitioning.register(s)
       val VHT = graft.sources.VersionedHiddenTable
       val vhtDir = Tables.scratchOnce(dir, "vht_events_posdel",
           done = p => scala.util.Try(
@@ -2948,7 +2932,6 @@ object RelationalOps extends QueryPack {
   private val s32 = GQuery(
     "s32_branch_fast_forward",
     (s, dir) => {
-      graft.sources.HiddenPartitioning.register(s)
       val VHT = graft.sources.VersionedHiddenTable
       val vhtDir = Tables.scratchOnce(dir, "vht_events_branches",
           done = p => scala.util.Try(
@@ -3037,7 +3020,6 @@ object RelationalOps extends QueryPack {
   private val s33 = GQuery(
     "s33_sql_ctas_partitioned",
     (s, dir) => {
-      graft.sources.HiddenPartitioning.register(s)
       val VHT = graft.sources.VersionedHiddenTable
       val whDir = Tables.scratchOnce(dir, "vht_events_ctas",
           done = p => scala.util.Try(
@@ -3127,7 +3109,6 @@ object RelationalOps extends QueryPack {
   private val s34 = GQuery(
     "s34_sql_update_merge",
     (s, dir) => {
-      graft.sources.HiddenPartitioning.register(s)
       val VHT = graft.sources.VersionedHiddenTable
       val whDir = Tables.scratchOnce(dir, "vht_events_sqldml",
           done = p => scala.util.Try(
@@ -3219,7 +3200,6 @@ object RelationalOps extends QueryPack {
   private val s35 = GQuery(
     "s35_sql_add_columns",
     (s, dir) => {
-      graft.sources.HiddenPartitioning.register(s)
       val VHT = graft.sources.VersionedHiddenTable
       val whDir = Tables.scratchOnce(dir, "vht_events_sqladdcol",
           done = p => scala.util.Try(
@@ -3278,7 +3258,6 @@ object RelationalOps extends QueryPack {
   private val s36 = GQuery(
     "s36_sql_branch_face",
     (s, dir) => {
-      graft.sources.HiddenPartitioning.register(s)
       val VHT = graft.sources.VersionedHiddenTable
       val whDir = Tables.scratchOnce(dir, "vht_events_sqlbranch",
           done = p => scala.util.Try(
@@ -3343,7 +3322,6 @@ object RelationalOps extends QueryPack {
   private val s37 = GQuery(
     "s37_sql_call_maintenance",
     (s, dir) => {
-      graft.sources.HiddenPartitioning.register(s)
       val VHT = graft.sources.VersionedHiddenTable
       val whDir = Tables.scratchOnce(dir, "vht_events_sqlproc",
           done = p => scala.util.Try(

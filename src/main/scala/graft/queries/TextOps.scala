@@ -303,7 +303,6 @@ object TextOps extends QueryPack {
     * already accepts, ~1e-9 at fixture vocabulary sizes). */
   private[queries] def minhashPairs(docs: DataFrame, threshold: Double,
       dfCap: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession) // graft_minhash
     // capped postings feed two consumers (heavy set, per-doc arrays) —
     // cache the one narrow exploded scan
     val ex0 = hashedShingles(docs).cache()

@@ -28,7 +28,6 @@ object VectorOps extends QueryPack {
   private def cosine(a: String, b: String): Column = expr(s"graft_cosine($a, $b)")
 
   private def embDouble(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     t(s, dir, "embeddings").select(col("vec_id"), col("label"),
       asDouble(col("embedding")).as("v"))
   }

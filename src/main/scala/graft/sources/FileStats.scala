@@ -830,10 +830,9 @@ final case class StatsPrunedFileIndex(
 
 /** Plan-time file skipping from the `_file_stats.json` manifest — the
   * scan-planning half of [[FileStats]] (see that doc for the scale argument
-  * and the soundness stance). Registered session-locally via
-  * [[HiddenPartitioning.register]] or cluster-wide via `GraftExtensions`,
-  * in the same user-provided optimizer batch as [[HiddenPartitionPruning]]:
-  * that rule turns source-column predicates into partition-directory
+  * and the soundness stance). [[GraftSqlExtensions]] injects it into the
+  * same pre-CBO optimizer batch as [[HiddenPartitionPruning]], right after
+  * it: that rule turns source-column predicates into partition-directory
   * pruning; this one removes individual FILES inside the surviving
   * directories whose footer-harvested min/max/null-count prove no matching
   * row exists. Files the manifest does not list (appended after the last
@@ -841,7 +840,7 @@ final case class StatsPrunedFileIndex(
   * files — the filter still runs over every surviving row, so skipping is
   * an optimization, never a semantics change.
   *
-  * The batch runs to fixpoint, so the rewrite must converge: a pass that
+  * The rewrite is idempotent: a pass that
   * keeps every currently-listed file returns the plan unchanged, a pass
   * that proves the scan empty folds the whole Filter to an empty
   * [[LocalRelation]], and a pruning pass strictly shrinks the file set. */

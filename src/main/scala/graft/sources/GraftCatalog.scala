@@ -37,9 +37,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * which a bare `CREATE TABLE` column list carries here).
   *
   * READ path: the catalog hands the analyzer a [[GraftSqlTable]]; the
-  * companion resolution rule [[GraftCatalogRewrite]] (injected by
-  * `graft.sources.GraftSqlExtensions`, or session-locally via
-  * [[GraftCatalog.register]]) splices the library's own read plan in at
+  * companion resolution rule [[GraftCatalogRewrite]] (injected at session
+  * build by [[GraftSqlExtensions]]) splices the library's own read plan in at
   * ANALYSIS time — the same early-splice discipline as the TVFs — so the
   * whole optimizer pipeline (filter pushdown, [[HiddenPartitionPruning]],
   * [[StatsFileSkipping]]) treats a catalog read exactly like a Scala-API
@@ -168,7 +167,6 @@ class GraftCatalog extends TableCatalog
       throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(ident.toString)
     val transforms = GraftCatalog.toHiddenTransforms(partitions)
     val dir = tableDir(ident)
-    HiddenPartitioning.register(spark)
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema).repartition(1)
     VersionedHiddenTable.create(spark, dir, empty, Nil): Unit
@@ -265,12 +263,11 @@ object GraftCatalog {
     }
 
   /** Session-local enablement: point `spark.sql.catalog.<name>` at this
-    * class and register the read-path resolution rewrite. The catalog conf
-    * is read lazily at the name's first SQL reference, so runtime
-    * registration works on an existing session — but the RESOLUTION rule
-    * only installs at session build, so `register` must run on a session
-    * built with `graft.sources.GraftSqlExtensions` (Verify/Bench sessions
-    * are). Returns the catalog name for convenience. */
+    * class. The catalog conf is read lazily at the name's first SQL
+    * reference, so runtime registration works on an existing session; the
+    * read-path resolution rewrite comes with every [[graft.Graft.session]]
+    * (its [[GraftSqlExtensions]]). Returns the catalog name for
+    * convenience. */
   def register(spark: SparkSession, name: String, warehouse: String): String = {
     spark.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$name.warehouse", warehouse)
@@ -327,7 +324,6 @@ class GraftSqlTable(val dir: String, ident: String, val pinned: Option[Long],
     * branch read always sees the branch's latest commit. */
   private[graft] def readPlan(spark: SparkSession)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-    HiddenPartitioning.register(spark)
     VersionedHiddenTable.read(spark, dir, readVersion).queryExecution.analyzed
   }
 
@@ -345,8 +341,8 @@ class GraftSqlTable(val dir: String, ident: String, val pinned: Option[Long],
             throw new IllegalStateException(
               s"graft catalog read of $ident reached physical execution — " +
                 "the GraftCatalogRewrite resolution rule is not installed; " +
-                "build the session with " +
-                "spark.sql.extensions=graft.sources.GraftSqlExtensions")
+                "build the session with graft.Graft.session (or " +
+                "spark.sql.extensions=graft.sources.GraftSqlExtensions)")
         }
     }
 
@@ -368,7 +364,6 @@ class GraftSqlTable(val dir: String, ident: String, val pinned: Option[Long],
             override def insert(data: org.apache.spark.sql.DataFrame,
                 overwriteMode: Boolean): Unit = {
               val s = data.sparkSession
-              HiddenPartitioning.register(s)
               branch match {
                 case Some(b) =>
                   // branch writes are WAP appends on the branch lineage —

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, EqualTo, Expression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -203,14 +203,4 @@ case class GraftCatalogRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     GraftMergeCommand(t.dir, t.name(), splice(m.sourceTable), keys,
       matched, insert)
   }
-}
-
-/** Minimal extensions face for the SQL catalog only — sessions that want
-  * the catalog but run the rest of the engine through the session-local
-  * `register(...)` calls (the Verify/Bench mains) enable THIS class, not
-  * the full [[graft.functions.GraftExtensions]], so the optimizer-rule
-  * registration story stays single-sourced. */
-class GraftSqlExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    ext.injectResolutionRule(session => GraftCatalogRewrite(session))
 }

@@ -143,7 +143,6 @@ case class GraftMergeCommand(dir: String, ident: String,
   extends LeafRunnableCommand {
 
   override def run(spark: SparkSession): Seq[Row] = {
-    HiddenPartitioning.register(spark)
     val src = org.apache.spark.sql.graftbridge.GraftSqlBridge.ofRows(spark, source)
     // matched(row): key tuple ∈ current target keys — expressed as a
     // multi-column IN-subquery over the distinct key projection, which the

@@ -22,9 +22,8 @@ import org.apache.spark.sql.types.{DateType, StringType}
   * derived columns; the spec is recorded in `_partition_spec.json` at the
   * table root (written LAST — it is the commit marker). Readers NEVER see
   * the derived columns ([[read]] hides them) and never mention them in
-  * predicates: [[HiddenPartitionPruning]] — an optimizer rule registered
-  * session-local ([[register]]) or cluster-wide (`GraftExtensions`) —
-  * recognizes filters on the SOURCE columns of a spec'd table and injects
+  * predicates: [[HiddenPartitionPruning]] — an optimizer rule every
+  * session gets from [[GraftSqlExtensions]] — recognizes filters on the SOURCE columns of a spec'd table and injects
   * the implied partition predicates as folded literals, which
   * `FileSourceStrategy` then splits into the scan's `PartitionFilters`.
   * That is the Iceberg contract: partition layout is a physical detail the
@@ -760,25 +759,11 @@ object HiddenPartitioning {
       .groupBy(col("era"), col("partition"))
       .agg(count(lit(1)).as("n_files"), sum(col("rows")).as("n_rows"))
   }
-
-  private val registerLock = new Object
-
-  /** Idempotent session-local registration of the pruning rule and its
-    * file-granular companion [[StatsFileSkipping]] (the cluster-wide face is
-    * `GraftExtensions`). Thread-safe — same guarded read-modify-write as
-    * `GraftFunctions.register`. */
-  def register(spark: SparkSession): Unit = registerLock.synchronized {
-    Seq(HiddenPartitionPruning, StatsFileSkipping, StatsCountPushdown).foreach { rule =>
-      if (!spark.experimental.extraOptimizations.contains(rule))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ rule
-    }
-  }
 }
 
-/** The predicate-derivation rule. Runs after the main optimizer fixpoint
-  * (user-provided batch), so filters already sit directly on the relations
-  * and comparison literals are constant-folded; the derived predicates are
+/** The predicate-derivation rule. Runs once, after the main optimizer
+  * fixpoint (the pre-CBO batch [[GraftSqlExtensions]] injects it into),
+  * so filters already sit directly on the relations and comparison literals are constant-folded; the derived predicates are
   * emitted as pre-evaluated literals, which `FileSourceStrategy` splits
   * into the scan's partition filters at planning. Idempotent: a derived
   * conjunct that is already present (semantically) is not re-added. */

@@ -36,8 +36,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   * its own analysis — registering a view once and serving stale metadata
   * forever is exactly what this avoids.
   *
-  * Registered session-locally by [[graft.functions.GraftFunctions.register]]
-  * and cluster-wide by `graft.functions.GraftExtensions`.
+  * Injected at session build by [[GraftSqlExtensions]].
   */
 object GraftTableFunctions {
 

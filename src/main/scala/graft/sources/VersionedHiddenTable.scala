@@ -884,7 +884,6 @@ object VersionedHiddenTable {
   def evolveSchema(spark: SparkSession, tableDir: String,
       adds: Seq[org.apache.spark.sql.types.StructField]): Long = {
     require(adds.nonEmpty, "ADD COLUMNS needs at least one column")
-    HiddenPartitioning.register(spark)
     val vs = mainVersions(spark, tableDir)
     require(vs.nonEmpty, s"no snapshots under $tableDir")
     val (eras, dels) = snapshot(spark, tableDir, vs.max)
@@ -1033,7 +1032,6 @@ object VersionedHiddenTable {
   def delete(spark: SparkSession, tableDir: String,
       predicate: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
-    HiddenPartitioning.register(spark) // the probe's pruning license
     val vs = mainVersions(spark, tableDir)
     require(vs.nonEmpty, s"no snapshots under $tableDir")
     val (eras, dels) = snapshot(spark, tableDir, vs.max)
@@ -1111,7 +1109,6 @@ object VersionedHiddenTable {
     * rewrite of a covered era refuses and asks for a re-run. */
   def deleteMergeOnRead(spark: SparkSession, tableDir: String,
       predicate: org.apache.spark.sql.Column): Long = {
-    HiddenPartitioning.register(spark)
     val vs = mainVersions(spark, tableDir)
     require(vs.nonEmpty, s"no snapshots under $tableDir")
     val (eras, dels) = snapshot(spark, tableDir, vs.max)
@@ -1147,7 +1144,6 @@ object VersionedHiddenTable {
       assignments: Map[String, org.apache.spark.sql.Column]): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     require(assignments.nonEmpty, "UPDATE needs at least one SET assignment")
-    HiddenPartitioning.register(spark) // the probe's pruning license
     val vs = mainVersions(spark, tableDir)
     require(vs.nonEmpty, s"no snapshots under $tableDir")
     val (eras, dels) = snapshot(spark, tableDir, vs.max)
@@ -1200,7 +1196,6 @@ object VersionedHiddenTable {
       assignments: Map[String, org.apache.spark.sql.Column]): Long = {
     import org.apache.spark.sql.functions.col
     require(assignments.nonEmpty, "UPDATE needs at least one SET assignment")
-    HiddenPartitioning.register(spark)
     val vs = mainVersions(spark, tableDir)
     require(vs.nonEmpty, s"no snapshots under $tableDir")
     val (eras, dels) = snapshot(spark, tableDir, vs.max)
@@ -1245,7 +1240,6 @@ object VersionedHiddenTable {
   def deletePositional(spark: SparkSession, tableDir: String,
       predicate: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions.col
-    HiddenPartitioning.register(spark)
     val vs = mainVersions(spark, tableDir)
     require(vs.nonEmpty, s"no snapshots under $tableDir")
     val (eras, dels) = snapshot(spark, tableDir, vs.max)
@@ -1274,7 +1268,6 @@ object VersionedHiddenTable {
       assignments: Map[String, org.apache.spark.sql.Column]): Long = {
     import org.apache.spark.sql.functions.col
     require(assignments.nonEmpty, "UPDATE needs at least one SET assignment")
-    HiddenPartitioning.register(spark)
     val vs = mainVersions(spark, tableDir)
     require(vs.nonEmpty, s"no snapshots under $tableDir")
     val (eras, dels) = snapshot(spark, tableDir, vs.max)
@@ -1340,7 +1333,6 @@ object VersionedHiddenTable {
       batchId: Option[String] = None): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, not}
     require(keys.nonEmpty, "MERGE needs at least one key column")
-    HiddenPartitioning.register(spark)
     val vs = mainVersions(spark, tableDir)
     require(vs.nonEmpty, s"no snapshots under $tableDir")
     val (eras, dels) = snapshot(spark, tableDir, vs.max)

@@ -451,13 +451,11 @@ object EventStream {
   /** The latest snapshot of any sink table above (audited append, upsert,
     * SCD2, CDC merge): its composite read (every published era, source
     * columns only). An in-flight batch is an unreferenced era — invisible
-    * until its snapshot's atomic publish rename. Registers
-    * [[graft.sources.HiddenPartitioning]]'s pruning rule so a raw `ts`
-    * predicate prunes day directories in every era. */
-  def readAuditedTable(spark: SparkSession, tableDir: String): DataFrame = {
-    graft.sources.HiddenPartitioning.register(spark)
+    * until its snapshot's atomic publish rename. A raw `ts` predicate
+    * prunes day directories in every era
+    * ([[graft.sources.HiddenPartitionPruning]]). */
+  def readAuditedTable(spark: SparkSession, tableDir: String): DataFrame =
     graft.sources.VersionedHiddenTable.read(spark, tableDir)
-  }
 
   // ---- stateful sessionization (flatMapGroupsWithState) ---------------------
 

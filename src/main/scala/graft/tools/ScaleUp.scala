@@ -113,10 +113,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val copies = args.lift(1).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session(32)
     spark.sparkContext.setLogLevel("WARN")
     val out = ensure(spark, src, copies)
     Seq("documents", "embeddings", "events").foreach { t =>

@@ -17,12 +17,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val root = Files.createTempDirectory("graft-fixtures").toString
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Graft.session(4)
     spark.sparkContext.setLogLevel("ERROR")
     FixtureGen.generate(root)
     // materialized (dbt-style) mode: one pass builds all 40 models to parquet,
@@ -347,6 +342,19 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[IllegalArgumentException](runner.selectNodes(Seq("mart_sgp_factorz")))
   }
 
+  test("a bare count over a ParquetDir mart folds to its stats manifest") {
+    // every ParquetDir model carries per-file stats (Model's write path);
+    // the session's own wiring, with nothing registered per call, folds
+    // an unfiltered count to metadata
+    val mart = "mart_preseason_overall_rankings_oc"
+    val bare = spark.read.parquet(s"$matDir/$mart").agg(count(lit(1)).as("n"))
+    assert(bare.head().getLong(0) == out(mart).collect().length)
+    assert(bare.queryExecution.optimizedPlan.collectFirst {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l
+    }.isDefined, "a ParquetDir mart count(*) must fold from the manifest:\n" +
+      bare.queryExecution.optimizedPlan.treeString)
+  }
+
   test("j13 wiring: stats-advised read-backs broadcast the mart's dimension joins") {
     // (a) the DagRunner applied the advice: a dimension-sized materialized
     // model's read-back carries the broadcast hint in its own plan
@@ -481,14 +489,12 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // snapshot's era carries its per-file stats manifest (written before the
     // publish), so a bare count folds to metadata and the SQL metadata face
     // answers scan-free
-    graft.functions.GraftFunctions.register(spark)
     val eras = spark.sql(s"SELECT version, eras FROM graft_snapshots('$dir')")
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(eras.keySet == Set(0L, 1L))
     eras.values.flatten.foreach(e => assert(
       new java.io.File(s"$dir/data/$e/${graft.sources.FileStats.StatsFile}").isFile,
       s"published mart era $e must carry its stats manifest"))
-    graft.sources.HiddenPartitioning.register(spark)
     val bare = VHT.read(spark, dir).agg(count(lit(1)).as("n"))
     assert(bare.head().getLong(0) == v1.count())
     assert(bare.queryExecution.optimizedPlan.collectFirst {

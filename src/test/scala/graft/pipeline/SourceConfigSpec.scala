@@ -14,10 +14,7 @@ class SourceConfigSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Graft.session(2)
     spark.sparkContext.setLogLevel("ERROR")
   }
 

@@ -23,10 +23,7 @@ class BandJoinNativeSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Graft.session(4)
     spark.sparkContext.setLogLevel("ERROR")
   }
 

@@ -19,12 +19,7 @@ class ConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sfDir = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions", "graft.sources.GraftSqlExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Graft.session(8)
     spark.sparkContext.setLogLevel("ERROR")
   }
 

@@ -16,11 +16,7 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sfDir = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.sources.GraftSqlExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Graft.session(4)
     spark.sparkContext.setLogLevel("ERROR")
   }
 

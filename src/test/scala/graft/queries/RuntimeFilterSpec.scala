@@ -20,17 +20,14 @@ class RuntimeFilterSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sfDir = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      // force the join to stay a shuffle join: bloom filters are only
-      // injected when the keys aren't already co-shipped by a broadcast
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "10MB")
-      .config("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "1B")
-      .getOrCreate()
+    spark = graft.Graft.session(4)
+    // force the join to stay a shuffle join: bloom filters are only
+    // injected when the keys aren't already co-shipped by a broadcast
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "10MB")
+    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "1B")
     spark.sparkContext.setLogLevel("ERROR")
   }
 

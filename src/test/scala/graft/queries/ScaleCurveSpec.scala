@@ -29,12 +29,7 @@ class ScaleCurveSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.sources.GraftSqlExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Graft.session(32)
     spark.sparkContext.setLogLevel("ERROR")
   }
 
@@ -168,7 +163,6 @@ class ScaleCurveSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.functions._
     val sf01 = "/root/testdata/sf0.1"
     val sf1 = graft.tools.ScaleUp.ensure(spark, sf01)
-    graft.sources.HiddenPartitioning.register(spark)
     val VHT = graft.sources.VersionedHiddenTable
 
     def leg(tag: String, ev: org.apache.spark.sql.DataFrame): (Double, Double) = {
@@ -224,7 +218,6 @@ class ScaleCurveSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     val sf01 = "/root/testdata/sf0.1"
     val sf1 = graft.tools.ScaleUp.ensure(spark, sf01)
-    graft.sources.HiddenPartitioning.register(spark)
     val VHT = graft.sources.VersionedHiddenTable
 
     def flat(p: SparkPlan): Seq[SparkPlan] = {
@@ -305,7 +298,6 @@ class ScaleCurveSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.functions._
     val sf01 = "/root/testdata/sf0.1"
     val sf1 = graft.tools.ScaleUp.ensure(spark, sf01)
-    graft.sources.HiddenPartitioning.register(spark)
 
     def leg(tag: String, ev: org.apache.spark.sql.DataFrame): (Double, Long, Long) = {
       val path = java.nio.file.Files.createTempDirectory(s"graft-scale-skip-$tag").toString

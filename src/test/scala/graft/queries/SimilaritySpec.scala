@@ -19,12 +19,8 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sf01 = "/root/testdata/sf0.01"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Graft.session(4)
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()

@@ -17,18 +17,16 @@ class SkewJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      // keep the join a sort-merge join so skew splitting applies
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "4KB")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2KB")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1KB")
-      .getOrCreate()
+    spark = graft.Graft.session(4)
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    // keep the join a sort-merge join so skew splitting applies
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "4KB")
+    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2KB")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1KB")
     spark.sparkContext.setLogLevel("ERROR")
   }
 

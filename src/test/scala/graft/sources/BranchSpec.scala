@@ -15,13 +15,8 @@ class BranchSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val dir = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Graft.session(4)
     spark.sparkContext.setLogLevel("ERROR")
-    HiddenPartitioning.register(spark)
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
@@ -129,7 +124,6 @@ class BranchSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("graft_branches TVF: the SQL face of the branch refs") {
-    graft.functions.GraftFunctions.register(spark)
     val t = tmp("tvf")
     val ev = events
     VersionedHiddenTable.create(spark, t, ev.limit(100),

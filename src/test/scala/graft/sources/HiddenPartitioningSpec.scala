@@ -20,13 +20,8 @@ class HiddenPartitioningSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val dir = "/root/testdata/sf0.01"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Graft.session(4)
     spark.sparkContext.setLogLevel("ERROR")
-    HiddenPartitioning.register(spark)
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
@@ -302,10 +297,10 @@ class HiddenPartitioningSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // a session nine hours AHEAD of the writer: Tokyo's calendar day of the
     // cut instant (20:00Z) is already Jan 10 — a session-tz derivation would
-    // prune the Jan 9 partition and lose row 1 (21:00Z qualifies)
+    // prune the Jan 9 partition and lose row 1 (21:00Z qualifies). The
+    // derived session registers nothing: it inherits the extension's rules
     val tokyo = spark.newSession()
     tokyo.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
-    HiddenPartitioning.register(tokyo)
     val cut = new java.sql.Timestamp(1704830400000L) // 2024-01-09T20:00Z
     val q = HiddenPartitioning.read(tokyo, path).filter(col("ts") >= lit(cut))
     val got = q.select("k").collect().map(_.getLong(0)).sorted.toSeq
@@ -321,7 +316,6 @@ class HiddenPartitioningSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("a wrapping (non-ANSI) literal cast derives nothing instead of narrowing") {
     val noAnsi = spark.newSession()
     noAnsi.conf.set("spark.sql.ansi.enabled", "false")
-    HiddenPartitioning.register(noAnsi)
     import noAnsi.implicits._
     val df = (1 to 400).map(i => (i.toLong, s"v$i")).toDF("n", "v")
     val path = java.nio.file.Files.createTempDirectory("graft-hp-wrap").toString

@@ -17,16 +17,12 @@ class JoinAdvisorSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the advisor under test IS the broadcast decision — turn off the
-      // engine's own size-based conversions so the landed strategy is the
-      // advice, not the planner second-guessing it
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Graft.session(4)
+    // the advisor under test IS the broadcast decision — turn off the
+    // engine's own size-based conversions so the landed strategy is the
+    // advice, not the planner second-guessing it
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     spark.sparkContext.setLogLevel("ERROR")
   }
 

@@ -18,10 +18,7 @@ class KvSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val Fmt = "graft.sources.KvTableProvider"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Graft.session(4)
     spark.sparkContext.setLogLevel("ERROR")
     dir = java.nio.file.Files.createTempDirectory("graft-kv").toString
     val sp = spark

@@ -21,13 +21,8 @@ class MaskAndOccSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val dir = "/root/testdata/sf0.01"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Graft.session(4)
     spark.sparkContext.setLogLevel("ERROR")
-    HiddenPartitioning.register(spark)
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()

@@ -17,14 +17,8 @@ class MetaTableSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val dir = "/root/testdata/sf0.01"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Graft.session(4)
     spark.sparkContext.setLogLevel("ERROR")
-    HiddenPartitioning.register(spark)
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
@@ -152,7 +146,6 @@ class MetaTableSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SQL face: graft_table/graft_files/graft_partitions/graft_snapshots TVFs") {
-    graft.functions.GraftFunctions.register(spark) // installs the table functions
     val ev = graft.core.Tables.load(spark, dir, "events").drop("props")
     val path = tmp("graft-meta-sql") + "/t"
     VersionedHiddenTable.create(spark, path,

@@ -15,15 +15,8 @@ class SqlDmlSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val dir = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.sources.GraftSqlExtensions")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Graft.session(4)
     spark.sparkContext.setLogLevel("ERROR")
-    HiddenPartitioning.register(spark)
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
