@@ -473,7 +473,9 @@ object FileStats {
           !names.contains(nm))
         .foreach(nm => fs.delete(new Path(root, nm), false): Unit)
     }
-    statsCache.remove(fs.makeQualified(root).toString): Unit
+    val qRoot = fs.makeQualified(root).toString
+    statsCache.invalidate(qRoot)
+    shardCache.invalidate(qRoot)
   }
 
   private def ls(fs: FileSystem, dir: Path): Seq[FileStatus] =
@@ -578,35 +580,26 @@ object FileStats {
     case _ => v.asInstanceOf[Long].toString // int / epoch-micros timestamps
   }
 
-  // ---- manifest read (fingerprint-cached, like the partition-spec cache) -----
+  // ---- manifest read (fingerprint-cached) ---------------------------------
 
   // Bounded: a long-lived session planning over many scratch tables must not
-  // grow the cache monotonically — past the cap the whole map clears (parses
-  // are cheap to redo; an LRU would buy little for a pure-throughput cache).
-  // Known cross-JVM staleness window, accepted and documented: the
-  // fingerprint is (mtime:len), so ANOTHER JVM rewriting the manifest within
-  // the same mtime granule at the same byte length could serve this JVM a
-  // stale parse (the writer's own JVM is covered by the explicit remove in
-  // [[write]]). Under this library's write discipline a rewrite changes the
-  // file set or the stats, so same-length same-second collisions do not
-  // arise; the per-FILE `len` check in [[entryFor]] independently stops a
-  // stale parse from mis-pruning any rewritten data file.
-  private val statsCacheCap = 64
-  private val statsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Option[Map[String, FileRec]])]()
+  // grow the cache monotonically. The cross-JVM staleness window of the
+  // fingerprint ([[MetaCache]]) does not arise under this library's write
+  // discipline: a rewrite changes the file set or the stats, so the length
+  // moves. The per-FILE `len` check in [[entryFor]] independently stops a
+  // stale parse from mis-pruning any rewritten data file. An entry holds a
+  // monolithic manifest's parse (Right) or a sharded root index's shard
+  // names (Left); None is absent or unparseable.
+  private[graft] val statsCache =
+    new MetaCache[Option[Either[Seq[String], Map[String, FileRec]]]](64)
 
-  private def fingerprint(fs: FileSystem, f: Path): String =
-    try {
-      val st = fs.getFileStatus(f)
-      s"${st.getModificationTime}:${st.getLen}"
-    } catch { case _: java.io.FileNotFoundException => "absent" }
-
-  // Per-shard parse cache: absolute shard path -> (fingerprint, parsed map).
-  // The point of sharding for the READER: after an append to one partition,
-  // only that partition's shard re-parses — the others hit here (one cheap
-  // getFileStatus each to validate the fingerprint).
-  private val shardCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Map[String, FileRec])]()
+  // Per-shard parse cache. The point of sharding for the READER: after an
+  // append to one partition, only that partition's shard re-parses — the
+  // others hit here (one cheap getFileStatus each to validate the
+  // fingerprint). Under the table root's own key it also holds the merge
+  // of all shards, fingerprinted by the root index and every shard, so an
+  // unchanged sharded manifest is not re-merged (O(files)) on each lookup.
+  private[graft] val shardCache = new MetaCache[Map[String, FileRec]](1024)
 
   /** The parsed manifest for the table at `dir`, keyed by path relative to
     * the table root; None when absent or unparseable (a torn manifest reads
@@ -620,51 +613,35 @@ object FileStats {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(dir)
     val fs = root.getFileSystem(conf)
-    val qRoot = fs.makeQualified(root).toString
     val f = new Path(root, StatsFile)
-    val rootFp = fingerprint(fs, f)
-    val cachedRoot = statsCache.get(qRoot)
-    // fast path: unchanged root index + every shard fingerprint unchanged is
-    // revalidated below only for sharded manifests; monolithic roots are
-    // fully keyed by their own fingerprint
-    if (cachedRoot != null && cachedRoot._1 == rootFp &&
-        !cachedRoot._1.startsWith("sharded:")) return cachedRoot._2
-    val result =
-      if (rootFp == "absent") ("absent", None)
+    val qRoot = fs.makeQualified(root).toString
+    val rootFp = MetaCache.fingerprint(fs, f)
+    val index = statsCache.get(qRoot, rootFp) {
+      if (rootFp == "absent") None
       else try {
         val rootN = new ObjectMapper().readTree(readFully(fs, f))
         rootN.get("v").asInt() match {
-          case 1 => (rootFp, Some(parseFiles(rootN)))
+          case 1 => Some(Right(parseFiles(rootN)))
           case 2 =>
             val shards = rootN.get("shards")
-            val parts = (0 until shards.size()).map { i =>
-              val name = shards.get(i).asText()
-              val sp = new Path(root, name)
-              val sfp = fingerprint(fs, sp)
-              val key = fs.makeQualified(sp).toString
-              val hit = shardCache.get(key)
-              val m =
-                if (hit != null && hit._1 == sfp) hit._2
-                else {
-                  val parsed =
-                    parseFiles(new ObjectMapper().readTree(readFully(fs, sp)))
-                  if (shardCache.size >= statsCacheCap * 16) shardCache.clear()
-                  shardCache.put(key, (sfp, parsed))
-                  parsed
-                }
-              (sfp, m)
-            }
-            val composite = s"sharded:$rootFp|${parts.map(_._1).mkString(",")}"
-            (composite, Some(parts.iterator.map(_._2).reduceOption(_ ++ _)
-              .getOrElse(Map.empty[String, FileRec])))
+            Some(Left((0 until shards.size()).map(shards.get(_).asText())))
         }
-      } catch { case scala.util.control.NonFatal(_) => (rootFp, None) }
-    // sharded: serve the cached merge only when NO shard changed either
-    if (cachedRoot != null && cachedRoot._1 == result._1) cachedRoot._2
-    else {
-      if (statsCache.size >= statsCacheCap) statsCache.clear()
-      statsCache.put(qRoot, result)
-      result._2
+      } catch { case scala.util.control.NonFatal(_) => None }
+    }
+    index.flatMap {
+      case Right(files) => Some(files)
+      case Left(names) =>
+        val shards = names.map { name =>
+          val sp = new Path(root, name)
+          (fs.makeQualified(sp).toString, MetaCache.fingerprint(fs, sp), sp)
+        }
+        try Some(shardCache.get(qRoot, s"$rootFp|${shards.map(_._2).mkString(",")}") {
+          shards.iterator.map { case (key, fp, sp) =>
+            shardCache.get(key, fp)(
+              parseFiles(new ObjectMapper().readTree(readFully(fs, sp))))
+          }.reduceOption(_ ++ _).getOrElse(Map.empty[String, FileRec])
+        })
+        catch { case scala.util.control.NonFatal(_) => None }
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import com.google.common.cache.{Cache, CacheBuilder}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Attribute, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal, Murmur3Hash, Pmod, Substring, Subtract}
@@ -221,7 +222,7 @@ object HiddenPartitioning {
     out.write(specJson(transforms))
     out.close()
     // drop any stale fingerprint; the next spec() lookup re-reads the file
-    specCache.remove(normalize(spark, path)): Unit
+    specCache.invalidate(normalize(spark, path))
   }
 
   // in-flight era claims of THIS JVM: `fs.create(overwrite=false)` is only
@@ -254,7 +255,7 @@ object HiddenPartitioning {
         catch { case _: java.io.IOException if fs.exists(target) => return false }
       out.write(specJson(transforms))
       out.close()
-      specCache.remove(normalize(spark, path)): Unit
+      specCache.invalidate(normalize(spark, path))
       true
     } finally inFlightClaims.remove(key)
   }
@@ -563,44 +564,28 @@ object HiddenPartitioning {
   // (the i11 round-12/13 cost regression). A hit is honored only while the
   // directory's (mtime, length) fingerprint is unchanged — one FileSystem
   // metadata call — so a dropped-and-recreated table at the same path
-  // (scratch rebuilds, tests) can never be served a stale listing. Keyed
-  // weakly per session: frames hold session state and must not leak across
-  // session lifetimes.
-  private val frameCaches = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.Map[String, (String, DataFrame)]]())
+  // (scratch rebuilds, tests) can never be served a stale listing. Scoped
+  // per session, by identity, because a frame holds its session's state.
+  // Each frame also references its session, so the weak key does not
+  // release a session while its frames are cached: a session's frames are
+  // bounded at 4096, but the session stays reachable from this map.
+  private val frameCaches: Cache[SparkSession, MetaCache[DataFrame]] =
+    CacheBuilder.newBuilder().weakKeys().build[SparkSession, MetaCache[DataFrame]]()
 
-  /** Access-ordered LRU, synchronized (r14: the old cache cleared ALL 4096
-    * entries at capacity — correctness-safe but a plan-time latency cliff
-    // on wide table fleets; evicting the least-recently-used entry keeps
-    * the hot changelog directories resident). */
-  private def newFrameLru(): java.util.Map[String, (String, DataFrame)] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, (String, DataFrame)](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, (String, DataFrame)]): Boolean =
-          size() > 4096
-      })
+  private[graft] def frameCache(spark: SparkSession): MetaCache[DataFrame] =
+    frameCaches.get(spark, () => new MetaCache[DataFrame](4096))
 
   /** [[org.apache.spark.sql.SparkSession.read]].parquet for an IMMUTABLE
-    * directory, fingerprint-cached per session. Callers must only pass
+    * directory, fingerprint-cached per session — by the directory itself,
+    * or by the file `marker` names inside it. Callers must only pass
     * era/delete directories (immutable once published); a mutable path
     * would be served its creation-time listing. */
   private[sources] def readImmutableParquet(spark: SparkSession,
-      path: String): DataFrame = {
+      path: String, marker: Option[String] = None): DataFrame = {
     val hp = new Path(path)
     val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-    val q = fs.makeQualified(hp).toString
-    val st = fs.getFileStatus(hp)
-    val fp = s"${st.getModificationTime}|${st.getLen}"
-    val m = frameCaches.computeIfAbsent(spark, _ => newFrameLru())
-    val hit = m.get(q)
-    if (hit != null && hit._1 == fp) hit._2
-    else {
-      val df = spark.read.parquet(path)
-      m.put(q, (fp, df))
-      df
-    }
+    frameCache(spark).get(fs.makeQualified(hp).toString,
+      MetaCache.fingerprint(fs, marker.fold(hp)(new Path(hp, _))))(spark.read.parquet(path))
   }
 
   /** One era's frame: source columns only — the derived partition columns
@@ -632,8 +617,7 @@ object HiddenPartitioning {
   // would then derive predicates from the dead spec (unsound pruning). The
   // fingerprint check is one FileSystem metadata call per lookup — the
   // cache still saves the read+parse, which is the real cost.
-  private val specCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Option[Seq[Transform]])]()
+  private[graft] val specCache = new MetaCache[Option[Seq[Transform]]](4096)
 
   private def normalize(spark: SparkSession, path: String): String = {
     val p = new Path(path)
@@ -641,34 +625,16 @@ object HiddenPartitioning {
       .makeQualified(p).toString
   }
 
-  /** (mtime:length) fingerprint of the spec file, or "absent". */
-  private def fingerprint(fs: org.apache.hadoop.fs.FileSystem, f: Path): String =
-    try {
-      val st = fs.getFileStatus(f)
-      s"${st.getModificationTime}:${st.getLen}"
-    } catch { case _: java.io.FileNotFoundException => "absent" }
-
   private[sources] def spec(spark: SparkSession, path: String): Option[Seq[Transform]] = {
     val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
     val f = new Path(path, SpecFile)
-    val fp = fingerprint(fs, f)
-    val key = normalize(spark, path)
-    val cached = specCache.get(key)
-    if (cached != null && cached._1 == fp) cached._2
-    else {
-      val v = if (fp == "absent") None else {
+    val fp = MetaCache.fingerprint(fs, f)
+    specCache.get(normalize(spark, path), fp) {
+      if (fp == "absent") None
+      else {
         val in = fs.open(f)
-        val bytes = try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val tmp = new Array[Byte](4096)
-          var n = in.read(tmp)
-          while (n > 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-          buf.toByteArray
-        } finally in.close()
-        Some(parseSpec(bytes))
+        Some(parseSpec(try in.readAllBytes() finally in.close()))
       }
-      specCache.put(key, (fp, v))
-      v
     }
   }
 

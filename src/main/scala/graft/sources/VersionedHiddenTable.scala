@@ -121,12 +121,18 @@ object VersionedHiddenTable {
     try fs.listStatus(dir).toSeq
     catch { case _: java.io.FileNotFoundException => Seq.empty }
 
-  def versions(spark: SparkSession, tableDir: String): Seq[Long] = {
+  def versions(spark: SparkSession, tableDir: String): Seq[Long] =
+    versionFps(spark, tableDir).map(_._1)
+
+  /** Each retained version with its snapshot manifest's fingerprint — one
+    * metadata call per version, which is also the existence check. */
+  private def versionFps(spark: SparkSession, tableDir: String): Seq[(Long, String)] = {
     val (fs, root) = fsFor(spark, tableDir)
     ls(fs, root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v=") &&
-        fs.exists(new Path(st.getPath, SnapshotFile)))
-      .map(_.getPath.getName.stripPrefix("v=").toLong).sorted
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
+      .map(st => (st.getPath.getName.stripPrefix("v=").toLong,
+        MetaCache.fingerprint(fs, new Path(st.getPath, SnapshotFile))))
+      .filter(_._2 != "absent").sortBy(_._1)
   }
 
   private def eraPath(tableDir: String, era: String) = s"$tableDir/data/$era"
@@ -174,35 +180,32 @@ object VersionedHiddenTable {
       .map(_.asText()).getOrElse("append")
   }
 
-  // a published snapshot manifest is immutable, so its branch field
-  // memoizes permanently — without this, every main-lineage resolution
-  // would re-read one manifest per retained version at PLAN time
-  // (cap-cleared like delBytesCache; a vacuumed version simply stops being
-  // asked about)
-  private val branchFieldCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[String]]()
+  // without this, every main-lineage resolution would re-read one snapshot
+  // manifest per retained version at PLAN time; the fingerprint catches a
+  // dropped-and-recreated table reusing the `v=<n>` path
+  private[graft] val branchFieldCache = new MetaCache[Option[String]](65536)
 
-  /** The branch a snapshot was committed to — None = the MAIN lineage.
-    * Branch snapshots share the global `v=<n>` id space (publish allocation
-    * never collides) but are invisible to main reads, main DML bases, and
-    * the main changelog. */
-  private[sources] def snapshotBranch(spark: SparkSession, tableDir: String,
-      v: Long): Option[String] = {
+  /** Each retained version with the branch it was committed to — None =
+    * the MAIN lineage. Branch snapshots share the global `v=<n>` id space
+    * (publish allocation never collides) but are invisible to main reads,
+    * main DML bases, and the main changelog. A cache hit costs no metadata
+    * call beyond the listing's own. */
+  private def versionBranches(spark: SparkSession,
+      tableDir: String): Seq[(Long, Option[String])] = {
     val (fs, _) = fsFor(spark, tableDir)
-    val f = new Path(s"$tableDir/v=$v", SnapshotFile)
-    val key = fs.makeQualified(f).toString
-    val hit = branchFieldCache.get(key)
-    if (hit != null) hit
-    else {
-      val in = fs.open(f)
-      val bytes = try in.readAllBytes() finally in.close()
-      val res = Option(new ObjectMapper().readTree(bytes).get("branch"))
-        .map(_.asText())
-      if (branchFieldCache.size >= 65536) branchFieldCache.clear()
-      branchFieldCache.put(key, res)
-      res
+    versionFps(spark, tableDir).map { case (v, fp) =>
+      val f = new Path(s"$tableDir/v=$v", SnapshotFile)
+      v -> branchFieldCache.get(fs.makeQualified(f).toString, fp) {
+        val in = fs.open(f)
+        val bytes = try in.readAllBytes() finally in.close()
+        Option(new ObjectMapper().readTree(bytes).get("branch")).map(_.asText())
+      }
     }
   }
+
+  private def branchVersions(spark: SparkSession, tableDir: String,
+      name: String): Seq[Long] =
+    versionBranches(spark, tableDir).collect { case (v, b) if b.contains(name) => v }
 
   /** Data bytes of the LIVE latest main snapshot: its era directories plus
     * its delete masks — NOT the whole `data/` tree, which accumulates every
@@ -222,8 +225,7 @@ object VersionedHiddenTable {
   /** Retained MAIN-lineage versions (what every unqualified read/DML/CDC
     * operation means by "the table"). */
   def mainVersions(spark: SparkSession, tableDir: String): Seq[Long] =
-    versions(spark, tableDir)
-      .filter(v => snapshotBranch(spark, tableDir, v).isEmpty)
+    versionBranches(spark, tableDir).collect { case (v, None) => v }
 
   private def mainLatest(spark: SparkSession, tableDir: String): Long = {
     val vs = mainVersions(spark, tableDir)
@@ -257,6 +259,7 @@ object VersionedHiddenTable {
   // filesystem makes it so), the set arbitrates same-JVM racers, so two
   // concurrent merges never write into one del directory
   private val delClaims = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private val DelClaim = "_claim"
 
   /** Claim a fresh `del-<k>` directory (marker file created before any
     * data) and return its name. The `_claim` marker is invisible to scans
@@ -270,7 +273,7 @@ object VersionedHiddenTable {
     while (attempts < 64) {
       attempts += 1
       val dir = new Path(s"$tableDir/data/del-$id")
-      val marker = new Path(dir, "_claim")
+      val marker = new Path(dir, DelClaim)
       val key = fs.makeQualified(marker).toString
       if (delClaims.add(key)) {
         try {
@@ -385,10 +388,18 @@ object VersionedHiddenTable {
     applyDels(spark, tableDir, e, conformed, dels)
   }
 
-  // a positional delete file is immutable once written, so its touched-file
-  // list memoizes permanently (cap-cleared like delBytesCache)
-  private val touchedPathsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[Seq[String]]]()
+  // A delete directory's cached metadata (its frame, touched-file list and
+  // size) is fingerprinted by its `_claim` marker, which every claim
+  // creates afresh: vacuum frees a `del-<k>` id and [[nextDelId]] hands it
+  // out again, and the directory's own fingerprint cannot tell the two
+  // apart on an object store, where a directory reads `0:0`.
+  private def delFingerprint(fs: FileSystem, delDir: Path): String =
+    MetaCache.fingerprint(fs, new Path(delDir, DelClaim))
+
+  private def readDel(spark: SparkSession, delDir: String): DataFrame =
+    HiddenPartitioning.readImmutableParquet(spark, delDir, Some(DelClaim))
+
+  private[graft] val touchedPathsCache = new MetaCache[Option[Seq[String]]](4096)
 
   /** The distinct data-file paths a positional delete touches — METADATA
     * scale by construction (at most one entry per masked data file, the
@@ -397,18 +408,11 @@ object VersionedHiddenTable {
     * anti join, never to a guess. */
   private def touchedPaths(spark: SparkSession, delDir: String): Option[Seq[String]] = {
     val (fs, p) = fsFor(spark, delDir)
-    val key = fs.makeQualified(p).toString
-    val hit = touchedPathsCache.get(key)
-    if (hit != null) hit
-    else {
+    touchedPathsCache.get(fs.makeQualified(p).toString, delFingerprint(fs, p)) {
       import org.apache.spark.sql.functions.col
-      val rows = HiddenPartitioning.readImmutableParquet(spark, delDir).select(col(GFile))
+      val rows = readDel(spark, delDir).select(col(GFile))
         .distinct().limit(1025).collect()
-      val res = if (rows.length > 1024) None
-        else Some(rows.map(_.getString(0)).toSeq.sorted)
-      if (touchedPathsCache.size >= 4096) touchedPathsCache.clear()
-      touchedPathsCache.put(key, res)
-      res
+      if (rows.length > 1024) None else Some(rows.map(_.getString(0)).toSeq.sorted)
     }
   }
 
@@ -437,7 +441,7 @@ object VersionedHiddenTable {
       val mine = touchedPaths(spark, delDir).map(_.filter(_.startsWith(eraPrefix)))
       if (mine.exists(_.isEmpty)) acc // mask provably touches no file of this era
       else {
-        val delDf = HiddenPartitioning.readImmutableParquet(spark, delDir).select(fc(GFile), fc(GPos))
+        val delDf = readDel(spark, delDir).select(fc(GFile), fc(GPos))
         val keys = if (delBytes(spark, delDir) <= deleteBroadcastMax(spark))
           broadcast(delDf) else delDf
         def cond(left: DataFrame) =
@@ -534,21 +538,11 @@ object VersionedHiddenTable {
     spark.conf.getOption("graft.vht.deleteBroadcastMaxBytes")
       .map(_.toLong).getOrElse(64L << 20)
 
-  // delete directories are immutable once written, so their data-byte size
-  // memoizes permanently (cap-cleared; re-listing is cheap to redo)
-  private val delBytesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private[graft] val delBytesCache = new MetaCache[Long](4096)
   private def delBytes(spark: SparkSession, delDir: String): Long = {
     val (fs, p) = fsFor(spark, delDir)
-    val key = fs.makeQualified(p).toString
-    val hit = delBytesCache.get(key)
-    if (hit != null) hit.longValue()
-    else {
-      val bytes = FileStats.dataBytes(fs, p)
-      if (delBytesCache.size >= 4096) delBytesCache.clear()
-      delBytesCache.put(key, bytes)
-      bytes
-    }
+    delBytesCache.get(fs.makeQualified(p).toString, delFingerprint(fs, p))(
+      FileStats.dataBytes(fs, p))
   }
 
   /** One provable bound of a delete mask's equality column: every matching
@@ -659,7 +653,7 @@ object VersionedHiddenTable {
     dels.filter(d => d.kind == "eq" && d.over.contains(e)).foldLeft(base) { (acc, d) =>
       import org.apache.spark.sql.functions.{col => fc}
       val delDir = s"$tableDir/data/${d.dir}"
-      val delDf = HiddenPartitioning.readImmutableParquet(spark, delDir)
+      val delDf = readDel(spark, delDir)
       val on = if (d.cols.nonEmpty) d.cols else delDf.columns.toSeq
       val bounds = maskBounds(spark, delDir, on, base.schema)
       val frac = disjointFileFraction(spark, tableDir, e, bounds)
@@ -1499,7 +1493,7 @@ object VersionedHiddenTable {
               else Some(PricedDel(dl, delDir, Seq(GFile, GPos), Nil, 0.0, mine))
             } else {
               val on = if (dl.cols.nonEmpty) dl.cols
-                else HiddenPartitioning.readImmutableParquet(spark, delDir).columns.toSeq
+                else readDel(spark, delDir).columns.toSeq
               val bounds = maskBounds(spark, delDir, on, canonical)
               val frac = disjointFileFraction(spark, tableDir, e, bounds)
               if (frac >= 1.0) None
@@ -1517,7 +1511,7 @@ object VersionedHiddenTable {
             val (_, parts) = priced.foldLeft((vis, Seq.empty[DataFrame])) {
               case ((remaining, acc), p) =>
                 import org.apache.spark.sql.functions.{col => fc, not}
-                val keys = HiddenPartitioning.readImmutableParquet(spark, p.delDir).select(p.on.map(col): _*)
+                val keys = readDel(spark, p.delDir).select(p.on.map(col): _*)
                 // same broadcast ceiling as the read path's applyDels
                 val d = if (delBytes(spark, p.delDir) <= deleteBroadcastMax(spark))
                   broadcast(keys) else keys
@@ -1726,8 +1720,7 @@ object VersionedHiddenTable {
     * version while it has none. */
   def branchHead(spark: SparkSession, tableDir: String, name: String): Long = {
     val from = branchFrom(spark, tableDir, name)
-    (from +: versions(spark, tableDir)
-      .filter(v => snapshotBranch(spark, tableDir, v).contains(name))).max
+    (from +: branchVersions(spark, tableDir, name)).max
   }
 
   /** Read the branch head (time travel within a branch = explicit versions,
@@ -1920,8 +1913,7 @@ object VersionedHiddenTable {
     // fork base — a branch is a promised future fast-forward, so retention
     // of the main lineage must not gut it (dropBranch releases the pins)
     val branchPins = branches(spark, tableDir).flatMap { case (name, from) =>
-      from +: versions(spark, tableDir)
-        .filter(v => snapshotBranch(spark, tableDir, v).contains(name))
+      from +: branchVersions(spark, tableDir, name)
     }.toSet
     val pinned = tags(spark, tableDir).values.toSet ++ branchPins
     val drop = selected.filterNot(pinned.contains)

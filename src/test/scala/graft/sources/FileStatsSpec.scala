@@ -396,6 +396,8 @@ class FileStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     FileStats.write(spark, path)
     val recs = FileStats.stats(spark, path).get
     assert(recs.size == 1000, s"expected 1000 per-file records, got ${recs.size}")
+    assert(FileStats.stats(spark, path).get eq recs,
+      "an unchanged sharded manifest must be served its cached merge")
     val r = spark.read.parquet(path)
     assert(r.count() == 100000, "count fold over 1000 manifest entries")
     // a narrow id range lives in exactly one range slice per partition dir

@@ -116,6 +116,24 @@ class PositionalDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
       "address columns must never leak into the feed")
   }
 
+  test("a positional delete at a reused del-<k> id masks the current era, not the vacuumed one") {
+    val t = tmp("reuse")
+    val ev = events
+    VersionedHiddenTable.create(spark, t, ev, Seq(HiddenPartitioning.DayT("ts")))
+    VersionedHiddenTable.deletePositional(spark, t, col("user_id") < 3L): Unit
+    assert(canon(VersionedHiddenTable.read(spark, t)) ==
+      canon(ev.filter(col("user_id") >= 3L)))
+    VersionedHiddenTable.compact(spark, t): Unit
+    VersionedHiddenTable.vacuum(spark, t, keep = 1, stagingGraceMs = 0L): Unit
+    assert(delDirs(t).isEmpty, "precondition: vacuum must free the first mask's id")
+    VersionedHiddenTable.deletePositional(spark, t, col("user_id") >= 8L): Unit
+    assert(delDirs(t) == Seq("del-0"), "precondition: the second mask must reuse del-0")
+    // the reused directory's metadata (its touched-file list, its size) must
+    // be read afresh: the first mask's list names only the retired era
+    assert(canon(VersionedHiddenTable.read(spark, t)) ==
+      canon(ev.filter(col("user_id") >= 3L && col("user_id") < 8L)))
+  }
+
   test("plan pricing: rows of files the mask never touches skip the anti join") {
     val t = tmp("price")
     val ev = events

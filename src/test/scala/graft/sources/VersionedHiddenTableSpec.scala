@@ -66,6 +66,24 @@ class VersionedHiddenTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ids(latest) == ids(ev), "latest snapshot must hold both halves")
     assert(ids(VersionedHiddenTable.read(spark, t, Some(0L))) == ids(h1),
       "time travel to v0 must see exactly the pre-append rows")
+    // a repeat read of the unchanged table plans from the metadata caches
+    def filtered(): Seq[Long] =
+      ids(VersionedHiddenTable.read(spark, t).filter(col("event_id") < 500L))
+    def counters = Seq(HiddenPartitioning.frameCache(spark),
+      HiddenPartitioning.specCache, FileStats.statsCache).map(_.counters)
+    val first = filtered()
+    val before = counters
+    assert(filtered() == first)
+    counters.zip(before).zip(Seq("frame", "spec", "stats")).foreach {
+      case ((a, b), name) => assert(a.hits > b.hits && a.misses == b.misses,
+        s"$name cache on a repeat read: $b -> $a")
+    }
+    // a manifest rewrite drops the cached parse: the next lookup misses
+    val era = s"$t/data/${dataEras(t).filter(_.startsWith("era-")).head}"
+    FileStats.write(spark, era)
+    val misses = FileStats.statsCache.counters.misses
+    assert(FileStats.stats(spark, era).isDefined)
+    assert(FileStats.statsCache.counters.misses == misses + 1)
   }
 
   test("WAP: a failing audit publishes nothing; vacuum reclaims the orphan era") {
