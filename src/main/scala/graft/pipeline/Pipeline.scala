@@ -1,7 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The full reference-parity DAG: 10 source + 16 stage/projection-shared +
   * 12 per-format + 4 mart models = the reference's 40 `dbt` models and two
@@ -117,9 +120,15 @@ object Pipeline {
          |                   WHERE format_part = :format)""".stripMargin
     }
 
-  /** app/app.py:567-569 — drafted-status KV membership join (`isin`). */
+  /** app/app.py:567-569 — drafted-status membership: `isin`'s answers, and
+    * a null id gives a null flag. That holds for the empty set too, where
+    * `isin` folds to false; a null id joins no ADP row, so it is never a
+    * pick candidate either way. The ids ride in one array literal, which
+    * generated code reads by reference, so the code is the same for every
+    * drafted set. An `isin` list of 10 or fewer values is written into the
+    * generated code instead, and each new drafted set cost a Janino compile. */
   def withDraftedFlag(rankings: DataFrame, draftedIds: Set[String]): DataFrame =
-    rankings.withColumn("drafted", col("id").isin(draftedIds.toSeq: _*))
+    rankings.withColumn("drafted", array_contains(typedLit(draftedIds.toSeq), col("id")))
 
   /** app/app.py:596-625 — the interactive filter battery, engine-side.
     * Position filter is any-substring-match over the multi-position string
@@ -152,59 +161,64 @@ object Pipeline {
     * each player's ADP (std dev = max(range/3, 3)), with the app's range and
     * urgency adjustments (early pick dampened, overdue boosted, approaching
     * max ramped), normalized to a distribution over the available players
-    * (id, name, adp, min_pick, max_pick). The 1-row total attaches via a
-    * broadcast cross join — the j6 constants pattern. */
+    * (id, name, adp, min_pick, max_pick). Returns the ADP-listed rows with
+    * `raw_prob` and `prob` appended, as a local DataFrame.
+    *
+    * Serving scale: the candidates are bounded by one league's ADP list, so
+    * one collect brings them to the driver and the model runs there, as the
+    * app runs it in pandas. As Spark columns, the per-pick `currentPick`
+    * literal is written into the generated code, so every pick would compile
+    * its stages anew. The math is `StrictMath`, as in Spark's `Exp` and
+    * `Pow`, so each `raw_prob` is the value the column form computes. */
   def draftPickProbabilities(players: DataFrame, currentPick: Int): DataFrame = {
     // the rankings mart LEFT-joins ADP, so undrafted players carry null
-    // adp/min_pick/max_pick; every when-branch below would evaluate null
-    // for them (a SILENT exclusion from the distribution). Filter them
-    // explicitly — the app's model is defined only over ADP-listed players.
+    // adp/min_pick/max_pick; the app's model is defined only over
+    // ADP-listed players, so the rest are left out explicitly
     val listed = players.filter(
       col("adp").isNotNull && col("min_pick").isNotNull && col("max_pick").isNotNull)
-    val cp = lit(currentPick.toDouble)
-    val stdDev = greatest((col("max_pick") - col("min_pick")) / 3.0, lit(3.0))
-    val base = exp(lit(-0.5) * pow((cp - col("adp")) / stdDev, 2))
-    val raw =
-      when(cp < col("min_pick"),
-        when(col("min_pick") - cp <= 2, base * 0.1).otherwise(lit(0.0001)))
-        .when(cp > col("max_pick"),
-          base * (lit(1) + (cp - col("max_pick")) * 2) * 10)
-        .when(cp >= col("max_pick") - 2,
-          base * (lit(1) + (lit(2) - (col("max_pick") - cp)) * 0.5))
-        .otherwise(base)
-    val weighted = listed.withColumn("raw_prob", raw)
-    val total = weighted.agg(sum(col("raw_prob")).as("_total"))
-    weighted.crossJoin(broadcast(total))
-      .withColumn("prob", col("raw_prob") / col("_total"))
-      .drop("_total")
+    val rows = listed.collect()
+    val Seq(adp, lo, hi) = Seq("adp", "min_pick", "max_pick").map(listed.schema.fieldIndex)
+    def num(r: Row, i: Int) = r.getAs[Number](i).doubleValue
+    val raw = rows.map(r => rawProb(currentPick.toDouble, num(r, adp), num(r, lo), num(r, hi)))
+    val total = raw.sum
+    val out = rows.zip(raw).map { case (r, w) => Row.fromSeq(r.toSeq :+ w :+ w / total) }
+    players.sparkSession.createDataFrame(out.toSeq.asJava,
+      listed.schema.add("raw_prob", DoubleType).add("prob", DoubleType))
+  }
+
+  /** The app's unnormalized pick weight of one player at pick `cp`. */
+  private def rawProb(cp: Double, adp: Double, lo: Double, hi: Double): Double = {
+    val base = StrictMath.exp(-0.5 * StrictMath.pow((cp - adp) / math.max((hi - lo) / 3.0, 3.0), 2))
+    if (cp < lo) { if (lo - cp <= 2) base * 0.1 else 0.0001 }
+    else if (cp > hi) base * (1 + (cp - hi) * 2) * 10
+    else if (cp >= hi - 2) base * (1 + (2 - (hi - cp)) * 0.5)
+    else base
   }
 
   /** Deterministic-seed weighted pick: inverse-CDF walk over the cumulative
     * distribution in id order (the app's np.random.choice with p=probs, made
-    * reproducible). Serving-scale global window — the candidate pool is the
-    * undrafted tail of one league, not a corpus. */
+    * reproducible). Returns the picked row of `probs`, or no row when no
+    * candidate has a positive probability.
+    *
+    * Serving scale, like [[draftPickProbabilities]]: the walk runs on the
+    * driver over one collect, which runs no job when `probs` is that
+    * method's local result; as a Spark window, the per-pick draw would be a
+    * literal in the generated code and compile anew. Ids compare by their
+    * UTF-8 bytes, nulls first, as Spark sorts strings. */
   def sampleDraftPick(probs: DataFrame, seed: Long): DataFrame = {
     val u = new scala.util.Random(seed).nextDouble()
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("id")).rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
+    val Seq(id, p) = Seq("id", "prob").map(probs.schema.fieldIndex)
     // Two inverse-CDF boundary rules np.random.choice honors that a naive
-    // `filter(cum >= u) ... limit(1)` does not: (a) fp rounding can make
-    // the final cum land just UNDER 1.0 — a draw above it must fall back
-    // to the last row, never return empty; (b) a zero-probability row
-    // shares its predecessor's cum and must never be picked. prob > 0
-    // first, then the id order makes the surviving cut deterministic.
-    val positive = probs.filter(col("prob") > 0)
-      .withColumn("cum", sum(col("prob")).over(w))
-    // ONE materialization per pick: collect the candidate row driver-side
-    // (serving-scale) instead of isEmpty + a second execution of the
-    // window plan; the fallback query runs only on the empty edge
-    val hit = positive.filter(col("cum") >= u)
-      .orderBy(col("cum"), col("id")).limit(1).drop("cum")
-    val rows = hit.collect()
-    if (rows.isEmpty)
-      positive.orderBy(col("cum").desc, col("id")).limit(1).drop("cum")
-    else hit.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), hit.schema)
+    // first `cum >= u` does not: (a) a zero-probability row shares its
+    // predecessor's cum and must never be picked, so prob > 0 first; (b) fp
+    // rounding can make the final cum land just UNDER 1.0, and a draw above
+    // it falls back to the last row, so `u` is clamped to the final cum (the
+    // first row to reach it: a trailing row too small to move cum never wins)
+    val walk = probs.collect()
+      .filter(r => !r.isNullAt(p) && r.getDouble(p) > 0)
+      .sortBy(r => Option(r.getString(id)).map(UTF8String.fromString))
+    val cum = walk.scanLeft(0.0)(_ + _.getDouble(p)).tail
+    val pick = cum.lastOption.map(last => walk(cum.indexWhere(_ >= math.min(u, last))))
+    probs.sparkSession.createDataFrame(pick.toSeq.asJava, probs.schema)
   }
 }

@@ -240,6 +240,173 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows("p3")._2 > 0.5)
   }
 
+  // The pick model and sampler as Spark columns, as they stood before the
+  // model moved to the driver: the oracle the driver-side walk must match
+  // pick for pick.
+  private object ColumnPick {
+    def draftedFlag(rankings: DataFrame, draftedIds: Set[String]): DataFrame =
+      rankings.withColumn("drafted", col("id").isin(draftedIds.toSeq: _*))
+
+    def probabilities(players: DataFrame, currentPick: Int): DataFrame = {
+      val listed = players.filter(
+        col("adp").isNotNull && col("min_pick").isNotNull && col("max_pick").isNotNull)
+      val cp = lit(currentPick.toDouble)
+      val stdDev = greatest((col("max_pick") - col("min_pick")) / 3.0, lit(3.0))
+      val base = exp(lit(-0.5) * pow((cp - col("adp")) / stdDev, 2))
+      val raw =
+        when(cp < col("min_pick"),
+          when(col("min_pick") - cp <= 2, base * 0.1).otherwise(lit(0.0001)))
+          .when(cp > col("max_pick"),
+            base * (lit(1) + (cp - col("max_pick")) * 2) * 10)
+          .when(cp >= col("max_pick") - 2,
+            base * (lit(1) + (lit(2) - (col("max_pick") - cp)) * 0.5))
+          .otherwise(base)
+      val weighted = listed.withColumn("raw_prob", raw)
+      val total = weighted.agg(sum(col("raw_prob")).as("_total"))
+      weighted.crossJoin(broadcast(total))
+        .withColumn("prob", col("raw_prob") / col("_total"))
+        .drop("_total")
+    }
+
+    def sample(probs: DataFrame, seed: Long): DataFrame = {
+      val u = new scala.util.Random(seed).nextDouble()
+      val w = org.apache.spark.sql.expressions.Window
+        .orderBy(col("id")).rowsBetween(
+          org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
+      val positive = probs.filter(col("prob") > 0)
+        .withColumn("cum", sum(col("prob")).over(w))
+      val hit = positive.filter(col("cum") >= u)
+        .orderBy(col("cum"), col("id")).limit(1).drop("cum")
+      val rows = hit.collect()
+      if (rows.isEmpty)
+        positive.orderBy(col("cum").desc, col("id")).limit(1).drop("cum")
+      else hit.sparkSession.createDataFrame(
+        java.util.Arrays.asList(rows: _*), hit.schema)
+    }
+  }
+
+  private def pickedId(picked: DataFrame): Option[String] =
+    picked.select("id").collect().headOption.map(_.getString(0))
+
+  test("driver-side pick model picks what the Spark-column model picks") {
+    val seeds = Seq(1L, 7L, 42L)
+    for (format <- LeagueFormat.all) {
+      val mart = out(s"mart_preseason_overall_rankings_${format.key}")
+      var drafted = Set.empty[String]
+      for (cp <- 1 to 60) {
+        val undrafted = Pipeline.withDraftedFlag(mart, drafted).filter(!col("drafted"))
+        val probs = Pipeline.draftPickProbabilities(undrafted, cp)
+        // the oracle samples a local copy of its own distribution, so its
+        // model runs once per pick instead of once per seed
+        val oracleRows = ColumnPick.probabilities(
+          ColumnPick.draftedFlag(mart, drafted).filter(!col("drafted")), cp)
+        val oracle = spark.createDataFrame(
+          java.util.Arrays.asList(oracleRows.collect(): _*), oracleRows.schema)
+        def weights(df: DataFrame) = df.select("id", "raw_prob", "prob").collect()
+          .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+        val (got, want) = (weights(probs), weights(oracle))
+        assert(got.keySet == want.keySet, s"${format.key} pick $cp: candidate sets differ")
+        want.foreach { case (id, (raw, prob)) =>
+          assert(got(id)._1 == raw, s"${format.key} pick $cp, $id: raw_prob ${got(id)._1} != $raw")
+          assert(math.abs(got(id)._2 - prob) <= 1e-15, s"${format.key} pick $cp, $id: prob")
+        }
+        val picks = seeds.map(s => pickedId(Pipeline.sampleDraftPick(probs, s * 1000 + cp)))
+        val oraclePicks = seeds.map(s => pickedId(ColumnPick.sample(oracle, s * 1000 + cp)))
+        assert(picks == oraclePicks, s"${format.key} pick $cp")
+        assert(picks.forall(_.isDefined), s"${format.key} pick $cp: the board ran dry")
+        drafted += picks.head.get
+      }
+    }
+  }
+
+  test("sampler boundary rules: zero-probability rows, a draw past the total, byte-order ids") {
+    val sp = spark; import sp.implicits._
+    // the probabilities sum to 0.99, standing in for an fp-short total: a
+    // draw above 0.99 must fall back to the last positive row, never to a
+    // zero-probability row and never to no row. The last positive row is
+    // "😀" by UTF-8 bytes, as Spark sorts, but "Ａ" (U+FF21) by UTF-16 code
+    // units, as java.lang.String sorts
+    val board = Seq(("a", 0.2), ("b", 0.0), ("c", 0.19), ("d", 0.3),
+      ("Ａ", 0.15), ("😀", 0.15), ("😀😀", 0.0)).toDF("id", "prob")
+    val high = Iterator.from(0).map(_.toLong)
+      .find(s => new scala.util.Random(s).nextDouble() > 0.99).get
+    assert(pickedId(Pipeline.sampleDraftPick(board, high)) == Some("😀"))
+    for (seed <- (0L until 40L) :+ high)
+      assert(pickedId(Pipeline.sampleDraftPick(board, seed)) ==
+        pickedId(ColumnPick.sample(board, seed)), s"seed $seed")
+    // an empty candidate set gives an empty pick, in the model's schema
+    val none = Pipeline.draftPickProbabilities(
+      out("mart_preseason_overall_rankings_oc").filter(col("adp").isNull), 1)
+    assert(none.isEmpty && none.columns.takeRight(2).toSeq == Seq("raw_prob", "prob"))
+    val picked = Pipeline.sampleDraftPick(none, 42)
+    assert(picked.isEmpty && picked.columns.toSeq == none.columns.toSeq)
+  }
+
+  test("drafted flag keeps isin's answers: empty set, 1-12 ids, null id, ids outside the mart") {
+    val sp = spark; import sp.implicits._
+    val mart = out("mart_preseason_overall_rankings_oc")
+    val ids = mart.select("id").orderBy("id").collect().map(_.getString(0))
+    val board = mart.select("id").union(Seq(Option.empty[String]).toDF("id"))
+    def flags(df: DataFrame) = df.select("id", "drafted").collect()
+      .map(r => Option(r.getString(0)) -> Option(r.get(1)))
+      .sortBy(_._1.getOrElse("")).toSeq
+    def same(df: DataFrame, set: Set[String]) = {
+      val got = flags(Pipeline.withDraftedFlag(df, set))
+      assert(got == flags(ColumnPick.draftedFlag(df, set)), s"drafted set $set")
+      got
+    }
+    // no mart id is null; on a null id the empty set's flag is null too,
+    // where isin folds its empty list to false
+    assert(same(mart, Set.empty).forall(_._2.contains(false)), "nothing is drafted")
+    assert(flags(Pipeline.withDraftedFlag(board, Set.empty)).collect { case (None, f) => f } ==
+      Seq(None), "a null id gives a null flag")
+    def outside(n: Int) = (1 to n).map(i => s"outside-$i").toSet
+    for (n <- 1 to 12; set <- Seq(ids.take(n).toSet, ids.takeRight(n / 2).toSet ++ outside(n - n / 2)))
+      assert(same(board, set).collect { case (None, f) => f } == Seq(None),
+        "a null id gives a null flag")
+  }
+
+  test("a pick runs one job and compiles no code after warm-up") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val mart = out("mart_preseason_overall_rankings_oc")
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    // (jobs, compiles) that `body` cost
+    def cost(body: => Unit): (Int, Long) = {
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+      val (j0, c0) = (jobs.get, CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+      body
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+      (jobs.get - j0, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+    }
+    var drafted = Set.empty[String]
+    // the pick request and the board refresh, as the draft-day app makes them
+    def pick(): Unit = {
+      val undrafted = Pipeline.withDraftedFlag(mart, drafted).filter(!col("drafted"))
+      val probs = Pipeline.draftPickProbabilities(undrafted, drafted.size + 1)
+      drafted += Pipeline.sampleDraftPick(probs, drafted.size).select("id").collect()
+        .head.getString(0)
+    }
+    def board(): Unit =
+      Pipeline.filterRankings(Pipeline.withDraftedFlag(mart, drafted),
+        positions = Seq("SS", "OF"), nameSearch = Some("a"), draftedOnly = Some(false))
+        .select("id", "name", "pos", "drafted").collect()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      pick()
+      board()
+      for (size <- 1 to 15) {
+        assert(drafted.size == size)
+        assert(cost(pick()) == (1, 0L), s"pick at drafted size $size: (jobs, compiles)")
+        assert(cost(board())._2 == 0L, s"board at drafted size ${size + 1}: compiles")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   // Golden content digests of ALL 40 models over the deterministic fixture
   // corpus, materialized mode. Every cell participates bit-exactly
   // (Checks.contentDigest — no rounding), so a silent drift in ANY
