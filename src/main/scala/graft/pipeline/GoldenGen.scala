@@ -34,7 +34,7 @@ object GoldenGen {
     val root = Files.createTempDirectory("graft-golden-fixtures").toString
     FixtureGen.generate(root)
     val out = Pipeline.run(spark, root,
-      materializeDir = Some(Files.createTempDirectory("graft-golden-mat").toString))
+      Materialization.ParquetDir(Files.createTempDirectory("graft-golden-mat").toString))
     gated.map(n => n -> Checks.contentDigest(out(n))).toMap
   }
 

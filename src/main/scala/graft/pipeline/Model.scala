@@ -1,7 +1,10 @@
 package graft.pipeline
 
 import scala.collection.mutable
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import graft.sources.{FileStats, JoinAdvisor, VersionedHiddenTable}
 
 /** One pipeline model — the Spark equivalent of a dbt model: a named,
   * dependency-declaring `DataFrame` transformation.
@@ -27,28 +30,65 @@ object Model {
   }
 }
 
-/** How [[DagRunner]] persists each built model. */
-sealed trait Materialization
-object Materialization {
-  /** Lazy composed DataFrames — Catalyst optimizes ACROSS model boundaries
-    * (column pruning through the whole DAG), the fused mode the reference
-    * engine cannot do. Same results, but MORE work on this DAG: nothing is
-    * cut, so every consumer re-derives its shared ancestors (e.g.
-    * `mart_sgp_factors`, which feeds stage models). On a 4-core host over
-    * FixtureGen data, evaluating all 40 outputs took 170–180 s, against
-    * about 20 s warm for [[ParquetDir]]. */
-  case object Compose extends Materialization
+/** How [[DagRunner]] persists each model: every mode answers how to write
+  * model `n` and how to read its current materialization, and a selected
+  * model is written, then read back through the same read an unselected
+  * dependency gets — dbt's `ref()` against the warehouse table. */
+sealed trait Materialization {
+  /** Where model `n`'s materialization lives, as a missing-model error names it. */
+  private[pipeline] def where(n: String): String
+  /** Whether model `n` has a complete materialization to read. */
+  private[pipeline] def exists(spark: SparkSession, n: String): Boolean
+  private[pipeline] def write(spark: SparkSession, n: String, df: DataFrame): Unit
+  private[pipeline] def read(spark: SparkSession, n: String): DataFrame
+}
 
+object Materialization {
   /** dbt's `materialized='table'` pipeline-breaker semantics to bare parquet
-    * paths: every model optimizes in isolation, intermediates inspectable. */
-  final case class ParquetDir(dir: String) extends Materialization
+    * paths `dir/<model>`: every model optimizes in isolation, intermediates
+    * inspectable. A model counts as materialized once its write committed
+    * (the `_SUCCESS` marker), so a crashed write is not read. */
+  final case class ParquetDir(dir: String) extends Materialization {
+    private[pipeline] def where(n: String) = s"$dir/$n"
+    private[pipeline] def exists(spark: SparkSession, n: String) = {
+      val marker = new Path(where(n), "_SUCCESS")
+      marker.getFileSystem(spark.sessionState.newHadoopConf()).exists(marker)
+    }
+    private[pipeline] def write(spark: SparkSession, n: String, df: DataFrame) = {
+      df.write.mode("overwrite").parquet(where(n))
+      // every materialized model carries per-file stats: bare counts fold
+      // to metadata and key predicates skip files on mart reads, the same
+      // storage contract the registry's s18-s21 tables get
+      FileStats.write(spark, where(n))
+    }
+    // stats-advised read: dimension-sized models return hinted broadcast, so
+    // downstream mart joins take the advised strategy automatically (the j13
+    // ladder's byte rung; content unchanged — the golden digests gate that)
+    private[pipeline] def read(spark: SparkSession, n: String) =
+      JoinAdvisor.autoHinted(spark, where(n), spark.read.parquet(where(n)))
+  }
 
   /** Catalog tables via `saveAsTable` into the reference's three schemas
     * (`dbt_project.yml:38-51`: source / stage / main), so downstream users
     * address models as `spark.table("main.mart_...")` exactly as the
     * reference's Athena/Iceberg consumers do. */
   final case class Catalog(schemaOf: String => String = Materialization.layerSchema)
-    extends Materialization
+    extends Materialization {
+    private def id(n: String) = TableIdentifier(n, Some(schemaOf(n)))
+    private def location(spark: SparkSession, n: String) =
+      spark.sessionState.catalog.getTableMetadata(id(n)).location.toString
+    private[pipeline] def where(n: String) = s"table ${schemaOf(n)}.$n"
+    private[pipeline] def exists(spark: SparkSession, n: String) =
+      spark.sessionState.catalog.tableExists(id(n))
+    private[pipeline] def write(spark: SparkSession, n: String, df: DataFrame) = {
+      spark.sql(s"CREATE DATABASE IF NOT EXISTS ${schemaOf(n)}")
+      df.write.mode("overwrite").format("parquet").saveAsTable(s"${schemaOf(n)}.$n")
+      FileStats.write(spark, location(spark, n))
+    }
+    private[pipeline] def read(spark: SparkSession, n: String) =
+      JoinAdvisor.autoHinted(spark, location(spark, n),
+        spark.table(s"${schemaOf(n)}.$n"))
+  }
 
   /** The FULL table contract for every materialized model: each lands as an
     * `op=overwrite` snapshot of a [[graft.sources.VersionedHiddenTable]]
@@ -56,14 +96,31 @@ object Materialization {
     * `changes()` CDC between runs (the incremental-consumer feed: fold a
     * run's net diff forward instead of rebuilding downstream), DML and
     * scheduled maintenance via [[graft.sources.TableService]], SQL access
-    * via the `graft_table` TVF. `transformsOf` gives a model its hidden
-    * partition spec on FIRST creation (default unpartitioned — right for
-    * the reference's serving-scale marts). */
+    * via the `graft_table` TVF. A model reads as its latest snapshot.
+    * `transformsOf` gives a model its hidden partition spec on FIRST
+    * creation (default unpartitioned — right for the reference's
+    * serving-scale marts). Path-addressed, not catalogued: a composite
+    * multi-era read cannot be a single-LOCATION catalog table. */
   final case class VersionedHiddenDir(root: String,
       transformsOf: String => Seq[graft.sources.HiddenPartitioning.Transform] =
         _ => Nil,
       schemaOf: String => String = Materialization.layerSchema)
-    extends Materialization
+    extends Materialization {
+    private[pipeline] def where(n: String) = s"$root/${schemaOf(n)}/$n"
+    private[pipeline] def exists(spark: SparkSession, n: String) =
+      VersionedHiddenTable.mainVersions(spark, where(n)).nonEmpty
+    // one op=overwrite snapshot per run: prior runs stay readable (time
+    // travel), changes() nets the run-over-run diff for incremental
+    // consumers, stats manifests land with every era
+    private[pipeline] def write(spark: SparkSession, n: String, df: DataFrame) =
+      VersionedHiddenTable.overwrite(spark, where(n), df, transformsOf(n)): Unit
+    // price the hint at the LIVE snapshot's bytes — data/ accumulates one
+    // retired era per run, so measuring the whole tree would cost a
+    // dimension-sized model its broadcast after enough runs
+    private[pipeline] def read(spark: SparkSession, n: String) =
+      JoinAdvisor.autoHintedBytes(VersionedHiddenTable.read(spark, where(n)),
+        VersionedHiddenTable.liveDataBytes(spark, where(n)))
+  }
 
   /** Reference layer mapping: `src_*` → source, `mart_*` → main (the
     * reference keeps marts in `models/main/`), everything else → stage. */
@@ -102,26 +159,19 @@ final class DagRunner(models: Seq[Model]) {
     done.toSeq
   }
 
-  /** Upstream closure (transitive in-graph dependencies, excluding `n`). */
-  private def ancestorsOf(n: String): Set[String] = {
-    val seen = mutable.Set[String]()
-    def walk(m: String): Unit =
-      byName.get(m).foreach(_.deps.foreach { d =>
-        if (byName.contains(d) && seen.add(d)) walk(d)
-      })
-    walk(n)
-    seen.toSet
-  }
+  private val parentsOf: Map[String, Seq[String]] =
+    models.map(m => m.name -> m.deps.filter(byName.contains)).toMap
 
   private lazy val childrenOf: Map[String, Seq[String]] =
-    models.flatMap(m => m.deps.filter(byName.contains).map(_ -> m.name))
+    parentsOf.toSeq.flatMap { case (n, ps) => ps.map(_ -> n) }
       .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
 
-  /** Downstream closure (transitive dependents, excluding `n`). */
-  private def descendantsOf(n: String): Set[String] = {
+  /** Transitive closure of `n` along `edges` (excluding `n`): its upstream
+    * closure along [[parentsOf]], its downstream one along [[childrenOf]]. */
+  private def closure(n: String, edges: Map[String, Seq[String]]): Set[String] = {
     val seen = mutable.Set[String]()
     def walk(m: String): Unit =
-      childrenOf.getOrElse(m, Nil).foreach(c => if (seen.add(c)) walk(c))
+      edges.getOrElse(m, Nil).foreach(c => if (seen.add(c)) walk(c))
     walk(n)
     seen.toSet
   }
@@ -146,84 +196,41 @@ final class DagRunner(models: Seq[Model]) {
       val base = names.filter(_.matches(rx))
       require(base.nonEmpty, s"selector '$raw' matches no model")
       base.flatMap(b => Set(b) ++
-        (if (up) ancestorsOf(b) else Set.empty) ++
-        (if (down) descendantsOf(b) else Set.empty))
+        (if (up) closure(b, parentsOf) else Set.empty) ++
+        (if (down) closure(b, childrenOf) else Set.empty))
     }.toSet
     topoOrder.filter(picked)
   }
 
   /** Builds the models matched by `select` (all of them when empty) under
-    * the given materialization mode; returns only the selected frames.
+    * the given materialization mode; returns the selected models' frames,
+    * each read back from its materialization.
     *
-    * dbt semantics, mapped to one engine: a selected model's unselected
-    * ancestors are not skipped — refs must resolve — but they are only
-    * COMPOSED (lazy frames Catalyst fuses into the selected builds), never
-    * materialized; in dbt they would be pre-existing warehouse tables.
-    * Models outside every selected model's upstream closure are not even
-    * built. `+model` pulls the ancestors INTO the selection, materializing
-    * the full lineage — the reference's `dbt build --select` workflow. */
+    * dbt semantics: `ref()` reads the materialized table. A selected
+    * model's unselected in-graph dependencies are not rebuilt; they resolve
+    * to their current materialization in `mat`, and nothing further
+    * upstream is touched. Each must already exist — checked for all of
+    * them before anything is written, so a missing one fails the run
+    * naming the model and where it was looked for. `+model` pulls the
+    * ancestors INTO the selection, rebuilding the full lineage — the
+    * reference's `dbt build --select` workflow. */
   def runAs(spark: SparkSession, mat: Materialization,
       select: Seq[String] = Nil): Map[String, DataFrame] = {
-    val selected: Set[String] =
-      if (select.isEmpty) topoOrder.toSet else selectNodes(select).toSet
-    val needed: Set[String] = selected ++ selected.flatMap(ancestorsOf)
-    val built = mutable.LinkedHashMap[String, DataFrame]()
+    val selected = if (select.isEmpty) topoOrder else selectNodes(select)
+    val inputs = selected.flatMap(parentsOf).distinct.filterNot(selected.contains)
+    val missing = inputs.filterNot(mat.exists(spark, _))
+    if (missing.nonEmpty)
+      throw new IllegalStateException(missing.map(d => s"$d (looked for ${mat.where(d)})")
+        .mkString("unselected dependencies have no materialization: ", ", ",
+          "; build them first or select their lineage with +model"))
+    val built = mutable.Map[String, DataFrame]()
+    inputs.foreach(d => built(d) = mat.read(spark, d))
     def resolve(n: String): DataFrame =
-      built.getOrElse(n,
-        throw new NoSuchElementException(s"unknown ref/source: $n"))
-    val schemaOfOpt = mat match {
-      case Materialization.Catalog(schemaOf) => Some(schemaOf)
-      // VersionedHiddenDir is path-addressed (composite multi-era reads
-      // cannot be a single-LOCATION catalog table; the graft_table TVF is
-      // the SQL face) — no databases to create
-      case _ => None
+      built.getOrElse(n, throw new NoSuchElementException(s"unknown ref/source: $n"))
+    selected.foreach { n =>
+      mat.write(spark, n, byName(n).build(spark, resolve))
+      built(n) = mat.read(spark, n)
     }
-    schemaOfOpt.foreach(schemaOf =>
-      topoOrder.filter(selected).map(schemaOf).distinct.foreach(db =>
-        spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")))
-    topoOrder.filter(needed).foreach { n =>
-      val df = byName(n).build(spark, resolve)
-      built(n) = if (!selected(n)) df else mat match {
-        case Materialization.ParquetDir(dir) =>
-          val path = s"$dir/$n"
-          df.write.mode("overwrite").parquet(path)
-          // every materialized model carries per-file stats: bare counts
-          // fold to metadata and key predicates skip files on mart reads,
-          // the same storage contract the registry's s18-s21 tables get
-          graft.sources.FileStats.write(spark, path)
-          // stats-advised read-back: dimension-sized models return hinted
-          // broadcast, so downstream mart joins take the advised strategy
-          // automatically (the j13 ladder's byte rung; content unchanged —
-          // the golden digests gate that)
-          graft.sources.JoinAdvisor.autoHinted(spark, path,
-            spark.read.parquet(path))
-        case Materialization.Catalog(schemaOf) =>
-          val fqn = s"${schemaOf(n)}.$n"
-          df.write.mode("overwrite").format("parquet").saveAsTable(fqn)
-          graft.sources.FileStats.write(spark,
-            spark.sessionState.catalog.getTableMetadata(
-              org.apache.spark.sql.catalyst.TableIdentifier(n, Some(schemaOf(n))))
-              .location.toString)
-          graft.sources.JoinAdvisor.autoHinted(spark,
-            spark.sessionState.catalog.getTableMetadata(
-              org.apache.spark.sql.catalyst.TableIdentifier(n, Some(schemaOf(n))))
-              .location.toString, spark.table(fqn))
-        case Materialization.VersionedHiddenDir(root, transformsOf, schemaOf) =>
-          val tableDir = s"$root/${schemaOf(n)}/$n"
-          // one op=overwrite snapshot per run: prior runs stay readable
-          // (time travel), changes() nets the run-over-run diff for
-          // incremental consumers, stats manifests land with every era
-          graft.sources.VersionedHiddenTable.overwrite(
-            spark, tableDir, df, transformsOf(n)): Unit
-          // price the hint at the LIVE snapshot's bytes — data/ accumulates
-          // one retired era per run, so measuring the whole tree would cost
-          // a dimension-sized model its broadcast after enough runs
-          graft.sources.JoinAdvisor.autoHintedBytes(
-            graft.sources.VersionedHiddenTable.read(spark, tableDir),
-            graft.sources.VersionedHiddenTable.liveDataBytes(spark, tableDir))
-        case Materialization.Compose => df
-      }
-    }
-    built.filter { case (n, _) => selected(n) }.toMap
+    selected.map(n => n -> built(n)).toMap
   }
 }

@@ -12,7 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Usage:
   * {{{
-  *   val out = Pipeline.run(spark, dataRoot = "/path/to/raw/feeds")
+  *   val out = Pipeline.run(spark, dataRoot = "/path/to/raw/feeds",
+  *     Materialization.ParquetDir("/path/to/warehouse"))
   *   out("mart_preseason_overall_rankings_oc").show()
   * }}}
   */
@@ -22,45 +23,16 @@ object Pipeline {
     new SourceModels(dataRoot).all ++ StageModels.all ++
       ProjectionModels.all ++ MartModels.all
 
-  def runner(dataRoot: String): DagRunner = new DagRunner(models(dataRoot))
-
-  /** Build every model. `materializeDir=Some(dir)` gives dbt-style per-model
-    * table materialization; `None` composes the whole DAG lazily
-    * ([[Materialization.Compose]]), which is slower here because every
-    * consumer re-derives its shared ancestors.
-    *
-    * `select` is the reference's operational unit (`dbt build --select`,
-    * `app/app.py:448`): names/globs with the `+` graph operators —
-    * `"mart_*"` builds the marts (upstream refs composed lazily),
-    * `"+mart_sgp_factors"` materializes that mart's full upstream lineage,
-    * nothing else is built. Empty = the whole DAG. */
-  def run(spark: SparkSession, dataRoot: String,
-      materializeDir: Option[String] = None,
+  /** The reference's `dbt build`: builds the models `select` names (all of
+    * them when empty) into `mat`, every model a table (`dbt_project.yml:38-51`),
+    * as [[DagRunner.runAs]] does. `select` is the reference's operational
+    * unit (`dbt build --select`, `app/app.py:448`): names/globs with the `+`
+    * graph operators — `"mart_*"` rebuilds the marts over their parents'
+    * current materializations, `"+mart_sgp_factors"` rebuilds that mart's
+    * full upstream lineage, nothing else is built. */
+  def run(spark: SparkSession, dataRoot: String, mat: Materialization,
       select: Seq[String] = Nil): Map[String, DataFrame] =
-    runner(dataRoot).runAs(spark,
-      materializeDir.fold[Materialization](Materialization.Compose)(
-        Materialization.ParquetDir), select)
-
-  /** dbt_project.yml:38-51 semantics: materialize every model as a catalog
-    * table in its layer's database (source / stage / main), queryable as
-    * e.g. `spark.table("main.mart_preseason_overall_rankings_oc")`. */
-  def runCatalog(spark: SparkSession, dataRoot: String): Map[String, DataFrame] =
-    runner(dataRoot).runAs(spark, Materialization.Catalog())
-
-  /** [[runCatalog]] upgraded to the FULL table contract (the README's
-    * "incremental models" future enhancement, `README.md:45-46`, made real):
-    * every selected model lands as an `op=overwrite` snapshot of a
-    * [[graft.sources.VersionedHiddenTable]] under
-    * `tableRoot/<schema>/<model>/`. Each run is one snapshot — prior runs
-    * time-travel, `VersionedHiddenTable.changes(dir, vPrev)` nets the
-    * run-over-run row diff (the feed a downstream consumer folds forward
-    * instead of rebuilding), and `TableService.maintain` gives the marts
-    * scheduled compaction + retention. SQL access via the `graft_table`
-    * TVF. */
-  def runVersionedHidden(spark: SparkSession, dataRoot: String,
-      tableRoot: String, select: Seq[String] = Nil): Map[String, DataFrame] =
-    runner(dataRoot).runAs(spark,
-      Materialization.VersionedHiddenDir(tableRoot), select)
+    new DagRunner(models(dataRoot)).runAs(spark, mat, select)
 
   /** Attach named observed metrics to a frame: the aggregates are computed
     * INSIDE whatever action materializes the frame (write, count, collect) —

@@ -21,7 +21,7 @@ object PipelineDemo {
       Files.createTempDirectory("graft-warehouse").toString)
     val spark = graft.Graft.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     spark.sparkContext.setLogLevel("WARN")
-    val out = Pipeline.run(spark, dataRoot, materializeDir = Some(warehouse))
+    val out = Pipeline.run(spark, dataRoot, Materialization.ParquetDir(warehouse))
     println(s"[demo] built ${out.size} models into $warehouse")
     for (mart <- Seq("mart_sgp_factors", "mart_sgp_percentiles",
         "mart_preseason_overall_rankings_oc")) {

@@ -468,8 +468,8 @@ object IncrementalOps extends QueryPack {
     doc = "Incremental aggregate maintenance off the changelog: v1 materialization + signed CDC deltas reproduce the v5 state exactly, hash-proven against a from-scratch rebuild (I11/§2.5).")
 
   // ---- I12: run-over-run overwrite CDC (dbt `table` rebuilds, incremental) ----
-  // Pipeline.runVersionedHidden lands every pipeline run as ONE op=overwrite
-  // snapshot of a VersionedHiddenTable; changes() across the overwrite step
+  // A Pipeline.run into Materialization.VersionedHiddenDir lands each model
+  // as ONE op=overwrite snapshot per run; changes() across the overwrite step
   // nets the run-over-run row diff, so a downstream consumer holding run 0
   // folds the diff forward instead of rebuilding — the README's
   // "incremental models" future enhancement (README.md:45-46) as a storage

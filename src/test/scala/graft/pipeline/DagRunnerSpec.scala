@@ -1,14 +1,29 @@
 package graft.pipeline
 
+import java.nio.file.{Files, Path => JPath}
+import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-/** Pure-JVM properties of the DAG scheduler (no SparkSession needed: build
-  * functions are never invoked by `topoOrder`). Uses scalacheck generators
-  * directly (scalatestplus bridge isn't on the classpath). */
-class DagRunnerSpec extends AnyFunSuite {
+/** The DAG scheduler: pure-JVM properties of its ordering (build functions
+  * are never invoked by `topoOrder`; scalacheck generators are used
+  * directly, as the scalatestplus bridge isn't on the classpath), and
+  * `runAs`'s `ref()` contract in every materialization mode over a
+  * 3-model chain `a -> b -> c`. */
+class DagRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private var spark: SparkSession = _
+
+  override def beforeAll(): Unit = {
+    spark = graft.Graft.session(2)
+    spark.sparkContext.setLogLevel("ERROR")
+  }
+
+  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def model(n: String, deps: Seq[String]): Model =
     Model(n, deps)((_: SparkSession, _: String => DataFrame) =>
@@ -54,5 +69,53 @@ class DagRunnerSpec extends AnyFunSuite {
   test("deps outside the registry are treated as externally-provided sources") {
     val m = Seq(model("a", Seq("external_source")))
     assert(new DagRunner(m).topoOrder == Seq("a"))
+  }
+
+  /** `a -> b -> c`, each build recording its name in `calls`. */
+  private def chain(calls: mutable.Buffer[String]): DagRunner = new DagRunner(Seq(
+    Model("a", Nil) { (s, _) => calls += "a"; s.range(5).toDF("x") },
+    Model("b", Seq("a")) { (_, in) => calls += "b"; in("a").select((col("x") * 2).as("x")) },
+    Model("c", Seq("b")) { (_, in) => calls += "c"; in("b").select((col("x") + 1).as("x")) }))
+
+  /** A fresh, empty temp root, and each mode over it (the Catalog mode's
+    * database has an explicit LOCATION there). */
+  private def modes(): (JPath, Seq[Materialization]) = {
+    val root = Files.createTempDirectory("graft-dag")
+    val db = s"dag_${root.getFileName.toString.filter(_.isLetterOrDigit)}"
+    spark.sql(s"CREATE DATABASE $db LOCATION '$root/catalog'")
+    (root, Seq(Materialization.ParquetDir(s"$root/parquet"), Materialization.Catalog(_ => db),
+      Materialization.VersionedHiddenDir(s"$root/vht")))
+  }
+
+  test("selecting a downstream model rebuilds only it, over its parent's materialization") {
+    for (mat <- modes()._2) {
+      val calls = mutable.ArrayBuffer[String]()
+      val runner = chain(calls)
+      runner.runAs(spark, mat)
+      val out = runner.runAs(spark, mat, Seq("c"))
+      assert(calls == Seq("a", "b", "c", "c"), s"$mat: only c may rebuild")
+      assert(out.keySet == Set("c"), s"$mat")
+      assert(out("c").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 3L, 5L, 7L, 9L), s"$mat")
+    }
+  }
+
+  test("a missing dependency fails before any write, naming the model; a crashed write is missing") {
+    val (root, mats) = modes()
+    def refused(mat: Materialization, calls: mutable.Buffer[String]) = {
+      val e = intercept[IllegalStateException](chain(calls).runAs(spark, mat, Seq("c")))
+      assert(e.getMessage.contains(s"b (looked for ${mat.where("b")})"), s"$mat: ${e.getMessage}")
+    }
+    for (mat <- mats) {
+      val calls = mutable.ArrayBuffer[String]()
+      refused(mat, calls)
+      assert(calls.isEmpty, s"$mat: nothing may build")
+    }
+    assert(Files.walk(root).noneMatch(Files.isRegularFile(_)), "nothing may be written")
+    // a ParquetDir dependency without _SUCCESS (its write crashed) counts as missing
+    val calls = mutable.ArrayBuffer[String]()
+    chain(calls).runAs(spark, mats.head)
+    Files.delete(root.resolve("parquet/b/_SUCCESS"))
+    refused(mats.head, calls)
+    assert(calls == Seq("a", "b", "c"), "c must not build over a crashed parent")
   }
 }

@@ -41,7 +41,9 @@ class ObservationSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("observation on a mart model: row count and rank integrity in the serving write") {
     val root = java.nio.file.Files.createTempDirectory("graft-obs-fixtures").toString
     FixtureGen.generate(root)
-    val out = Pipeline.run(spark, root)
+    val mat = java.nio.file.Files.createTempDirectory("graft-obs-mat").toString
+    val out = Pipeline.run(spark, root, Materialization.ParquetDir(mat),
+      select = Seq("+mart_preseason_overall_rankings_oc"))
     val mart = out("mart_preseason_overall_rankings_oc")
     val (df, obs) = Pipeline.observed(mart,
       "rows" -> count(lit(1)),

@@ -1,7 +1,11 @@
 package graft.pipeline
 
 import java.nio.file.Files
+import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -23,7 +27,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // materialized (dbt-style) mode: one pass builds all 40 models to parquet,
     // so each assertion below reads a table instead of recomputing the DAG
     matDir = Files.createTempDirectory("graft-mat").toString
-    out = Pipeline.run(spark, root, materializeDir = Some(matDir))
+    out = Pipeline.run(spark, root, Materialization.ParquetDir(matDir))
   }
 
   private var matDir: String = _
@@ -33,7 +37,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("DAG wires all 40 reference models and orders the mart->stage back-edge") {
     val names = Pipeline.models(root).map(_.name)
     assert(names.size == 40, s"expected 40 models, got ${names.size}: $names")
-    val order = Pipeline.runner(root).topoOrder
+    val order = new DagRunner(Pipeline.models(root)).topoOrder
     assert(order.indexOf("mart_sgp_factors") <
       order.indexOf("stg_proj_preseason_hitting_sgp_oc"),
       "mart_sgp_factors must build before the stage models that consume it")
@@ -459,7 +463,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     "stg_razzball_proj_preseason_pitching_per_ip" -> "acf58f9a6fe3fdc158e4817a3303392f")
 
   test("dbt-style selection builds exactly the closure and nothing else") {
-    val runner = Pipeline.runner(root)
+    val runner = new DagRunner(Pipeline.models(root))
     val byName = Pipeline.models(root).map(m => m.name -> m).toMap
 
     // +model: the model plus its upstream closure, topologically ordered
@@ -472,34 +476,37 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       "an unrelated mart must stay outside the closure")
 
     val dir = Files.createTempDirectory("graft-sel").toString
-    val built = Pipeline.run(spark, root, Some(dir),
+    val built = Pipeline.run(spark, root, Materialization.ParquetDir(dir),
       select = Seq("+mart_sgp_factors"))
     assert(built.keySet == cs, "returned frames must equal the selection")
     val written = new java.io.File(dir).listFiles().map(_.getName).toSet
     assert(written == cs,
       s"materialized exactly the closure (extra: ${written.diff(cs)}, missing: ${cs.diff(written)})")
     // a selected build equals the same model from the full run
-    assert(built("mart_sgp_factors").collect().toSet ==
-      out("mart_sgp_factors").collect().toSet)
+    assert(Checks.contentDigest(built("mart_sgp_factors")) == golden("mart_sgp_factors"))
 
-    // bare glob: the marts materialize; upstream refs compose lazily and
-    // are NOT written — dbt's "refs resolve against the warehouse"
+    // bare glob over the full build: the marts rebuild, and every ref()
+    // reads the parent's table — no feed is scanned, and each mart is the
+    // full build's bit for bit
     val dir2 = Files.createTempDirectory("graft-sel2").toString
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(matDir), new java.io.File(dir2))
+    val plans = mutable.Map[String, LogicalPlan]()
+    val capturing = Pipeline.models(root).map(m => Model(m.name, m.deps) { (s, in) =>
+      val df = m.build(s, in)
+      plans(m.name) = df.queryExecution.analyzed
+      df
+    })
     val martNames = byName.keySet.filter(_.startsWith("mart_"))
-    val marts = Pipeline.run(spark, root, Some(dir2), select = Seq("mart_*"))
-    assert(marts.keySet == martNames)
-    assert(new java.io.File(dir2).listFiles().map(_.getName).toSet == martNames,
-      "a bare glob must materialize only its matches")
-    // lazily-composed upstream = fused plans: double sums may differ in
-    // low-order bits (the fused-mode test's caveat), so compare values with
-    // tolerance over the joined id set
-    val sel = marts("mart_preseason_overall_rankings_oc")
-      .select(col("id"), col("value").as("value_s"))
-    val full = out("mart_preseason_overall_rankings_oc").select("id", "value")
-    val joined = full.join(sel, Seq("id")).collect()
-    assert(joined.length == full.count(), "same id set as the full run")
-    joined.foreach(r =>
-      assert(math.abs(r.getAs[Double]("value") - r.getAs[Double]("value_s")) < 1e-9))
+    val marts = new DagRunner(capturing)
+      .runAs(spark, Materialization.ParquetDir(dir2), Seq("mart_*"))
+    assert(marts.keySet == martNames && plans.keySet == martNames)
+    marts.foreach { case (n, df) => assert(Checks.contentDigest(df) == golden(n), n) }
+    plans.foreach { case (n, plan) => plan.collectLeaves().foreach {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _)
+          if r.fileFormat.isInstanceOf[ParquetFileFormat] &&
+            r.location.rootPaths.forall(_.toString.contains(dir2)) =>
+      case leaf => fail(s"$n reads a leaf other than a parent table under $dir2:\n$leaf")
+    } }
 
     // name+ pulls downstream dependents (the mart->stage back-edge is real)
     val down = runner.selectNodes(Seq("mart_sgp_factors+")).toSet
@@ -575,7 +582,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     Seq(7, 23).foreach { seed =>
       val dir = Files.createTempDirectory(s"graft-fix-seed$seed").toString
       FixtureGen.generate(dir, noiseSeed = seed)
-      val o = Pipeline.run(spark, dir)
+      val o = Pipeline.run(spark, dir, Materialization.ParquetDir(
+        Files.createTempDirectory(s"graft-mat-seed$seed").toString))
       val v = o("stg_proj_preseason_hitting_values_oc")
       val total = v.filter(col("sgpar") > 0)
         .agg(sum(col("value") - 1)).first().getDouble(0)
@@ -598,41 +606,26 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val wh = Files.createTempDirectory("graft-cat").toString
     Seq("source", "stage", "main").foreach(db =>
       spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$wh/$db'"))
-    val cat = Pipeline.runCatalog(spark, root)
-    assert(cat.size == 40)
-    val mart = spark.table("main.mart_preseason_overall_rankings_oc")
-    val viaOut = out("mart_preseason_overall_rankings_oc")
-    assert(mart.count() == viaOut.count() && mart.count() > 0)
-    // values with tolerance: table vs parquet materialization can split
-    // files differently, reordering double sums by low-order bits (same
-    // rationale as the fused-mode comparison below)
-    val joined = viaOut.select(col("id"), col("value"))
-      .join(mart.select(col("id"), col("value").as("value_c")), Seq("id")).collect()
-    assert(joined.length == viaOut.count(), "catalog mart must cover every id")
-    joined.foreach { r =>
-      assert(math.abs(r.getAs[Double]("value") - r.getAs[Double]("value_c")) < 1e-9,
-        s"value mismatch for ${r.getAs[String]("id")}")
-    }
-    // listTables also returns session temp views — exclude them
-    val srcTables = spark.catalog.listTables("source").collect()
-      .filter(!_.isTemporary).map(_.name).toSet
-    assert(srcTables.contains("src_nfbc_players") && srcTables.size == 10,
-      s"10 source-layer tables expected, got $srcTables")
-    assert(spark.catalog.listTables("stage").collect()
-      .exists(_.name == "stg_proj_preseason_hitting_sgp_oc"))
-    assert(spark.catalog.listTables("main").collect().map(_.name).toSet
-      .contains("mart_sgp_factors"))
+    val cat = Pipeline.run(spark, root, Materialization.Catalog())
+    // every model reads back from its table bit for bit as the ParquetDir build
+    assert(cat.map { case (n, df) => n -> Checks.contentDigest(df) } == golden)
+    assert(Checks.contentDigest(spark.table("main.mart_preseason_overall_rankings_oc")) ==
+      golden("mart_preseason_overall_rankings_oc"))
+    golden.keys.foreach(n => assert(
+      spark.catalog.tableExists(s"${Materialization.layerSchema(n)}.$n"), s"$n: no table in its layer"))
   }
 
   test("versioned-hidden marts: overwrite snapshots per run; run-over-run CDC folds forward exactly") {
     val VHT = graft.sources.VersionedHiddenTable
     val vroot = Files.createTempDirectory("graft-vhtmart").toString
     val mart = "mart_sgp_factors"
-    Pipeline.runVersionedHidden(spark, root, vroot, select = Seq(mart))
+    // each run rebuilds the mart's lineage: a bare selection would read
+    // run 0's ancestors in run 1 and net an empty diff
+    Pipeline.run(spark, root, Materialization.VersionedHiddenDir(vroot), select = Seq(s"+$mart"))
     // second run over PERTURBED inputs — the incremental-pipeline scenario
     val root2 = Files.createTempDirectory("graft-fixtures2").toString
     FixtureGen.generate(root2, noiseSeed = 7)
-    Pipeline.runVersionedHidden(spark, root2, vroot, select = Seq(mart))
+    Pipeline.run(spark, root2, Materialization.VersionedHiddenDir(vroot), select = Seq(s"+$mart"))
     val dir = s"$vroot/main/$mart"
     assert(VHT.versions(spark, dir) == Seq(0L, 1L),
       "each pipeline run must publish exactly one overwrite snapshot")
@@ -640,7 +633,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val v1 = VHT.read(spark, dir, Some(1L))
     def key(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
     // golden parity: the versioned run's content is the materialized build's
-    assert(key(v0.select(out(mart).columns.map(col): _*)) == key(out(mart)),
+    assert(Checks.contentDigest(v0) == golden(mart),
       "run-0 snapshot must equal the ParquetDir materialization")
     // the README's "incremental models": a downstream consumer holding v0
     // folds the run's NET diff forward instead of rebuilding
@@ -675,28 +668,5 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(VHT.vacuum(spark, dir, keep = 1) == Seq(0L))
     assert(VHT.versions(spark, dir) == Seq(1L))
     assert(key(VHT.read(spark, dir, Some(1L))) == key(v1))
-  }
-
-  test("fused mode produces the same mart as materialized mode", graft.Slow) {
-    // fused: no per-model parquet breaks — Catalyst optimizes across the DAG.
-    // Values may differ in low-order bits (double sums accumulate in a
-    // different partition order), so compare with tolerance, ranks exactly.
-    val fused = Pipeline.run(spark, root)("mart_preseason_overall_rankings_oc")
-      .select(col("id"), col("rank").as("rank_f"), col("value").as("value_f"))
-    val mat = out("mart_preseason_overall_rankings_oc")
-      .select("id", "rank", "value")
-    val joined = mat.join(fused, Seq("id")).collect()
-    assert(joined.length == mat.count(), "same id set in both modes")
-    joined.foreach { r =>
-      assert(math.abs(r.getAs[Double]("value") - r.getAs[Double]("value_f")) < 1e-9,
-        s"value mismatch for ${r.getAs[String]("id")}")
-    }
-    // row_number over `value desc` has no tie-break (faithful to the
-    // reference, SURVEY.md §7.4) — rank may permute within equal values, so
-    // compare rank only up to value-ties: same id multiset per value bucket.
-    def buckets(rows: Array[org.apache.spark.sql.Row], v: String) =
-      rows.groupBy(r => math.round(r.getAs[Double](v) * 1e6))
-        .view.mapValues(_.map(_.getAs[String]("id")).sorted.toSeq).toMap
-    assert(buckets(joined, "value") == buckets(joined, "value_f"))
   }
 }
