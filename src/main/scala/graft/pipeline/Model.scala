@@ -1,9 +1,13 @@
 package graft.pipeline
 
+import java.util.concurrent.{ConcurrentHashMap, Executors, LinkedBlockingQueue, TimeUnit}
 import scala.collection.mutable
+import scala.util.control.NonFatal
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.execution.SQLExecution
 import graft.sources.{FileStats, JoinAdvisor, VersionedHiddenTable}
 
 /** One pipeline model — the Spark equivalent of a dbt model: a named,
@@ -213,7 +217,26 @@ final class DagRunner(models: Seq[Model]) {
     * them before anything is written, so a missing one fails the run
     * naming the model and where it was looked for. `+model` pulls the
     * ancestors INTO the selection, rebuilding the full lineage — the
-    * reference's `dbt build --select` workflow. */
+    * reference's `dbt build --select` workflow.
+    *
+    * Independent models build side by side, as under dbt's `threads`. A
+    * selected model is ready once every selected in-graph parent has been
+    * written and read back. The calling thread calls each ready model's
+    * `build` — in topological order among the ready ones, and never on any
+    * other thread, so a caller may keep thread-confined state (a span
+    * stack, say) across `build` calls. The write and the read-back then run
+    * on a pool of `spark.sparkContext.defaultParallelism` threads (the
+    * session's cores), each carrying the Spark local properties the calling
+    * thread had when it handed the model over.
+    *
+    * A model whose build, write or read-back throws fails; its dependents
+    * are skipped and never built, while independent models still launch
+    * and finish. Once nothing is in flight, `runAs` throws an
+    * `IllegalStateException` naming the failed models and the skipped ones,
+    * with the first failure as its cause. A fatal error from a `build`
+    * launches nothing more and is rethrown once the writes in flight
+    * finish; an interrupt of the calling thread interrupts them, and is
+    * rethrown once they have stopped. */
   def runAs(spark: SparkSession, mat: Materialization,
       select: Seq[String] = Nil): Map[String, DataFrame] = {
     val selected = if (select.isEmpty) topoOrder else selectNodes(select)
@@ -223,14 +246,67 @@ final class DagRunner(models: Seq[Model]) {
       throw new IllegalStateException(missing.map(d => s"$d (looked for ${mat.where(d)})")
         .mkString("unselected dependencies have no materialization: ", ", ",
           "; build them first or select their lineage with +model"))
-    val built = mutable.Map[String, DataFrame]()
-    inputs.foreach(d => built(d) = mat.read(spark, d))
-    def resolve(n: String): DataFrame =
-      built.getOrElse(n, throw new NoSuchElementException(s"unknown ref/source: $n"))
-    selected.foreach { n =>
-      mat.write(spark, n, byName(n).build(spark, resolve))
-      built(n) = mat.read(spark, n)
+    val built = new ConcurrentHashMap[String, DataFrame]()
+    inputs.foreach(d => built.put(d, mat.read(spark, d)))
+    def resolve(n: String): DataFrame = Option(built.get(n))
+      .getOrElse(throw new NoSuchElementException(s"unknown ref/source: $n"))
+    val rank = selected.zipWithIndex.toMap
+    // per selected model, how many of its selected parents are not yet written
+    val waiting = mutable.Map(selected.map(n => n -> parentsOf(n).count(rank.contains)): _*)
+    val ready = mutable.TreeSet(selected.filter(waiting(_) == 0): _*)(Ordering.by(rank))
+    val finished = new LinkedBlockingQueue[(String, Option[Throwable])]()
+    val failed = mutable.LinkedHashMap[String, Throwable]()
+    var inFlight = 0
+    val pool = Executors.newFixedThreadPool(spark.sparkContext.defaultParallelism,
+      (r: Runnable) => { val t = new Thread(r, "graft-dag-writer"); t.setDaemon(true); t })
+    try {
+      while (ready.nonEmpty || inFlight > 0) {
+        ready.foreach { n =>
+          try {
+            val df = byName(n).build(spark, resolve)
+            // the body hands back its own error; `e` is set only if the
+            // capture around it throws, so every launch reports to `finished`
+            SQLExecution.withThreadLocalCaptured(castToImpl(spark), pool) {
+              try { mat.write(spark, n, df); built.put(n, mat.read(spark, n)); None }
+              catch { case e: Throwable => Some(e) }
+            }.whenComplete((r, e) => finished.put(n -> Option(e).orElse(r)))
+            inFlight += 1
+          } catch { case NonFatal(e) => failed(n) = e }
+        }
+        ready.clear()
+        if (inFlight > 0) {
+          val (n, error) = finished.take()
+          inFlight -= 1
+          error match {
+            case Some(e) => failed(n) = e
+            case None => childrenOf.getOrElse(n, Nil).filter(rank.contains).foreach { c =>
+              waiting(c) -= 1
+              if (waiting(c) == 0) ready += c
+            }
+          }
+        }
+      }
+    } catch {
+      // the caller was interrupted: cut the writes in flight short
+      case e: InterruptedException => pool.shutdownNow(); throw e
+    } finally {
+      // on any exit, wait out the writes in flight (a fatal error from a
+      // build leaves the loop with some running), so no commit is still
+      // part-way when runAs returns or throws
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
     }
-    selected.map(n => n -> built(n)).toMap
+    if (failed.nonEmpty) {
+      val skipped = selected.filterNot(n => built.containsKey(n) || failed.contains(n))
+      val why = failed.map { case (n, e) =>
+        s"$n (${String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse("")})"
+      }
+      val error = new IllegalStateException(why.mkString("models failed: ", ", ", "") +
+        (if (skipped.isEmpty) "" else skipped.mkString("; skipped, downstream of a failure: ", ", ", "")),
+        failed.head._2)
+      failed.values.tail.foreach(error.addSuppressed)
+      throw error
+    }
+    selected.map(n => n -> built.get(n)).toMap
   }
 }

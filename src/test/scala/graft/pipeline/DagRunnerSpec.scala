@@ -1,9 +1,14 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Path => JPath}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import scala.collection.mutable
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.functions.{col, udf}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
@@ -11,9 +16,12 @@ import org.scalacheck.rng.Seed
 
 /** The DAG scheduler: pure-JVM properties of its ordering (build functions
   * are never invoked by `topoOrder`; scalacheck generators are used
-  * directly, as the scalatestplus bridge isn't on the classpath), and
+  * directly, as the scalatestplus bridge isn't on the classpath),
   * `runAs`'s `ref()` contract in every materialization mode over a
-  * 3-model chain `a -> b -> c`. */
+  * 3-model chain `a -> b -> c`, and its scheduling: independent models
+  * write at the same time, every `build` runs on the caller's thread, a
+  * failed model skips its dependents while its siblings finish, and a
+  * fatal error waits for the writes in flight. */
 class DagRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -118,4 +126,92 @@ class DagRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
     refused(mats.head, calls)
     assert(calls == Seq("a", "b", "c"), "c must not build over a crashed parent")
   }
+
+  test("independent models write at the same time") {
+    for (mat <- modes()._2) {
+      DagRunnerSpec.latch = new CountDownLatch(2)
+      def meeting(n: String) = Model(n, Nil) { (s, _) =>
+        s.range(0, 1, 1, 1).select(DagRunnerSpec.meet(col("id")).as("met"))
+      }
+      val out = new DagRunner(Seq(meeting("p"), meeting("q"))).runAs(spark, mat)
+      Seq("p", "q").foreach(n => assert(out(n).head().getBoolean(0),
+        s"$mat: $n's write never ran beside the other's"))
+    }
+  }
+
+  /** `a -> {b, c}`, `b -> d`, and an independent `e`; each build records its
+    * name and thread, and `b`'s frame throws when written if `bFails`. */
+  private def forked(calls: mutable.Buffer[(String, Thread)], bFails: Boolean): DagRunner = {
+    def m(n: String, deps: String*)(f: DataFrame => DataFrame) =
+      Model(n, deps) { (s, in) =>
+        calls += n -> Thread.currentThread
+        f(if (deps.isEmpty) s.range(5).toDF("x") else in(deps.head))
+      }
+    val plusOne = (df: DataFrame) => df.select((col("x") + 1).as("x"))
+    val double = (df: DataFrame) =>
+      df.select((if (bFails) DagRunnerSpec.boom(col("x")) else col("x") * 2).as("x"))
+    new DagRunner(Seq(m("a")(plusOne), m("b", "a")(double), m("c", "a")(plusOne),
+      m("d", "b")(plusOne), m("e")(plusOne)))
+  }
+
+  test("every build runs on the calling thread") {
+    for (mat <- modes()._2) {
+      val calls = mutable.ArrayBuffer[(String, Thread)]()
+      val out = forked(calls, bFails = false).runAs(spark, mat)
+      assert(calls.map(_._1).sorted == Seq("a", "b", "c", "d", "e"), s"$mat")
+      assert(calls.forall(_._2 eq Thread.currentThread), s"$mat: ${calls.map(_._2.getName)}")
+      assert(out("d").collect().map(_.getLong(0)).sorted.toSeq == Seq(3L, 5L, 7L, 9L, 11L), s"$mat")
+    }
+  }
+
+  test("a failed write skips its dependents; independent models still finish") {
+    for (mat <- modes()._2) {
+      val calls = mutable.ArrayBuffer[(String, Thread)]()
+      val run = Future(forked(calls, bFails = true).runAs(spark, mat))
+      val e = intercept[IllegalStateException](Await.result(run, 120.seconds))
+      assert(e.getMessage.startsWith("models failed: b ("), s"$mat: ${e.getMessage}")
+      assert(e.getMessage.endsWith("; skipped, downstream of a failure: d"), s"$mat: ${e.getMessage}")
+      Seq("a", "c", "e").foreach(n => assert(mat.exists(spark, n), s"$mat: $n must be materialized"))
+      assert(!calls.exists(_._1 == "d"), s"$mat: d must never build")
+      assert(!mat.exists(spark, "d"), s"$mat: nothing may be written for d")
+    }
+  }
+
+  test("a fatal error from a build is rethrown only after the writes in flight finish") {
+    for (mat <- modes()._2) {
+      DagRunnerSpec.latch = new CountDownLatch(1)
+      val slow = Model("x", Nil) { (s, _) =>
+        s.range(0, 1, 1, 1).select(DagRunnerSpec.stall(col("id")).as("x"))
+      }
+      // not NonFatal, so it leaves the scheduling loop while x is writing
+      val fatal = Model("y", Nil) { (_, _) =>
+        assert(DagRunnerSpec.latch.await(10, TimeUnit.SECONDS), s"$mat: x's write never started")
+        throw new LinkageError("y's build fails fatally")
+      }
+      intercept[LinkageError](new DagRunner(Seq(slow, fatal)).runAs(spark, mat))
+      assert(mat.exists(spark, "x"), s"$mat: x's write must commit before runAs throws")
+    }
+  }
+}
+
+object DagRunnerSpec {
+  /** Read by task closures through this object, so every task of the JVM
+    * shares it (a captured latch would be serialized per task). */
+  @volatile var latch = new CountDownLatch(2)
+  /** True once both counts are down: the row's write ran while the other
+    * model's did. Gives up after 10 s, so a serial runner fails, not hangs. */
+  val meet: UserDefinedFunction = udf { (_: Long) =>
+    latch.countDown()
+    latch.await(10, TimeUnit.SECONDS)
+  }.asNondeterministic()
+  /** Counts the latch down, then holds the row's write for 1.5 s. */
+  val stall: UserDefinedFunction = udf { (x: Long) =>
+    latch.countDown()
+    Thread.sleep(1500)
+    x
+  }.asNondeterministic()
+  val boom: UserDefinedFunction = udf { (x: Long) =>
+    if (x >= 0) throw new IllegalStateException("b's write fails")
+    x
+  }.asNondeterministic()
 }

@@ -794,6 +794,19 @@ class VersionedHiddenTableSpec extends AnyFunSuite with BeforeAndAfterAll {
       "a type-conflicting append must abort, not publish")
   }
 
+  test("changes: an empty range has the schema of a non-empty feed across an add-column evolution") {
+    val t = tmp("cdc-schema")
+    val base = spark.range(6).select(col("id"), (col("id") * 2).cast("int").as("v"))
+    VersionedHiddenTable.create(spark, t, base, Nil)                               // v0
+    VersionedHiddenTable.append(spark, t, base.withColumn("tag", lit("new")))()    // v1
+    val feed = VersionedHiddenTable.changes(spark, t, 0L, Some(1L))
+    assert(feed.count() == 6)
+    assert(feed.columns.toSeq == Seq("id", "v", "tag", "_change_type", "_commit_version"))
+    // the changelog stream takes its schema from exactly this empty range
+    assert(VersionedHiddenTable.changes(spark, t, 1L, Some(1L)).schema == feed.schema)
+    assert(VersionedHiddenTable.changes(spark, t, 1L, Some(1L)).isEmpty)
+  }
+
   test("publish skips a foreign v=<n> directory instead of nesting into it") {
     val t = tmp("race")
     val ev = events
