@@ -34,7 +34,10 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   * Each builder runs at ANALYSIS time and returns the analyzed plan of the
   * equivalent Scala-API frame, so every SQL query sees the metadata as of
   * its own analysis — registering a view once and serving stale metadata
-  * forever is exactly what this avoids.
+  * forever is exactly what this avoids. Resolving `graft_changes` over a
+  * two-sided step small enough to net on the driver (see
+  * [[VersionedHiddenTable.changes]]) runs that step's scan job at analysis
+  * time; the query then plans over the netted local relation.
   *
   * Injected at session build by [[GraftSqlExtensions]].
   */

@@ -122,90 +122,88 @@ object VersionedHiddenTable {
     catch { case _: java.io.FileNotFoundException => Seq.empty }
 
   def versions(spark: SparkSession, tableDir: String): Seq[Long] =
-    versionFps(spark, tableDir).map(_._1)
+    manifests(spark, tableDir).map(_._1)
 
-  /** Each retained version with its snapshot manifest's fingerprint — one
-    * metadata call per version, which is also the existence check. */
-  private def versionFps(spark: SparkSession, tableDir: String): Seq[(Long, String)] = {
-    val (fs, root) = fsFor(spark, tableDir)
-    ls(fs, root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
-      .map(st => (st.getPath.getName.stripPrefix("v=").toLong,
-        MetaCache.fingerprint(fs, new Path(st.getPath, SnapshotFile))))
-      .filter(_._2 != "absent").sortBy(_._1)
-  }
+  /** One parsed snapshot manifest (`v=<n>/_snapshot.json`, or a staged
+    * one): the eras and delete files it lists, the operation that produced
+    * it (Iceberg's snapshot-summary `operation`), the branch it was
+    * committed to (None = the MAIN lineage) and the base version it was
+    * computed against. Pre-merge-on-read manifests carry no `dels` field
+    * and read as delete-free; pre-op-tagging ones read as "append" (the
+    * conservative default: [[changes]] diffs them for real rather than
+    * assuming content preservation). */
+  private[sources] final case class Manifest(eras: Seq[String], dels: Seq[Del],
+      op: String, branch: Option[String], base: Option[Long])
 
-  private def eraPath(tableDir: String, era: String) = s"$tableDir/data/$era"
-
-  /** Era names (`era-<k>`) listed by snapshot `v`. */
-  private def snapshotEras(spark: SparkSession, tableDir: String, v: Long): Seq[String] =
-    snapshot(spark, tableDir, v)._1
-
-  /** (eras, equality-delete files) listed by snapshot `v`. Pre-merge-on-read
-    * snapshots carry no `dels` field and read as delete-free.
-    * (`private[sources]`: [[TableService]] reads fragmentation off it.) */
-  private[sources] def snapshot(spark: SparkSession, tableDir: String,
-      v: Long): (Seq[String], Seq[Del]) = {
-    val (fs, _) = fsFor(spark, tableDir)
-    val f = new Path(s"$tableDir/v=$v", SnapshotFile)
+  private def readManifest(fs: FileSystem, f: Path): Manifest = {
     val in = fs.open(f)
     val bytes = try in.readAllBytes() finally in.close()
     val node = new ObjectMapper().readTree(bytes)
-    val eras = node.get("eras")
+    def texts(n: com.fasterxml.jackson.databind.JsonNode) =
+      (0 until n.size()).map(n.get(_).asText())
     val dels = Option(node.get("dels")).map { ds =>
       (0 until ds.size()).map { i =>
         val d = ds.get(i)
-        val over = d.get("over")
-        val cols = Option(d.get("cols")).map(cs =>
-          (0 until cs.size()).map(cs.get(_).asText())).getOrElse(Seq.empty)
-        val kind = Option(d.get("kind")).map(_.asText()).getOrElse("eq")
-        Del(d.get("dir").asText(),
-          (0 until over.size()).map(over.get(_).asText()).toSet, cols, kind)
+        Del(d.get("dir").asText(), texts(d.get("over")).toSet,
+          Option(d.get("cols")).map(texts).getOrElse(Seq.empty),
+          Option(d.get("kind")).map(_.asText()).getOrElse("eq"))
       }
     }.getOrElse(Seq.empty)
-    ((0 until eras.size()).map(eras.get(_).asText()), dels)
+    Manifest(texts(node.get("eras")), dels,
+      Option(node.get("op")).map(_.asText()).getOrElse("append"),
+      Option(node.get("branch")).map(_.asText()),
+      Option(node.get("base")).map(_.asLong()))
   }
 
-  /** The operation that produced snapshot `v` — Iceberg's snapshot-summary
-    * `operation` field. Pre-op-tagging snapshots read as "append" (the
-    * conservative default: [[changes]] diffs them for real rather than
-    * assuming content preservation). */
-  private[sources] def snapshotOp(spark: SparkSession, tableDir: String,
-      v: Long): String = {
+  // a published manifest never changes, so each is parsed once per JVM; the
+  // fingerprint catches a dropped-and-recreated table reusing a `v=<n>` path
+  private[graft] val manifestCache = new MetaCache[Manifest](65536)
+
+  private def cachedManifest(fs: FileSystem, f: Path, fp: String): Manifest =
+    manifestCache.get(fs.makeQualified(f).toString, fp)(readManifest(fs, f))
+
+  /** Every retained version with its parsed manifest, in version order —
+    * one listing plus one metadata call per version (the fingerprint, which
+    * is also the existence check); a cache hit reads no manifest bytes. */
+  private def manifests(spark: SparkSession, tableDir: String): Seq[(Long, Manifest)] = {
+    val (fs, root) = fsFor(spark, tableDir)
+    ls(fs, root)
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
+      .flatMap { st =>
+        val f = new Path(st.getPath, SnapshotFile)
+        val fp = MetaCache.fingerprint(fs, f)
+        if (fp == "absent") None
+        else Some(st.getPath.getName.stripPrefix("v=").toLong -> cachedManifest(fs, f, fp))
+      }.sortBy(_._1)
+  }
+
+  /** The retained MAIN-lineage versions with their manifests. Branch
+    * snapshots share the global `v=<n>` id space (publish allocation never
+    * collides) but are invisible to main reads, main DML bases, and the
+    * main changelog. */
+  private def mainManifests(spark: SparkSession, tableDir: String): Seq[(Long, Manifest)] =
+    manifests(spark, tableDir).filter(_._2.branch.isEmpty)
+
+  private def eraPath(tableDir: String, era: String) = s"$tableDir/data/$era"
+
+  /** Snapshot `v`'s parsed manifest. */
+  private[sources] def manifest(spark: SparkSession, tableDir: String, v: Long): Manifest = {
     val (fs, _) = fsFor(spark, tableDir)
     val f = new Path(s"$tableDir/v=$v", SnapshotFile)
-    val in = fs.open(f)
-    val bytes = try in.readAllBytes() finally in.close()
-    Option(new ObjectMapper().readTree(bytes).get("op"))
-      .map(_.asText()).getOrElse("append")
+    cachedManifest(fs, f, MetaCache.fingerprint(fs, f))
   }
 
-  // without this, every main-lineage resolution would re-read one snapshot
-  // manifest per retained version at PLAN time; the fingerprint catches a
-  // dropped-and-recreated table reusing the `v=<n>` path
-  private[graft] val branchFieldCache = new MetaCache[Option[String]](65536)
-
-  /** Each retained version with the branch it was committed to — None =
-    * the MAIN lineage. Branch snapshots share the global `v=<n>` id space
-    * (publish allocation never collides) but are invisible to main reads,
-    * main DML bases, and the main changelog. A cache hit costs no metadata
-    * call beyond the listing's own. */
-  private def versionBranches(spark: SparkSession,
-      tableDir: String): Seq[(Long, Option[String])] = {
-    val (fs, _) = fsFor(spark, tableDir)
-    versionFps(spark, tableDir).map { case (v, fp) =>
-      val f = new Path(s"$tableDir/v=$v", SnapshotFile)
-      v -> branchFieldCache.get(fs.makeQualified(f).toString, fp) {
-        val in = fs.open(f)
-        val bytes = try in.readAllBytes() finally in.close()
-        Option(new ObjectMapper().readTree(bytes).get("branch")).map(_.asText())
-      }
-    }
+  /** (eras, delete files) listed by snapshot `v`.
+    * (`private[sources]`: [[TableService]] reads fragmentation off it.) */
+  private[sources] def snapshot(spark: SparkSession, tableDir: String,
+      v: Long): (Seq[String], Seq[Del]) = {
+    val m = manifest(spark, tableDir, v)
+    (m.eras, m.dels)
   }
 
   private def branchVersions(spark: SparkSession, tableDir: String,
       name: String): Seq[Long] =
-    versionBranches(spark, tableDir).collect { case (v, b) if b.contains(name) => v }
+    manifests(spark, tableDir).collect { case (v, m) if m.branch.contains(name) => v }
 
   /** Data bytes of the LIVE latest main snapshot: its era directories plus
     * its delete masks — NOT the whole `data/` tree, which accumulates every
@@ -215,9 +213,9 @@ object VersionedHiddenTable {
     * of "the table" at. */
   def liveDataBytes(spark: SparkSession, tableDir: String): Long = {
     val (fs, _) = fsFor(spark, tableDir)
-    val vs = mainVersions(spark, tableDir)
-    require(vs.nonEmpty, s"no snapshots under $tableDir")
-    val (eras, dels) = snapshot(spark, tableDir, vs.max)
+    val ms = mainManifests(spark, tableDir)
+    require(ms.nonEmpty, s"no snapshots under $tableDir")
+    val Manifest(eras, dels, _, _, _) = ms.last._2
     (eras.map(e => FileStats.dataBytes(fs, new Path(eraPath(tableDir, e)))) ++
       dels.map(d => FileStats.dataBytes(fs, new Path(s"$tableDir/data/${d.dir}")))).sum
   }
@@ -225,7 +223,7 @@ object VersionedHiddenTable {
   /** Retained MAIN-lineage versions (what every unqualified read/DML/CDC
     * operation means by "the table"). */
   def mainVersions(spark: SparkSession, tableDir: String): Seq[Long] =
-    versionBranches(spark, tableDir).collect { case (v, None) => v }
+    mainManifests(spark, tableDir).map(_._1)
 
   private def mainLatest(spark: SparkSession, tableDir: String): Long = {
     val vs = mainVersions(spark, tableDir)
@@ -747,13 +745,8 @@ object VersionedHiddenTable {
       val (fs, _) = fsFor(spark, tableDir)
       val from = new Path(s"$tableDir/_staging/$token")
       require(fs.exists(from), s"no staged snapshot '$token' under $tableDir")
-      val (baseOpt, branchOpt) = {
-        val in = fs.open(new Path(from, SnapshotFile))
-        val bytes = try in.readAllBytes() finally in.close()
-        val node = new ObjectMapper().readTree(bytes)
-        (Option(node.get("base")).map(_.asLong()),
-          Option(node.get("branch")).map(_.asText()))
-      }
+      val staged = readManifest(fs, new Path(from, SnapshotFile))
+      val (baseOpt, branchOpt) = (staged.base, staged.branch)
       var v = versions(spark, tableDir).lastOption.fold(0L)(_ + 1)
       var attempts = 0
       while (attempts < 64) {
@@ -987,14 +980,25 @@ object VersionedHiddenTable {
     * columns only, each era pruned under its own spec, merge-on-read
     * deletes applied. */
   def read(spark: SparkSession, tableDir: String, version: Option[Long] = None): DataFrame = {
-    val vs = versions(spark, tableDir)
-    require(vs.nonEmpty, s"no snapshots under $tableDir")
-    // unqualified latest = the MAIN head; explicit versions time-travel to
-    // ANY retained snapshot, branch commits included
-    val v = version.getOrElse(mainLatest(spark, tableDir))
-    require(vs.contains(v), s"snapshot $v not retained (have ${vs.mkString(",")})")
-    val (eras, dels) = snapshot(spark, tableDir, v)
-    readEras(spark, tableDir, eras, dels)
+    val m = resolve(spark, tableDir, version)
+    readEras(spark, tableDir, m.eras, m.dels)
+  }
+
+  /** The manifest of snapshot `version`, off ONE listing: unqualified
+    * latest = the MAIN head; explicit versions time-travel to ANY retained
+    * snapshot, branch commits included. */
+  private def resolve(spark: SparkSession, tableDir: String,
+      version: Option[Long]): Manifest = {
+    val ms = manifests(spark, tableDir)
+    require(ms.nonEmpty, s"no snapshots under $tableDir")
+    val v = version.getOrElse {
+      val main = ms.filter(_._2.branch.isEmpty)
+      require(main.nonEmpty, s"no main-lineage snapshots under $tableDir")
+      main.last._1
+    }
+    val m = ms.toMap.get(v)
+    require(m.isDefined, s"snapshot $v not retained (have ${ms.map(_._1).mkString(",")})")
+    m.get
   }
 
   /** Row-level DELETE with snapshot semantics — the Iceberg `DELETE FROM`
@@ -1366,6 +1370,15 @@ object VersionedHiddenTable {
     } finally src.unpersist(blocking = false): Unit
   }
 
+  /** May the retained-snapshot step a -> b be skipped without diffing?
+    * True only on a PROOF of zero changes: reference-identical manifests,
+    * or an op=replace between ADJACENT versions (content preservation only
+    * holds relative to the immediate predecessor — when retention created a
+    * gap, the collapsed step may carry real changes from the vacuumed
+    * versions and must always diff). */
+  private def isNoopStep(a: Long, ma: Manifest, b: Long, mb: Manifest): Boolean =
+    (ma.eras == mb.eras && ma.dels == mb.dels) || (b == a + 1 && mb.op == "replace")
+
   /** Changelog (CDC) scan — Iceberg's changelog reads / Delta's change data
     * feed: the NET row-level changes between snapshot `fromVersion`
     * (exclusive) and `toVersion` (inclusive; latest by default), as the
@@ -1393,6 +1406,13 @@ object VersionedHiddenTable {
     * changes to a materialization of `from` reproduces `to` exactly — the
     * i11 registry query hash-gates that contract end to end.
     *
+    * Execution site: one-sided steps stay lazy scans. Two-sided steps net
+    * on the DRIVER, eagerly inside this call, when the eras and delete
+    * files they read total at most `spark.sql.autoBroadcastJoinThreshold`
+    * bytes as priced by their stats manifests (one scan job; the result is
+    * a local relation). Past the threshold, at -1, or with an unpriceable
+    * input they net in a distributed aggregate, lazily.
+    *
     * Plan-size bound: the feed unions one arm per retained step with REAL
     * changes — provably change-free steps (reference-identical manifests:
     * empty merges, self-rollbacks; adjacent compactions) are pruned at plan
@@ -1402,46 +1422,36 @@ object VersionedHiddenTable {
     * control: a year of hourly commits under `keepSnapshots`/`expireSnapshots`
     * retains what the policy says, and a consumer that has fallen further
     * behind than retention must rebuild from a snapshot read anyway. */
-  /** May the retained-snapshot step a -> b be skipped without diffing?
-    * True only on a PROOF of zero changes: reference-identical manifests,
-    * or an op=replace between ADJACENT versions (content preservation only
-    * holds relative to the immediate predecessor — when retention created a
-    * gap, the collapsed step may carry real changes from the vacuumed
-    * versions and must always diff). */
-  private def isNoopStep(spark: SparkSession, tableDir: String,
-      a: Long, b: Long): Boolean = {
-    val (erasA, delsA) = snapshot(spark, tableDir, a)
-    val (erasB, delsB) = snapshot(spark, tableDir, b)
-    (erasA == erasB && delsA == delsB) ||
-      (b == a + 1 && snapshotOp(spark, tableDir, b) == "replace")
-  }
-
   def changes(spark: SparkSession, tableDir: String, fromVersion: Long,
       toVersion: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, lit}
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     // the feed is a MAIN-lineage contract: branch commits are invisible to
     // it until a fast-forward publishes their content as a main snapshot —
     // so both endpoints must be main versions and the step range skips any
-    // interleaved branch snapshot ids
-    val vs = mainVersions(spark, tableDir)
+    // interleaved branch snapshot ids. Each manifest is resolved once here.
+    val ms = mainManifests(spark, tableDir)
+    val vs = ms.map(_._1)
     require(vs.nonEmpty, s"no snapshots under $tableDir")
     val to = toVersion.getOrElse(vs.max)
     require(vs.contains(fromVersion),
       s"main snapshot $fromVersion not retained (have ${vs.mkString(",")})")
     require(vs.contains(to), s"main snapshot $to not retained (have ${vs.mkString(",")})")
     require(fromVersion <= to, s"empty change range: $fromVersion > $to")
-    val range = vs.filter(v => v >= fromVersion && v <= to)
+    val range = ms.filter { case (v, _) => v >= fromVersion && v <= to }
     // ONE output schema for the whole feed: the canonical fold over every
     // era any snapshot in the range references — under add-only schema
     // evolution this covers each step (a narrower step's rows null-fill),
-    // and a post-rollback narrowing cannot drop an intermediate column
-    val canonical = canonicalSchema(spark, tableDir,
-      range.flatMap(v => snapshot(spark, tableDir, v)._1).distinct)
-    val empty = conform(read(spark, tableDir, Some(to)).limit(0), canonical)
-      .withColumn("_change_type", lit("insert"))
-      .withColumn("_commit_version", lit(0L))
+    // and a post-rollback narrowing cannot drop an intermediate column.
+    // The schema seed is an empty local relation: it plans no read.
+    val canonical = canonicalSchema(spark, tableDir, range.flatMap(_._2.eras).distinct)
+    val empty = spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      StructType(canonical.fields ++ Seq(StructField("_change_type", StringType, nullable = false),
+        StructField("_commit_version", LongType, nullable = false))))
     def hasData(e: String) =
       HiddenPartitioning.eraHasData(spark, eraPath(tableDir, e))
+    // the data directories a visible read of era `e` under `dels` scans
+    def eraReads(e: String, dels: Seq[Del]) = e +: dels.filter(_.over.contains(e)).map(_.dir)
     // one step = one retained-snapshot pair a -> b. Two step shapes are
     // provably change-free and skipped at PLAN time (the long-history
     // hygiene that keeps a year of hourly commits from planning a
@@ -1452,10 +1462,12 @@ object VersionedHiddenTable {
     // and a step whose manifests are reference-identical (an empty MERGE's
     // no-op commit, a rollback to the current state — same eras, same
     // delete files, zero possible diff).
+    final case class Step(b: Long, gone: Option[DataFrame], born: Option[DataFrame],
+        reads: Seq[String])
     val steps = range.sliding(2).collect {
-      case Seq(a, b) if !isNoopStep(spark, tableDir, a, b) =>
-        val (erasA, delsA) = snapshot(spark, tableDir, a)
-        val (erasB, delsB) = snapshot(spark, tableDir, b)
+      case Seq((a, ma), (b, mb)) if !isNoopStep(a, ma, b, mb) =>
+        val Manifest(erasA, delsA, _, _, _) = ma
+        val Manifest(erasB, delsB, _, _, _) = mb
         val setA = erasA.toSet
         val setB = erasB.toSet
         // carried-over eras whose delete coverage changed: rows a fresh
@@ -1539,63 +1551,158 @@ object VersionedHiddenTable {
             Some(parts.reduce(_.union(_)).drop(GFile, GPos))
           }
         }
+        // the delete files covering `e` in `to` but not in `from`
+        def delta(e: String, from: Seq[Del], to: Seq[Del]) = {
+          val before = from.filter(_.over.contains(e)).map(_.dir).toSet
+          to.filter(d => d.over.contains(e) && !before.contains(d.dir))
+        }
         val shared = erasA.filter(e => setB.contains(e) && hasData(e))
-        val masked = shared.flatMap { e =>
-          val before = delsA.filter(_.over.contains(e)).map(_.dir).toSet
-          coverageDelta(e, delsA,
-            delsB.filter(d => d.over.contains(e) && !before.contains(d.dir)))
-        }
-        val unmasked = shared.flatMap { e =>
-          val after = delsB.filter(_.over.contains(e)).map(_.dir).toSet
-          coverageDelta(e, delsB,
-            delsA.filter(d => d.over.contains(e) && !after.contains(d.dir)))
-        }
-        val gone = (erasA.filter(e => !setB.contains(e) && hasData(e))
-          .map(e => visibleEra(spark, tableDir, e, delsA, canonical)) ++ masked)
-          .reduceOption(_.union(_))
-        val born = (erasB.filter(e => !setA.contains(e) && hasData(e))
-          .map(e => visibleEra(spark, tableDir, e, delsB, canonical)) ++ unmasked)
-          .reduceOption(_.union(_))
-        def tag(df: DataFrame, t: String) = df
-          .withColumn("_change_type", lit(t))
-          .withColumn("_commit_version", lit(b))
-        (b, gone, born, tag _)
+        // (era, the delete set its visible rows read under, the delta files)
+        val maskedIn = shared.map(e => (e, delsA, delta(e, delsA, delsB)))
+        val unmaskedIn = shared.map(e => (e, delsB, delta(e, delsB, delsA)))
+        val goneEras = erasA.filter(e => !setB.contains(e) && hasData(e))
+        val bornEras = erasB.filter(e => !setA.contains(e) && hasData(e))
+        val gone = (goneEras.map(e => visibleEra(spark, tableDir, e, delsA, canonical)) ++
+          maskedIn.flatMap((coverageDelta _).tupled)).reduceOption(_.union(_))
+        val born = (bornEras.map(e => visibleEra(spark, tableDir, e, delsB, canonical)) ++
+          unmaskedIn.flatMap((coverageDelta _).tupled)).reduceOption(_.union(_))
+        val reads = goneEras.flatMap(eraReads(_, delsA)) ++ bornEras.flatMap(eraReads(_, delsB)) ++
+          (maskedIn ++ unmaskedIn).flatMap { case (e, under, fresh) =>
+            if (fresh.isEmpty) Nil else eraReads(e, under) ++ fresh.map(_.dir)
+          }
+        Step(b, gone, born, reads)
     }.toSeq
+    def tag(df: DataFrame, t: String, b: Long) = df
+      .withColumn("_change_type", lit(t))
+      .withColumn("_commit_version", lit(b))
     // One-sided steps (pure appends, pure deletes) need no aggregation at
     // all: their rows pass through tagged. Two-sided steps (CoW rewrites,
-    // rollbacks) each need the signed multiset diff — r13 fused the
-    // exceptAll PAIR into one +1/-1 aggregation per step (net > 0 ⇒ that
-    // many inserts, net < 0 ⇒ that many deletes, equal multiplicity
-    // vanishes); r14 (guide §2.4 again) fuses those per-step aggregations
-    // into ONE global aggregation keyed by (_commit_version, row): the
-    // grouping key gains the step id, so the per-step algebra is untouched
-    // row for row, but a history with N diffing steps now plans ONE
-    // Exchange + HashAggregate instead of N — on the registry histories
-    // that is 4-5 aggregate stages collapsed into one, and the same bytes
-    // shuffled through fewer stage barriers at any scale.
+    // overwrites, rollbacks) each need the signed multiset diff: one +1/-1
+    // weighting per step, netted per (row, _commit_version) — net > 0 ⇒
+    // that many inserts, net < 0 ⇒ that many deletes, equal multiplicity
+    // vanishes. Keying by the step id lets every diffing step of a history
+    // net in ONE aggregation instead of one per step.
     val direct = steps.collect {
-      case (_, Some(g), None, tag) => tag(g, "delete")
-      case (_, None, Some(bn), tag) => tag(bn, "insert")
+      case Step(b, Some(g), None, _) => tag(g, "delete", b)
+      case Step(b, None, Some(bn), _) => tag(bn, "insert", b)
     }
-    val twoSided = steps.collect { case (b, Some(g), Some(bn), _) =>
-      bn.withColumn("_w", lit(1L)).withColumn("_commit_version", lit(b))
-        .unionByName(g.withColumn("_w", lit(-1L)).withColumn("_commit_version", lit(b)))
+    val twoSided = steps.collect { case Step(b, Some(g), Some(bn), reads) =>
+      (bn.withColumn("_w", lit(1L)).withColumn("_commit_version", lit(b))
+        .unionByName(g.withColumn("_w", lit(-1L)).withColumn("_commit_version", lit(b))), reads)
     }
-    val fused = twoSided.reduceOption(_.unionByName(_)).map { u =>
-      import org.apache.spark.sql.functions.{explode, expr, when}
-      val cols = u.columns.toSeq.filterNot(Set("_w", "_commit_version"))
-      val net = u
-        .groupBy((cols :+ "_commit_version").map(col): _*)
-        .agg(org.apache.spark.sql.functions.sum(col("_w")).as("_net"))
-        .filter(col("_net") =!= 0L)
-      net.select(cols.map(col) ++ Seq(
-          explode(expr("sequence(1L, abs(_net))")).as("_rep"),
-          when(col("_net") > 0, lit("insert")).otherwise(lit("delete"))
-            .as("_change_type"),
-          col("_commit_version")): _*)
-        .drop("_rep")
+    val fused = twoSided.map(_._1).reduceOption(_.unionByName(_)).map { u =>
+      // steps whose inputs are priced (from their stats manifests) within
+      // the broadcast threshold net on the driver: one scan job instead of
+      // a shuffle and two aggregates. Larger or unpriceable inputs, and a
+      // threshold of -1, keep the distributed aggregate — the only form a
+      // corpus-sized step can run in.
+      val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+      val bounded = limit >= 0 && hashGroupable(u.schema) &&
+        manifestBytes(spark, tableDir, twoSided.flatMap(_._2)).exists(_ <= limit)
+      if (bounded) netOnDriver(spark, u) else netDistributed(u)
     }
     (empty +: (direct ++ fused.toSeq)).reduce(_.unionByName(_))
+  }
+
+  /** Bytes the data directories `dirs` (under `data/`) hold, summed from
+    * their stats manifests' per-file lengths (through the [[FileStats]]
+    * cache) — None when a directory has no manifest or one that predates
+    * length tracking: an unpriced input is never guessed small. */
+  private def manifestBytes(spark: SparkSession, tableDir: String,
+      dirs: Seq[String]): Option[Long] =
+    dirs.distinct.foldLeft(Option(0L)) { (acc, d) =>
+      for {
+        sum <- acc
+        m <- FileStats.stats(spark, s"$tableDir/data/$d")
+        if m.values.forall(_.len >= 0)
+      } yield sum + m.values.map(_.len).sum
+    }
+
+  /** Types whose values Spark's hash aggregate groups by the bytes of their
+    * (float-normalized) binary form — so the driver can group them the same
+    * way. Collated strings, maps, variants and user types group by other
+    * rules and stay on the distributed aggregate. */
+  private def hashGroupable(dt: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case s: StringType => s == StringType
+      case st: StructType => st.fields.forall(f => hashGroupable(f.dataType))
+      case ArrayType(et, _) => hashGroupable(et)
+      case BooleanType | ByteType | ShortType | IntegerType | LongType | FloatType |
+          DoubleType | BinaryType | DateType | TimestampType | TimestampNTZType |
+          NullType => true
+      case _: DecimalType | _: DayTimeIntervalType | _: YearMonthIntervalType => true
+      case _ => false
+    }
+  }
+
+  /** The signed multiset diff as a distributed aggregate over the weighted
+    * union `u` (source columns, `_w`, `_commit_version`). */
+  private def netDistributed(u: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, explode, expr, lit, sum, when}
+    val cols = u.columns.toSeq.filterNot(Set("_w", "_commit_version"))
+    u.groupBy((cols :+ "_commit_version").map(col): _*)
+      .agg(sum(col("_w")).as("_net"))
+      .filter(col("_net") =!= 0L)
+      .select(cols.map(col) ++ Seq(
+        explode(expr("sequence(1L, abs(_net))")).as("_rep"),
+        when(col("_net") > 0, lit("insert")).otherwise(lit("delete")).as("_change_type"),
+        col("_commit_version")): _*)
+      .drop("_rep")
+  }
+
+  /** The same diff on the driver, for a bounded `u`: ONE job collects the
+    * weighted rows, the weights net per (row, `_commit_version`) in a hash
+    * map, and the result is a local relation. Rows group exactly as the
+    * aggregate groups them — by the bytes of the row's binary form after
+    * Spark's own grouping-key normalization (`-0.0` → `0.0`, one NaN,
+    * nested fields too; binary by content) — and each output row carries
+    * those normalized values, as the aggregate's output does. */
+  private def netOnDriver(spark: SparkSession, u: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference,
+      BoundReference, JoinedRow, NamedExpression, UnsafeProjection, UnsafeRow}
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.graftbridge.GraftSqlBridge
+    import org.apache.spark.sql.types.{LongType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val in = u.queryExecution.analyzed
+    val data = in.output.filterNot(a => a.name == "_w" || a.name == "_commit_version")
+    val version = in.output.find(_.name == "_commit_version").get
+    val keyAttrs = data :+ version
+    val keys = keyAttrs.map(a => GraftSqlBridge.normalizeFloats(a) match {
+      case n: NamedExpression => n
+      case e => Alias(e, a.name)()
+    })
+    val weights = in.output.find(_.name == "_w").get
+    val qe = GraftSqlBridge.ofRows(spark, Project(keys :+ weights, in)).queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect())
+    val key = UnsafeProjection.create(
+      keyAttrs.indices.map(i => BoundReference(i, keyAttrs(i).dataType, nullable = true)))
+    val net = new java.util.HashMap[UnsafeRow, java.lang.Long]()
+    rows.foreach(r => net.merge(key(r).copy(), r.getLong(keyAttrs.size), (x, y) => x + y))
+    // output = the key's source columns, then `_change_type`, then the key's
+    // `_commit_version`
+    val n = data.size
+    val out = UnsafeProjection.create(
+      data.indices.map(i => BoundReference(i, data(i).dataType, nullable = true)) ++
+        Seq(BoundReference(n + 1, StringType, nullable = false),
+          BoundReference(n, LongType, nullable = false)))
+    val insert = InternalRow(UTF8String.fromString("insert"))
+    val delete = InternalRow(UTF8String.fromString("delete"))
+    val joined = new JoinedRow
+    val emitted = Seq.newBuilder[InternalRow]
+    net.forEach { (k, w) =>
+      if (w != 0L) {
+        val row = out(joined(k, if (w > 0) insert else delete)).copy()
+        (1L to math.abs(w.longValue)).foreach(_ => emitted += row)
+      }
+    }
+    val attrs = (data :+ AttributeReference("_change_type", StringType, nullable = false)() :+
+      version).map(a => AttributeReference(a.name, a.dataType, a.nullable)())
+    GraftSqlBridge.ofRows(spark, LocalRelation(attrs, emitted.result()))
   }
 
   // ---- named refs (Iceberg's tags) -------------------------------------------
@@ -1937,22 +2044,13 @@ object VersionedHiddenTable {
         val f = new Path(st.getPath, SnapshotFile)
         if (!fs.exists(f)) Nil
         else {
-          val in = fs.open(f)
-          val bytes = try in.readAllBytes() finally in.close()
-          val node = new ObjectMapper().readTree(bytes)
-          val eras = node.get("eras")
-          val eraNames = (0 until eras.size()).map(eras.get(_).asText())
-          val delNames = Option(node.get("dels")).toSeq.flatMap(ds =>
-            (0 until ds.size()).map(ds.get(_).get("dir").asText()))
-          eraNames ++ delNames
+          val m = readManifest(fs, f)
+          m.eras ++ m.dels.map(_.dir)
         }
       } catch { case scala.util.control.NonFatal(_) => Nil }
     }
-    val referenced = versions(spark, tableDir)
-      .flatMap { v =>
-        val (eras, dels) = snapshot(spark, tableDir, v)
-        eras ++ dels.map(_.dir)
-      }.toSet ++ stagedRefs
+    val referenced = manifests(spark, tableDir)
+      .flatMap { case (_, m) => m.eras ++ m.dels.map(_.dir) }.toSet ++ stagedRefs
     // an era/delete directory a concurrent writer is STILL FILLING is
     // unreferenced until its snapshot stages — the (deliberately unlocked)
     // data write would be gutted by a scheduled maintain running mid-write.
@@ -2006,11 +2104,7 @@ object VersionedHiddenTable {
     * merge-on-read delete files are still counted — [[compact]] reconciles. */
   def filesMeta(spark: SparkSession, tableDir: String,
       version: Option[Long] = None): org.apache.spark.sql.DataFrame = {
-    val vs = versions(spark, tableDir)
-    require(vs.nonEmpty, s"no snapshots under $tableDir")
-    val v = version.getOrElse(mainLatest(spark, tableDir))
-    require(vs.contains(v), s"snapshot $v not retained (have ${vs.mkString(",")})")
-    val rows = snapshotEras(spark, tableDir, v)
+    val rows = resolve(spark, tableDir, version).eras
       .filter(e => HiddenPartitioning.eraHasData(spark, eraPath(tableDir, e)))
       .flatMap { e =>
         val stats = FileStats.stats(spark, eraPath(tableDir, e)).getOrElse(
@@ -2043,11 +2137,10 @@ object VersionedHiddenTable {
     * produced it (Iceberg's snapshot-summary `operation`). */
   def snapshotsMeta(spark: SparkSession, tableDir: String): org.apache.spark.sql.DataFrame = {
     val (fs, _) = fsFor(spark, tableDir)
-    val rows = versions(spark, tableDir).map { v =>
+    val rows = manifests(spark, tableDir).map { case (v, m) =>
       val batches = ls(fs, new Path(s"$tableDir/v=$v")).map(_.getPath.getName)
         .collect { case n if n.startsWith("_batch-") => n.stripPrefix("_batch-") }
-      (v, snapshotEras(spark, tableDir, v), batches, snapshotOp(spark, tableDir, v),
-        snapshot(spark, tableDir, v)._2.map(_.dir))
+      (v, m.eras, batches, m.op, m.dels.map(_.dir))
     }
     val spark2 = spark
     import spark2.implicits._

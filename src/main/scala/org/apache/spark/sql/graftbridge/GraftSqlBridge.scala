@@ -5,8 +5,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Minimal `private[sql]` bridge: turning a hand-built [[LogicalPlan]] back
   * into a [[DataFrame]] (`Dataset.ofRows`) has no public API, so this one
-  * forwarding call lives inside the `org.apache.spark.sql` package scope.
-  * Nothing else in the repo reaches into Spark internals this way.
+  * forwarding call (and the few below) lives inside the
+  * `org.apache.spark.sql` package scope. Nothing else in the repo reaches
+  * into Spark internals this way.
   */
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -21,6 +22,14 @@ object GraftSqlBridge {
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression)
       : org.apache.spark.sql.Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
+
+  /** The grouping-key normalization Spark's aggregates apply
+    * (`NormalizeFloatingNumbers.normalize` is `private[sql]`): `-0.0`
+    * becomes `0.0` and every NaN one NaN, through nested structs and
+    * arrays; an expression with no floating value comes back unchanged. */
+  def normalizeFloats(e: org.apache.spark.sql.catalyst.expressions.Expression)
+      : org.apache.spark.sql.catalyst.expressions.Expression =
+    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
 
   /** Mark a batch frame streaming-legal for a V1 `Source.getBatch` result —
     * the micro-batch runner asserts `isStreaming`, and the only sanctioned

@@ -51,7 +51,7 @@ class BranchSpec extends AnyFunSuite with BeforeAndAfterAll {
       canon(h1.unionByName(h2).unionByName(h3)))
     // one atomic fast-forward lands everything on main
     val ffv = VersionedHiddenTable.fastForward(spark, t, "audit")
-    assert(VersionedHiddenTable.snapshotOp(spark, t, ffv) == "fast-forward")
+    assert(VersionedHiddenTable.manifest(spark, t, ffv).op == "fast-forward")
     assert(canon(VersionedHiddenTable.read(spark, t)) ==
       canon(h1.unionByName(h2).unionByName(h3)))
     // the changelog reports the landing as ONE net step

@@ -105,7 +105,7 @@ class CatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
       "the pre-delete snapshot stays readable")
     ev.filter(col("user_id") < 3).createOrReplaceTempView("cat_over")
     spark.sql(s"INSERT OVERWRITE $cat.t SELECT * FROM cat_over").collect(): Unit
-    assert(VersionedHiddenTable.snapshotOp(spark, t, 3L) == "overwrite",
+    assert(VersionedHiddenTable.manifest(spark, t, 3L).op == "overwrite",
       "INSERT OVERWRITE must publish an op=overwrite snapshot")
     assert(canon(spark.sql(s"SELECT * FROM $cat.t")) ==
       canon(ev.filter(col("user_id") < 3)))

@@ -67,6 +67,30 @@ class MaskAndOccSpec extends AnyFunSuite with BeforeAndAfterAll {
     }.sum
   }
 
+  /** Files read by the scans of every query `body` executes — counted off
+    * each finished execution's plan, so a scan that runs inside a call (a
+    * changelog step netted on the driver) counts as well as one that runs
+    * when the returned frame is collected. */
+  private def scannedFiles(body: => Unit): Long = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan): Unit
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq.map(p => flatten(p).collect {
+      case s: FileSourceScanExec => s.metrics("numFiles").value
+    }.sum).sum
+  }
+
   test("masked read: an era provably outside the mask's key box skips its anti join") {
     val t = tmp("eraskip")
     val ev = events
@@ -149,9 +173,11 @@ class MaskAndOccSpec extends AnyFunSuite with BeforeAndAfterAll {
       "the merge step must net exactly the batch's old images out, new in")
     // the coverage pass probes only the mask's in-box files: the commit's
     // changelog read is priced by the 5-key mask, not the compacted table
-    val scanned = totalFiles(VersionedHiddenTable.changes(spark, t, v - 1, Some(v)))
+    val scanned = scannedFiles(
+      VersionedHiddenTable.changes(spark, t, v - 1, Some(v)).collect(): Unit)
     val all = totalFiles(VersionedHiddenTable.read(spark, t, Some(1L)))
     assert(all > 8, s"precondition: clustering must yield many files, got $all")
+    assert(scanned > 0, "the step's scans must be counted wherever they run")
     assert(scanned * 2 <= all,
       s"a narrow commit's changelog must not scan the table: $scanned of $all files")
   }

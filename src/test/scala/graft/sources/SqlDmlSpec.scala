@@ -57,7 +57,7 @@ class SqlDmlSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(canon(spark.sql(s"SELECT * FROM $cat.db.sql_t")) ==
       canon(VersionedHiddenTable.read(spark, apiT)),
       "SQL UPDATE must land exactly the Scala update's content")
-    assert(VersionedHiddenTable.snapshotOp(spark, sqlT, 2L) == "update")
+    assert(VersionedHiddenTable.manifest(spark, sqlT, 2L).op == "update")
     assert(canon(spark.sql(s"SELECT * FROM $cat.db.sql_t VERSION AS OF 1")) ==
       canon(events), "pre-update snapshot stays readable")
     // the changelog nets the SQL update as its deletes + inserts
@@ -121,7 +121,7 @@ class SqlDmlSpec extends AnyFunSuite with BeforeAndAfterAll {
       "SQL MERGE must land exactly the Scala merge's content")
     assert(VersionedHiddenTable.mainVersions(spark, sqlT) == Seq(0L, 1L, 2L),
       "one MERGE = one snapshot")
-    assert(VersionedHiddenTable.snapshotOp(spark, sqlT, 2L) == "merge")
+    assert(VersionedHiddenTable.manifest(spark, sqlT, 2L).op == "merge")
   }
 
   test("MERGE clause semantics: conditional DELETE + INSERT, untouched non-admitted rows") {

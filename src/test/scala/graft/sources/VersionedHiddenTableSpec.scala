@@ -807,6 +807,113 @@ class VersionedHiddenTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(VersionedHiddenTable.changes(spark, t, 1L, Some(1L)).isEmpty)
   }
 
+  /** Every node of an executed plan, through the adaptive wrappers. */
+  private def planNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val children = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children
+    }
+    p +: children.flatMap(planNodes)
+  }
+
+  /** A rendering that tells apart every value the two diff paths could
+    * emit differently: floating values by their raw bits (so `-0.0` and
+    * `0.0`, or two NaN payloads, differ), binary by content. */
+  private def render(v: Any): String = v match {
+    case null => "null"
+    case d: Double => f"d${java.lang.Double.doubleToRawLongBits(d)}%x"
+    case f: Float => f"f${java.lang.Float.floatToRawIntBits(f)}%x"
+    case b: Array[Byte] => b.map(x => f"$x%02x").mkString("b", "", "")
+    case r: org.apache.spark.sql.Row => r.toSeq.map(render).mkString("(", ",", ")")
+    case s: scala.collection.Seq[_] => s.map(render).mkString("[", ",", "]")
+    case other => other.toString
+  }
+
+  test("changes: a bounded two-sided step nets on the driver exactly as the distributed aggregate") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val t = tmp("cdc-driver")
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("x", DoubleType),
+      StructField("dec", DecimalType(20, 4)), StructField("bin", BinaryType),
+      StructField("s", StructType(Seq(StructField("y", DoubleType), StructField("tag", StringType))))))
+    def dec(v: String) = new java.math.BigDecimal(v).setScale(4)
+    val otherNaN = java.lang.Double.longBitsToDouble(0x7ff8000000000001L)
+    def frame(rows: Row*) =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).repartition(2)
+    val nulls = Row(null, null, null, null, null)
+    VersionedHiddenTable.create(spark, t, frame(                                        // v0
+      Row(1L, 0.0, dec("1.5"), Array[Byte](1, 2), Row(0.0, "a")),
+      Row(1L, 0.0, dec("1.5"), Array[Byte](1, 2), Row(0.0, "a")),
+      Row(2L, Double.NaN, null, null, null),
+      Row(3L, 1.0, dec("2"), Array[Byte](3), Row(Double.NaN, "b")),
+      Row(4L, -0.0, dec("3"), Array[Byte](), Row(-0.0, "c")),
+      nulls), Nil)
+    VersionedHiddenTable.overwrite(spark, t, frame(                                     // v1
+      Row(1L, -0.0, dec("1.5"), Array[Byte](1, 2), Row(-0.0, "a")), // one of two copies left
+      Row(2L, otherNaN, null, null, null),                          // same group: NaN
+      Row(3L, 1.0, dec("2"), Array[Byte](3), Row(otherNaN, "b")),   // same group: nested NaN
+      Row(4L, 0.0, dec("3"), Array[Byte](), Row(0.0, "c")),         // same group: -0.0 = 0.0
+      Row(5L, 2.5, dec("9.9999"), Array[Byte](-1), Row(1.0, null)),
+      Row(6L, -0.0, dec("0.0001"), Array[Byte](0), Row(-0.0, "z")), // emitted normalized
+      nulls, nulls, nulls))
+    def feed(): (Seq[String], DataFrame) = {
+      val ch = VersionedHiddenTable.changes(spark, t, 0L)
+      (ch.collect().map(render).sorted.toSeq, ch)
+    }
+    val (onDriver, local) = feed()
+    assert(local.queryExecution.optimizedPlan.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      "a step under the broadcast threshold must net on the driver")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val distributed = try feed()._1 finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert(onDriver == distributed,
+      s"the driver diff must emit the aggregate's multiset:\n$onDriver\nvs\n$distributed")
+    val types = local.collect().map(r => r.getAs[Any]("id") -> r.getAs[String]("_change_type")).toSeq
+    assert(types.sortBy(_.toString) == Seq(1L -> "delete", 5L -> "insert", 6L -> "insert",
+      (null, "insert"), (null, "insert")).sortBy(_.toString),
+      s"-0.0/NaN rows must group with 0.0/NaN rows and duplicates must net: $types")
+  }
+
+  test("changes: a bounded two-sided step costs one job; past the threshold it plans the aggregate") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    val t = tmp("cdc-jobs")
+    val base = spark.range(40).select(col("id"), (col("id") % 7).cast("double").as("x"))
+    VersionedHiddenTable.create(spark, t, base, Nil)                                // v0
+    VersionedHiddenTable.overwrite(spark, t,
+      base.filter(col("id") > 5L).union(spark.range(100, 104).select(col("id"),
+        lit(0.5).as("x"))))                                                          // v1
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    def jobsOf(body: => Unit): Int = {
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+      val j0 = jobs.get
+      body
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+      jobs.get - j0
+    }
+    // the first call warms the per-session frame and stats caches
+    assert(VersionedHiddenTable.changes(spark, t, 0L).count() == 10)
+    spark.sparkContext.addSparkListener(listener)
+    try assert(jobsOf(VersionedHiddenTable.changes(spark, t, 0L).collect(): Unit) == 1,
+      "a bounded overwrite step: one scan job, no shuffle stage")
+    finally spark.sparkContext.removeSparkListener(listener)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val ch = VersionedHiddenTable.changes(spark, t, 0L)
+      assert(ch.count() == 10)
+      ch.collect(): Unit
+      assert(planNodes(ch.queryExecution.executedPlan).exists(_.isInstanceOf[HashAggregateExec]),
+        "a threshold of -1 keeps the distributed aggregate")
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
   test("publish skips a foreign v=<n> directory instead of nesting into it") {
     val t = tmp("race")
     val ev = events
