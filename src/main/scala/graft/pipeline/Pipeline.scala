@@ -1,10 +1,11 @@
 package graft.pipeline
 
-import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
+import org.apache.spark.sql.types._
 
 /** The full reference-parity DAG: 10 source + 16 stage/projection-shared +
   * 12 per-format + 4 mart models = the reference's 40 `dbt` models and two
@@ -98,9 +99,10 @@ object Pipeline {
     * pick candidate either way. The ids ride in one array literal, which
     * generated code reads by reference, so the code is the same for every
     * drafted set. An `isin` list of 10 or fewer values is written into the
-    * generated code instead, and each new drafted set cost a Janino compile. */
+    * generated code instead, and each new drafted set cost a Janino compile.
+    * The literal is an `array<string>` for every set, the empty one too. */
   def withDraftedFlag(rankings: DataFrame, draftedIds: Set[String]): DataFrame =
-    rankings.withColumn("drafted", array_contains(typedLit(draftedIds.toSeq), col("id")))
+    rankings.withColumn("drafted", array_contains(lit(draftedIds.toArray), col("id")))
 
   /** app/app.py:596-625 — the interactive filter battery, engine-side.
     * Position filter is any-substring-match over the multi-position string
@@ -108,25 +110,23 @@ object Pipeline {
     * name search is case-insensitive contains (null names excluded, the
     * pandas `na=False` behavior); draft filter keeps drafted or undrafted
     * rows. Each filter applies only when its column exists, mirroring the
-    * app's `'col' in columns` guards. */
+    * app's `'col' in columns` guards. The active filters form one `Filter`,
+    * so the wide flagged plan is analysed once per request. */
   def filterRankings(df: DataFrame,
       positions: Seq[String] = Nil, teams: Seq[String] = Nil,
       statuses: Seq[String] = Nil, nameSearch: Option[String] = None,
       draftedOnly: Option[Boolean] = None): DataFrame = {
-    def has(c: String) = df.columns.contains(c)
-    var out = df
-    if (positions.nonEmpty && has("pos"))
-      out = out.filter(positions.map(p =>
-        col("pos").cast("string").contains(p)).reduce(_ || _))
-    if (teams.nonEmpty && has("team"))
-      out = out.filter(col("team").isin(teams: _*))
-    if (statuses.nonEmpty && has("projected_opening_day_status"))
-      out = out.filter(col("projected_opening_day_status").isin(statuses: _*))
-    nameSearch.withFilter(_ => has("name")).foreach(q =>
-      out = out.filter(lower(col("name")).contains(q.toLowerCase)))
-    draftedOnly.withFilter(_ => has("drafted")).foreach(d =>
-      out = out.filter(col("drafted") === d))
-    out
+    val has = df.columns.toSet
+    val predicates = Seq(
+      Option.when(positions.nonEmpty && has("pos"))(positions.map(p =>
+        col("pos").cast("string").contains(p)).reduce(_ || _)),
+      Option.when(teams.nonEmpty && has("team"))(col("team").isin(teams: _*)),
+      Option.when(statuses.nonEmpty && has("projected_opening_day_status"))(
+        col("projected_opening_day_status").isin(statuses: _*)),
+      nameSearch.filter(_ => has("name")).map(q =>
+        lower(col("name")).contains(q.toLowerCase)),
+      draftedOnly.filter(_ => has("drafted")).map(d => col("drafted") === d)).flatten
+    predicates.reduceOption(_ && _).fold(df)(df.filter)
   }
 
   /** app/app.py:744-786 — the mock-draft pick model: normal pdf centered on
@@ -137,29 +137,47 @@ object Pipeline {
     * `raw_prob` and `prob` appended, as a local DataFrame.
     *
     * Serving scale: the candidates are bounded by one league's ADP list, so
-    * one collect brings them to the driver and the model runs there, as the
-    * app runs it in pandas. As Spark columns, the per-pick `currentPick`
-    * literal is written into the generated code, so every pick would compile
-    * its stages anew. The math is `StrictMath`, as in Spark's `Exp` and
-    * `Pow`, so each `raw_prob` is the value the column form computes. */
+    * one job brings them to the driver as Catalyst rows and the model runs
+    * there, as the app runs it in pandas. As Spark columns, the per-pick
+    * `currentPick` literal is written into the generated code, so every pick
+    * would compile its stages anew. `adp`, `min_pick` and `max_pick` may be
+    * of any numeric type, each read as `Number.doubleValue` reads it. The
+    * math is `StrictMath`, as in Spark's `Exp` and `Pow`, so each `raw_prob`
+    * is the value the column form computes. */
   def draftPickProbabilities(players: DataFrame, currentPick: Int): DataFrame = {
     // the rankings mart LEFT-joins ADP, so undrafted players carry null
     // adp/min_pick/max_pick; the app's model is defined only over
     // ADP-listed players, so the rest are left out explicitly
     val listed = players.filter(
       col("adp").isNotNull && col("min_pick").isNotNull && col("max_pick").isNotNull)
-    val rows = listed.collect()
-    val Seq(adp, lo, hi) = Seq("adp", "min_pick", "max_pick").map(listed.schema.fieldIndex)
-    def num(r: Row, i: Int) = r.getAs[Number](i).doubleValue
-    val raw = rows.map(r => rawProb(currentPick.toDouble, num(r, adp), num(r, lo), num(r, hi)))
+    val Seq(adp, lo, hi) = Seq("adp", "min_pick", "max_pick").map(asDouble(listed.schema, _))
+    val rows = GraftSqlBridge.collectRows(listed)
+    val raw = rows.map(r => rawProb(currentPick.toDouble, adp(r), lo(r), hi(r)))
     val total = raw.sum
-    val out = rows.zip(raw).map { case (r, w) => Row.fromSeq(r.toSeq :+ w :+ w / total) }
-    players.sparkSession.createDataFrame(out.toSeq.asJava,
-      listed.schema.add("raw_prob", DoubleType).add("prob", DoubleType))
+    val out = rows.zip(raw).map { case (r, w) =>
+      new JoinedRow(r, new GenericInternalRow(Array[Any](w, w / total))): InternalRow
+    }
+    GraftSqlBridge.localFrame(players.sparkSession,
+      listed.schema.add("raw_prob", DoubleType).add("prob", DoubleType), out.toSeq)
+  }
+
+  /** A reader of numeric column `name` of a Catalyst row as a double. */
+  private def asDouble(schema: StructType, name: String): InternalRow => Double = {
+    val i = schema.fieldIndex(name)
+    schema(i).dataType match {
+      case ByteType => _.getByte(i).toDouble
+      case ShortType => _.getShort(i).toDouble
+      case IntegerType => _.getInt(i).toDouble
+      case LongType => _.getLong(i).toDouble
+      case FloatType => _.getFloat(i).toDouble
+      case DoubleType => _.getDouble(i)
+      case d: DecimalType => _.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.doubleValue
+      case t => throw new IllegalArgumentException(s"$name must be numeric, not ${t.sql}")
+    }
   }
 
   /** The app's unnormalized pick weight of one player at pick `cp`. */
-  private def rawProb(cp: Double, adp: Double, lo: Double, hi: Double): Double = {
+  private[pipeline] def rawProb(cp: Double, adp: Double, lo: Double, hi: Double): Double = {
     val base = StrictMath.exp(-0.5 * StrictMath.pow((cp - adp) / math.max((hi - lo) / 3.0, 3.0), 2))
     if (cp < lo) { if (lo - cp <= 2) base * 0.1 else 0.0001 }
     else if (cp > hi) base * (1 + (cp - hi) * 2) * 10
@@ -173,24 +191,27 @@ object Pipeline {
     * candidate has a positive probability.
     *
     * Serving scale, like [[draftPickProbabilities]]: the walk runs on the
-    * driver over one collect, which runs no job when `probs` is that
-    * method's local result; as a Spark window, the per-pick draw would be a
-    * literal in the generated code and compile anew. Ids compare by their
-    * UTF-8 bytes, nulls first, as Spark sorts strings. */
+    * driver over Catalyst rows, read without planning when `probs` is that
+    * method's local result and collected in one job otherwise; as a Spark
+    * window, the per-pick draw would be a literal in the generated code and
+    * compile anew. Ids compare by their UTF-8 bytes, nulls first, as Spark
+    * sorts strings. */
   def sampleDraftPick(probs: DataFrame, seed: Long): DataFrame = {
     val u = new scala.util.Random(seed).nextDouble()
     val Seq(id, p) = Seq("id", "prob").map(probs.schema.fieldIndex)
+    val rows = GraftSqlBridge.localRows(probs)
+      .getOrElse(GraftSqlBridge.collectRows(probs).toSeq)
     // Two inverse-CDF boundary rules np.random.choice honors that a naive
     // first `cum >= u` does not: (a) a zero-probability row shares its
     // predecessor's cum and must never be picked, so prob > 0 first; (b) fp
     // rounding can make the final cum land just UNDER 1.0, and a draw above
     // it falls back to the last row, so `u` is clamped to the final cum (the
     // first row to reach it: a trailing row too small to move cum never wins)
-    val walk = probs.collect()
+    val walk = rows
       .filter(r => !r.isNullAt(p) && r.getDouble(p) > 0)
-      .sortBy(r => Option(r.getString(id)).map(UTF8String.fromString))
+      .sortBy(r => Option.unless(r.isNullAt(id))(r.getUTF8String(id)))
     val cum = walk.scanLeft(0.0)(_ + _.getDouble(p)).tail
     val pick = cum.lastOption.map(last => walk(cum.indexWhere(_ >= math.min(u, last))))
-    probs.sparkSession.createDataFrame(pick.toSeq.asJava, probs.schema)
+    GraftSqlBridge.localFrame(probs.sparkSession, probs.schema, pick.toSeq)
   }
 }

@@ -210,14 +210,18 @@ object VersionedHiddenTable {
     * era ever written (one op=overwrite era per pipeline run, plus retired
     * masks) and would over-count a dimension-sized table off its broadcast
     * hint after enough runs. This is the size a planner should price a read
-    * of "the table" at. */
+    * of "the table" at. Summed from the directories' stats manifests when
+    * each one tracks file lengths, by listing them otherwise: the same
+    * bytes either way, as a manifest holds every scan-visible file. */
   def liveDataBytes(spark: SparkSession, tableDir: String): Long = {
-    val (fs, _) = fsFor(spark, tableDir)
     val ms = mainManifests(spark, tableDir)
     require(ms.nonEmpty, s"no snapshots under $tableDir")
     val Manifest(eras, dels, _, _, _) = ms.last._2
-    (eras.map(e => FileStats.dataBytes(fs, new Path(eraPath(tableDir, e)))) ++
-      dels.map(d => FileStats.dataBytes(fs, new Path(s"$tableDir/data/${d.dir}")))).sum
+    val dirs = eras ++ dels.map(_.dir)
+    manifestBytes(spark, tableDir, dirs).getOrElse {
+      val (fs, _) = fsFor(spark, tableDir)
+      dirs.map(d => FileStats.dataBytes(fs, new Path(s"$tableDir/data/$d"))).sum
+    }
   }
 
   /** Retained MAIN-lineage versions (what every unqualified read/DML/CDC
@@ -1598,7 +1602,7 @@ object VersionedHiddenTable {
       // corpus-sized step can run in.
       val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
       val bounded = limit >= 0 && hashGroupable(u.schema) &&
-        manifestBytes(spark, tableDir, twoSided.flatMap(_._2)).exists(_ <= limit)
+        manifestBytes(spark, tableDir, twoSided.flatMap(_._2).distinct).exists(_ <= limit)
       if (bounded) netOnDriver(spark, u) else netDistributed(u)
     }
     (empty +: (direct ++ fused.toSeq)).reduce(_.unionByName(_))
@@ -1606,11 +1610,12 @@ object VersionedHiddenTable {
 
   /** Bytes the data directories `dirs` (under `data/`) hold, summed from
     * their stats manifests' per-file lengths (through the [[FileStats]]
-    * cache) — None when a directory has no manifest or one that predates
-    * length tracking: an unpriced input is never guessed small. */
+    * cache), a directory once per mention — None when a directory has no
+    * manifest or one that predates length tracking: an unpriced input is
+    * never guessed small. */
   private def manifestBytes(spark: SparkSession, tableDir: String,
       dirs: Seq[String]): Option[Long] =
-    dirs.distinct.foldLeft(Option(0L)) { (acc, d) =>
+    dirs.foldLeft(Option(0L)) { (acc, d) =>
       for {
         sum <- acc
         m <- FileStats.stats(spark, s"$tableDir/data/$d")
@@ -1663,7 +1668,6 @@ object VersionedHiddenTable {
     import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference,
       BoundReference, JoinedRow, NamedExpression, UnsafeProjection, UnsafeRow}
     import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
-    import org.apache.spark.sql.execution.SQLExecution
     import org.apache.spark.sql.graftbridge.GraftSqlBridge
     import org.apache.spark.sql.types.{LongType, StringType}
     import org.apache.spark.unsafe.types.UTF8String
@@ -1676,9 +1680,8 @@ object VersionedHiddenTable {
       case e => Alias(e, a.name)()
     })
     val weights = in.output.find(_.name == "_w").get
-    val qe = GraftSqlBridge.ofRows(spark, Project(keys :+ weights, in)).queryExecution
-    val rows = SQLExecution.withNewExecutionId(qe, Some("collect"))(
-      qe.executedPlan.executeCollect())
+    val rows = GraftSqlBridge.collectRows(
+      GraftSqlBridge.ofRows(spark, Project(keys :+ weights, in)))
     val key = UnsafeProjection.create(
       keyAttrs.indices.map(i => BoundReference(i, keyAttrs(i).dataType, nullable = true)))
     val net = new java.util.HashMap[UnsafeRow, java.lang.Long]()

@@ -1,7 +1,12 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.types.StructType
 
 /** Minimal `private[sql]` bridge: turning a hand-built [[LogicalPlan]] back
   * into a [[DataFrame]] (`Dataset.ofRows`) has no public API, so this one
@@ -39,4 +44,37 @@ object GraftSqlBridge {
   def asStreaming(spark: SparkSession, df: DataFrame): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(df.queryExecution.toRdd, df.schema, isStreaming = true)
+
+  /** The rows of a driver-bounded `df` as Catalyst rows, in ONE job: the
+    * executed plan runs under one SQL execution id, as `Dataset.collect`
+    * runs it, so listeners and tracers see one execution and one job. No
+    * row deserializer is generated, and the job's task function is the
+    * small [[CopyRows]] object, so the closure cleaner parses no large
+    * class file (as it does for `RDD.collect`'s closure). */
+  def collectRows(df: DataFrame): Array[InternalRow] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      val rdd = qe.executedPlan.execute()
+      rdd.sparkContext.runJob(rdd, CopyRows).flatten
+    }
+  }
+
+  // Scans reuse one row object per partition, so each row is copied
+  private object CopyRows
+      extends ((TaskContext, Iterator[InternalRow]) => Array[InternalRow]) with Serializable {
+    def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Array[InternalRow] =
+      rows.map(_.copy()).toArray
+  }
+
+  /** The rows of `df` when its plan is a local relation, read without
+    * planning it, in `df.schema`'s column order; None for any other plan. */
+  def localRows(df: DataFrame): Option[Seq[InternalRow]] = df.queryExecution.logical match {
+    case l: LocalRelation if !l.isStreaming => Some(l.data)
+    case _ => None
+  }
+
+  /** A local relation over Catalyst `rows` of `schema`, built with no row
+    * serializer: the counterpart of [[localRows]]. */
+  def localFrame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 }

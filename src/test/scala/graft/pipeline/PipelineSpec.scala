@@ -215,6 +215,15 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val team = mart.select("team").first().getString(0)
     assert(Pipeline.filterRankings(mart, teams = Seq(team)).count() ==
       mart.filter(col("team") === team).count())
+    // the whole battery is one Filter above the flagged frame
+    def filters(df: DataFrame) = df.queryExecution.analyzed.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f
+    }.size
+    val battery = Pipeline.filterRankings(flagged, positions = Seq("1B", "SS"),
+      teams = Seq(team), nameSearch = Some("a"), draftedOnly = Some(false))
+    assert(battery.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Filter] &&
+      filters(battery) == filters(flagged) + 1, "the battery plans one Filter")
   }
 
   test("mock-draft pick model: normalized urgency-weighted pdf, deterministic sample") {
@@ -289,6 +298,26 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  // The pick model as it stood before it read Catalyst rows: the oracle of
+  // how a numeric `adp`/`min_pick`/`max_pick` of any type reads as a double.
+  private object RowPick {
+    def probabilities(players: DataFrame, currentPick: Int): DataFrame = {
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.types.DoubleType
+      val listed = players.filter(
+        col("adp").isNotNull && col("min_pick").isNotNull && col("max_pick").isNotNull)
+      val rows = listed.collect()
+      val Seq(adp, lo, hi) = Seq("adp", "min_pick", "max_pick").map(listed.schema.fieldIndex)
+      def num(r: Row, i: Int) = r.getAs[Number](i).doubleValue
+      val raw = rows.map(r =>
+        Pipeline.rawProb(currentPick.toDouble, num(r, adp), num(r, lo), num(r, hi)))
+      val total = raw.sum
+      val out = rows.zip(raw).map { case (r, w) => Row.fromSeq(r.toSeq :+ w :+ w / total) }
+      players.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*),
+        listed.schema.add("raw_prob", DoubleType).add("prob", DoubleType))
+    }
+  }
+
   private def pickedId(picked: DataFrame): Option[String] =
     picked.select("id").collect().headOption.map(_.getString(0))
 
@@ -344,6 +373,87 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(none.isEmpty && none.columns.takeRight(2).toSeq == Seq("raw_prob", "prob"))
     val picked = Pipeline.sampleDraftPick(none, 42)
     assert(picked.isEmpty && picked.columns.toSeq == none.columns.toSeq)
+  }
+
+  test("pick model reads every numeric ADP type as the Row path did, bit for bit") {
+    import org.apache.spark.sql.types._
+    // fractional ADPs inside the byte range; an integral type truncates them
+    val base = spark.range(0, 40, 1, 3).select(
+      concat(lit("p"), col("id")).as("id"), col("id").cast("string").as("name"),
+      (col("id") * 2.7 + 0.1).as("adp"), (col("id") * 2.7 - 2.3).as("min_pick"),
+      (col("id") * 2.7 + 4.9).as("max_pick"))
+    def bits(df: DataFrame) = df.select("id", "raw_prob", "prob").collect()
+      .map(r => r.getString(0) -> (java.lang.Double.doubleToRawLongBits(r.getDouble(1)),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).toMap
+    for (t <- Seq(ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType,
+        DecimalType(6, 2), DecimalType(38, 20))) {
+      val players = base.select(col("id"), col("name"), col("adp").cast(t).as("adp"),
+        col("min_pick").cast(t).as("min_pick"), col("max_pick").cast(t).as("max_pick"))
+      for (cp <- Seq(1, 17, 60, 130)) {
+        val got = Pipeline.draftPickProbabilities(players, cp)
+        val want = RowPick.probabilities(players, cp)
+        assert(got.schema == want.schema, s"$t pick $cp: schema")
+        assert(bits(got) == bits(want), s"$t pick $cp: raw_prob/prob bits")
+      }
+    }
+    val text = base.withColumn("adp", col("adp").cast("string"))
+    assert(intercept[IllegalArgumentException](
+      Pipeline.draftPickProbabilities(text, 1)).getMessage.contains("adp"))
+  }
+
+  test("sampler over a non-local frame picks what it picks over the same local rows") {
+    import org.apache.spark.sql.graftbridge.GraftSqlBridge
+    val sp = spark; import sp.implicits._
+    def local(df: DataFrame) =
+      spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    def parquet(df: DataFrame, tag: String) = {
+      val p = Files.createTempDirectory(s"graft-probs-$tag").toString + "/t"
+      df.repartition(3).write.parquet(p)
+      spark.read.parquet(p)
+    }
+    def samePicks(board: DataFrame, tag: String, seeds: Seq[Long]): Unit = {
+      val onDisk = parquet(board, tag)
+      val lc = local(onDisk)
+      assert(GraftSqlBridge.localRows(lc).isDefined && GraftSqlBridge.localRows(onDisk).isEmpty,
+        "precondition: one local and one non-local input")
+      for (seed <- seeds; nonLocal <- Seq(onDisk, onDisk.filter(col("prob") >= 0.0)))
+        assert(pickedId(Pipeline.sampleDraftPick(nonLocal, seed)) ==
+          pickedId(Pipeline.sampleDraftPick(lc, seed)), s"$tag seed $seed")
+    }
+    val mart = out("mart_preseason_overall_rankings_oc")
+    for (cp <- Seq(1, 25, 90))
+      samePicks(Pipeline.draftPickProbabilities(mart, cp), s"mart-$cp",
+        (0L until 8L).map(_ * 1000 + cp))
+    // the boundary-rules board: zero-probability rows, a draw past the
+    // total (0.99), ids whose UTF-8 byte order differs from UTF-16 order
+    val board = Seq(("a", 0.2), ("b", 0.0), ("c", 0.19), ("d", 0.3),
+      ("Ａ", 0.15), ("😀", 0.15), ("😀😀", 0.0)).toDF("id", "prob")
+    val high = Iterator.from(0).map(_.toLong)
+      .find(s => new scala.util.Random(s).nextDouble() > 0.99).get
+    samePicks(board, "boundary", (0L until 40L) :+ high)
+    assert(pickedId(Pipeline.sampleDraftPick(parquet(board, "high"), high)) == Some("😀"))
+  }
+
+  test("collectRows returns the rows Dataset.collect returns, every type, every partition") {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.graftbridge.GraftSqlBridge
+    val id = col("id")
+    def orNull(c: org.apache.spark.sql.Column, every: Int) =
+      when(id % every === 0, lit(null)).otherwise(c)
+    val df = spark.range(0, 300, 1, 4).select(id,
+      orNull(id * 3, 7).as("n"),
+      orNull(concat(lit("s"), id.cast("string")), 5).as("s"),
+      orNull((id / 7).cast("decimal(20,6)"), 6).as("dec"),
+      orNull((id * 11).cast("decimal(38,10)"), 9).as("wide"),
+      orNull(id.cast("string").cast("binary"), 4).as("bin"),
+      orNull(struct((id / 2).as("x"), orNull(id.cast("string"), 3).as("t")), 8).as("st"),
+      orNull(array(id, orNull(id + 1, 2)), 10).as("arr"),
+      orNull(map(id.cast("string"), orNull(id / 3, 4)), 11).as("m"))
+    val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+    val got = GraftSqlBridge.collectRows(df)
+      .map(toRow(_).asInstanceOf[org.apache.spark.sql.Row]).sortBy(_.getLong(0)).toSeq
+    val want = df.collect().sortBy(_.getLong(0)).toSeq
+    assert(got.size == 300 && got == want)
   }
 
   test("drafted flag keeps isin's answers: empty set, 1-12 ids, null id, ids outside the mart") {

@@ -194,4 +194,37 @@ class PositionalDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
       .unionByName(ev.filter(col("user_id") >= 8L))
     assert(canon(VersionedHiddenTable.read(spark, t)) == canon(expect))
   }
+
+  test("live data bytes from the stats manifests equal the listing, before and after maintain") {
+    val t = tmp("live")
+    val ev = events
+    VersionedHiddenTable.create(spark, t,
+      ev.filter(col("ts") < "2024-01-16"), Seq(HiddenPartitioning.DayT("ts")))
+    assert(VersionedHiddenTable.append(spark, t,
+      ev.filter(col("ts") >= "2024-01-16"))().isRight)
+    VersionedHiddenTable.deletePositional(spark, t, col("user_id") < 3L): Unit
+    VersionedHiddenTable.updatePositional(spark, t, col("user_id") === 5L,
+      Map("value" -> (col("value") + 1))): Unit
+    val fs = new Path(t).getFileSystem(spark.sessionState.newHadoopConf())
+    // the listing sum the manifests stand in for, and the live directories
+    def live(): (Seq[String], Long) = {
+      val (eras, dels) = VersionedHiddenTable.snapshot(spark, t,
+        VersionedHiddenTable.mainVersions(spark, t).max)
+      val dirs = (eras ++ dels.map(_.dir)).map(d => s"$t/data/$d")
+      (dirs, dirs.map(d => FileStats.dataBytes(fs, new Path(d))).sum)
+    }
+    def check(when: String): Unit = {
+      val (dirs, listed) = live()
+      assert(dirs.forall(d => FileStats.stats(spark, d).exists(_.values.forall(_.len >= 0))),
+        s"$when: precondition: every live directory has a length-tracking manifest")
+      assert(VersionedHiddenTable.liveDataBytes(spark, t) == listed, when)
+    }
+    val (dirs, _) = live()
+    assert(dirs.count(_.contains("/era-")) >= 3 && dirs.count(_.contains("/del-")) == 2,
+      s"precondition: several eras and two positional masks: $dirs")
+    check("before maintain")
+    TableService.maintain(spark, t, TableService.Policy(maxLiveEras = 1, stagingGraceMs = 0L)): Unit
+    assert(live()._1 != dirs, "precondition: maintain must compact")
+    check("after maintain")
+  }
 }
