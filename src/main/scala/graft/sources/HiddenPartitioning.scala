@@ -2,7 +2,7 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.google.common.cache.{Cache, CacheBuilder}
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Attribute, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal, Murmur3Hash, Pmod, Substring, Subtract}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
@@ -225,39 +225,47 @@ object HiddenPartitioning {
     specCache.invalidate(normalize(spark, path))
   }
 
-  // in-flight era claims of THIS JVM: `fs.create(overwrite=false)` is only
+  // in-flight claims of THIS JVM: `fs.create(overwrite=false)` is only
   // atomic on filesystems with real create-if-absent (HDFS); on
   // RawLocal/Checksum (tests) and S3A it is exists-then-create, so two
   // same-JVM claimers scanning the same next id could both pass the
   // existence probe and land in one directory. The set arbitrates the
   // same-JVM race; entries live only for the duration of a claim call
-  // (after a successful claim the spec FILE exists and turns later
+  // (after a successful claim the claimed FILE exists and turns later
   // claimers away), so the set stays tiny.
   private val inFlightClaims =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** [[writeSpecFile]] that atomically CLAIMS the directory: of several
-    * concurrent writers exactly one wins a given era path — the losers see
-    * `false` and try the next id. Same-JVM claimers arbitrate through
-    * [[inFlightClaims]]; ACROSS processes the guarantee holds only on
-    * filesystems with atomic create-if-absent (HDFS — not raw-local or
-    * S3A), where cross-process writers must be externally serialized. */
-  private[sources] def claimSpecFile(spark: SparkSession, path: String,
-      transforms: Seq[Transform]): Boolean = {
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    val target = new Path(path, SpecFile)
+  /** The storage layer's one claim primitive (era spec files, delete-dir
+    * markers): create `target` and fill it with `write` iff neither it
+    * exists nor `taken` holds. Of several concurrent claimers exactly one
+    * wins a given path — the losers see `false` and try the next id.
+    * Same-JVM claimers arbitrate through [[inFlightClaims]]; ACROSS
+    * processes the guarantee holds only on filesystems with atomic
+    * create-if-absent (HDFS — not raw-local or S3A), where cross-process
+    * writers must be externally serialized. */
+  private[sources] def createIfAbsent(fs: FileSystem, target: Path,
+      taken: => Boolean = false)(write: java.io.OutputStream => Unit): Boolean = {
     val key = fs.makeQualified(target).toString
     if (!inFlightClaims.add(key)) return false
     try {
-      if (fs.exists(target)) return false
+      if (taken || fs.exists(target)) return false
       val out =
         try fs.create(target, false)
         catch { case _: java.io.IOException if fs.exists(target) => return false }
-      out.write(specJson(transforms))
-      out.close()
-      specCache.invalidate(normalize(spark, path))
+      try write(out) finally out.close()
       true
     } finally inFlightClaims.remove(key)
+  }
+
+  /** [[writeSpecFile]] that atomically CLAIMS the directory
+    * ([[createIfAbsent]] on its spec file). */
+  private[sources] def claimSpecFile(spark: SparkSession, path: String,
+      transforms: Seq[Transform]): Boolean = {
+    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    val won = createIfAbsent(fs, new Path(path, SpecFile))(_.write(specJson(transforms)))
+    if (won) specCache.invalidate(normalize(spark, path))
+    won
   }
 
   /** Create (or fully replace) the table: `df` laid out by the derived

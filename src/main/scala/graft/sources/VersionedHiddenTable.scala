@@ -1,6 +1,7 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import java.util.concurrent.atomic.LongAdder
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -88,6 +89,43 @@ object VersionedHiddenTable {
     commitLocks.computeIfAbsent(fs.makeQualified(root).toString, _ => new Object)
   }
   private val stageSeq = new java.util.concurrent.atomic.AtomicLong(0)
+
+  // every claim and commit runs through [[retry]]: an id claim (era,
+  // delete dir, publish version) steps to the next id up to ClaimCap
+  // times, a rebasing commit re-resolves its base up to RebaseCap times
+  private val ClaimCap = 64
+  private val RebaseCap = 16
+  private val commits, rebases, idSteps = new LongAdder
+
+  /** This JVM's commit-loop counts (the counts of Iceberg's `CommitReport`,
+    * summed): published snapshots, rebases after a
+    * [[CommitConflictException]], and ids stepped past after a lost claim. */
+  final case class CommitCounters(commits: Long, rebases: Long, idSteps: Long)
+
+  def commitCounters: CommitCounters =
+    CommitCounters(commits.sum(), rebases.sum(), idSteps.sum())
+
+  /** The one bounded retry: run `attempt` (given its 0-based number) until
+    * it returns Right, at most `cap` times, counting each retry in
+    * `retries`; after `cap` Lefts, `giveUp` throws on the last one. */
+  private def retry[E, A](cap: Int, retries: LongAdder)(attempt: Int => Either[E, A])(
+      giveUp: E => Nothing): A = {
+    var attempts = 1
+    var out = attempt(0)
+    while (out.isLeft && attempts < cap) {
+      retries.increment()
+      out = attempt(attempts)
+      attempts += 1
+    }
+    out.fold(giveUp, identity)
+  }
+
+  /** Claim the lowest id from `first` up that `claim` wins, stepping past
+    * each lost one, for at most ClaimCap ids. */
+  private def claimId[A](first: Long, exhausted: => String)(claim: Long => Option[A]): A =
+    retry(ClaimCap, idSteps)(i => claim(first + i).toRight(())) { _ =>
+      throw new IllegalStateException(exhausted)
+    }
 
   /** One merge-on-read delete file: `dir` holds the mask under `data/`,
     * `over` names the eras it applies to — exactly the eras that existed
@@ -235,62 +273,34 @@ object VersionedHiddenTable {
     vs.max
   }
 
-  /** Next unused era number — scans `data/` (NOT just the latest snapshot:
-    * compaction and unpublished staged appends may already hold higher
-    * numbers whose reuse would corrupt an immutable era). */
-  private def nextEraId(spark: SparkSession, tableDir: String): Int = {
+  /** Next unused `<prefix>-<k>` number (`era`, `del`) — scans `data/` (NOT
+    * just the latest snapshot: compaction and unpublished staged writes may
+    * already hold higher numbers whose reuse would corrupt an immutable
+    * directory). */
+  private def nextId(spark: SparkSession, tableDir: String, prefix: String): Int = {
     val (fs, _) = fsFor(spark, tableDir)
     val used = ls(fs, new Path(s"$tableDir/data"))
       .map(_.getPath.getName)
-      .collect { case n if n.startsWith("era-") => n.stripPrefix("era-").toInt }
+      .collect { case n if n.startsWith(s"$prefix-") => n.stripPrefix(s"$prefix-").toInt }
     if (used.isEmpty) 0 else used.max + 1
   }
 
-  /** Next unused delete-file number — same scan discipline as [[nextEraId]]. */
-  private def nextDelId(spark: SparkSession, tableDir: String): Int = {
-    val (fs, _) = fsFor(spark, tableDir)
-    val used = ls(fs, new Path(s"$tableDir/data"))
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("del-") => n.stripPrefix("del-").toInt }
-    if (used.isEmpty) 0 else used.max + 1
-  }
-
-  // in-flight delete-directory claims of this JVM — same arbitration story
-  // as [[HiddenPartitioning.claimSpecFile]]: the `_claim` marker's
-  // create-if-absent is the cross-process claim (atomic where the
-  // filesystem makes it so), the set arbitrates same-JVM racers, so two
-  // concurrent merges never write into one del directory
-  private val delClaims = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private val DelClaim = "_claim"
 
   /** Claim a fresh `del-<k>` directory (marker file created before any
-    * data) and return its name. The `_claim` marker is invisible to scans
-    * (underscore-prefixed, no '='), to [[FileStats]], and to the GC's
-    * reference counting — but its mtime marks write START for the vacuum
-    * grace window. */
+    * data, through [[HiddenPartitioning.createIfAbsent]], so two concurrent
+    * merges never write into one del directory) and return its name. The
+    * `_claim` marker is invisible to scans (underscore-prefixed, no '='),
+    * to [[FileStats]], and to the GC's reference counting — but its mtime
+    * marks write START for the vacuum grace window. */
   private def claimDelDir(spark: SparkSession, tableDir: String): String = {
     val (fs, _) = fsFor(spark, tableDir)
-    var id = nextDelId(spark, tableDir)
-    var attempts = 0
-    while (attempts < 64) {
-      attempts += 1
+    claimId(nextId(spark, tableDir, "del"),
+        s"could not claim a delete-file id under $tableDir") { id =>
       val dir = new Path(s"$tableDir/data/del-$id")
-      val marker = new Path(dir, DelClaim)
-      val key = fs.makeQualified(marker).toString
-      if (delClaims.add(key)) {
-        try {
-          if (!fs.exists(dir) && !fs.exists(marker)) {
-            try {
-              val out = fs.create(marker, false)
-              out.close()
-              return s"del-$id"
-            } catch { case _: java.io.IOException if fs.exists(marker) => () }
-          }
-        } finally delClaims.remove(key)
-      }
-      id += 1
+      Option.when(HiddenPartitioning.createIfAbsent(fs, new Path(dir, DelClaim),
+        taken = fs.exists(dir))(_ => ()))(s"del-$id")
     }
-    throw new IllegalStateException(s"could not claim a delete-file id under $tableDir")
   }
 
   /** Write `rows` as equality-delete file `del-<k>` (claimed atomically)
@@ -316,15 +326,11 @@ object VersionedHiddenTable {
     * (`private[graft]`: fault-injection tests build torn commit states.) */
   private[graft] def writeEra(spark: SparkSession, tableDir: String, df: DataFrame,
       transforms: Seq[Transform]): String = {
-    var id = nextEraId(spark, tableDir)
-    var attempts = 0
-    while (!HiddenPartitioning.claimSpecFile(spark, eraPath(tableDir, s"era-$id"),
-        transforms)) {
-      attempts += 1
-      require(attempts < 64, s"could not claim an era id under $tableDir")
-      id += 1
+    val era = claimId(nextId(spark, tableDir, "era"),
+        s"could not claim an era id under $tableDir") { id =>
+      Option.when(HiddenPartitioning.claimSpecFile(spark,
+        eraPath(tableDir, s"era-$id"), transforms))(s"era-$id")
     }
-    val era = s"era-$id"
     val p = eraPath(tableDir, era)
     HiddenPartitioning.derive(df, transforms).write.mode("append")
       .partitionBy(transforms.map(_.partCol): _*).parquet(p)
@@ -392,7 +398,7 @@ object VersionedHiddenTable {
 
   // A delete directory's cached metadata (its frame, touched-file list and
   // size) is fingerprinted by its `_claim` marker, which every claim
-  // creates afresh: vacuum frees a `del-<k>` id and [[nextDelId]] hands it
+  // creates afresh: vacuum frees a `del-<k>` id and [[nextId]] hands it
   // out again, and the directory's own fingerprint cannot tell the two
   // apart on an object store, where a directory reads `0:0`.
   private def delFingerprint(fs: FileSystem, delDir: Path): String =
@@ -751,10 +757,8 @@ object VersionedHiddenTable {
       require(fs.exists(from), s"no staged snapshot '$token' under $tableDir")
       val staged = readManifest(fs, new Path(from, SnapshotFile))
       val (baseOpt, branchOpt) = (staged.base, staged.branch)
-      var v = versions(spark, tableDir).lastOption.fold(0L)(_ + 1)
-      var attempts = 0
-      while (attempts < 64) {
-        attempts += 1
+      claimId(versions(spark, tableDir).lastOption.fold(0L)(_ + 1),
+          s"publish of '$token' under $tableDir lost $ClaimCap version races; giving up") { v =>
         // OCC: conflict iff a REAL snapshot (manifest present) newer than
         // the staged base exists ON THE STAGED LINEAGE — a main commit
         // validates against the main head, a branch commit against its
@@ -769,10 +773,8 @@ object VersionedHiddenTable {
           if (latest != b) throw new CommitConflictException(tableDir, b, latest)
         }
         val dst = new Path(s"$tableDir/v=$v")
-        if (fs.exists(dst)) {
-          // raced an external publisher that already took this id
-          v += 1
-        } else {
+        if (fs.exists(dst)) None // raced an external publisher that already took this id
+        else {
           preRenameHook(tableDir, v)
           require(fs.rename(from, dst),
             s"atomic snapshot publish rename failed for '$token'")
@@ -784,19 +786,20 @@ object VersionedHiddenTable {
           // passes the first check — returning v there would silently drop
           // this commit, the exact lost update OCC exists to make loud.
           val nested = new Path(dst, token)
-          if (fs.exists(new Path(dst, SnapshotFile)) && !fs.exists(nested))
-            return v
-          // rename landed NESTED inside a concurrently-created v=<n>:
-          // undo (move our staged dir back out) and retry under a fresh id
-          // (a staged `base` then re-validates at the top of the loop and
-          // surfaces the conflict)
-          require(fs.rename(nested, from),
-            s"could not undo nested publish of '$token' under v=$v")
-          v += 1
+          if (fs.exists(new Path(dst, SnapshotFile)) && !fs.exists(nested)) {
+            commits.increment()
+            Some(v)
+          } else {
+            // rename landed NESTED inside a concurrently-created v=<n>:
+            // undo (move our staged dir back out) and retry under a fresh
+            // id (a staged `base` then re-validates at the top of the
+            // attempt and surfaces the conflict)
+            require(fs.rename(nested, from),
+              s"could not undo nested publish of '$token' under v=$v")
+            None
+          }
         }
       }
-      throw new IllegalStateException(
-        s"publish of '$token' under $tableDir lost ${attempts} version races; giving up")
     }
 
   /** Fault-injection seam for the publish race window (tests only): runs
@@ -809,6 +812,39 @@ object VersionedHiddenTable {
     val (fs, _) = fsFor(spark, tableDir)
     fs.delete(new Path(s"$tableDir/_staging/$token"), true): Unit
   }
+
+  /** The rebasing commit of append (main or branch), the merge-on-read DML
+    * and MERGE, whose data is already written: resolve the `head` snapshot
+    * (-1 = not created yet), let `stage` map its eras and dels to the ones
+    * this commit publishes (it refuses by throwing), stage them, run the
+    * optional WAP `audit` against the staged manifest (Some = veto: the
+    * token is aborted and the veto returned), and publish. On a
+    * [[CommitConflictException]] the token is aborted and the next attempt
+    * re-resolves the head — a mechanical rebase, since `stage` re-derives
+    * the manifest from the new base; after RebaseCap tries the last
+    * conflict surfaces. */
+  private def commitRebasing[V](spark: SparkSession, tableDir: String, op: String,
+      batchId: Option[String], branch: Option[String] = None)(head: => Long)(
+      stage: (Seq[String], Seq[Del]) => (Seq[String], Seq[Del]),
+      audit: (Seq[String], Seq[Del]) => Option[V] = (_: Seq[String], _: Seq[Del]) => None)
+      : Either[V, Long] =
+    retry(RebaseCap, rebases) { _ =>
+      val base = head
+      val (eras, dels) =
+        stage.tupled(if (base < 0) (Nil, Nil) else snapshot(spark, tableDir, base))
+      val token = stageSnapshotDels(spark, tableDir, eras, dels, batchId, op,
+        Some(base), branch)
+      val veto = try audit(eras, dels)
+      catch { case e: Throwable => abort(spark, tableDir, token); throw e }
+      veto match {
+        case Some(v) => abort(spark, tableDir, token); Right(Left(v))
+        case None =>
+          try Right(Right(publish(spark, tableDir, token)))
+          catch {
+            case c: CommitConflictException => abort(spark, tableDir, token); Left(c)
+          }
+      }
+    }(c => throw c)
 
   /** Create the table: era-0 under `transforms` (empty = unpartitioned),
     * snapshot v=0. */
@@ -918,11 +954,20 @@ object VersionedHiddenTable {
     * throw) publishes nothing. */
   def appendOrCreate(spark: SparkSession, tableDir: String, df: DataFrame,
       transforms: Seq[Transform], batchId: Option[String] = None)(
-      audit: DataFrame => Seq[String] = _ => Nil): Either[Seq[String], Long] = {
-    val vs0 = mainVersions(spark, tableDir)
+      audit: DataFrame => Seq[String] = _ => Nil): Either[Seq[String], Long] =
+    appendTo(spark, tableDir, None, df, transforms, batchId)(audit)
+
+  /** The body of [[appendOrCreate]] (`branch` None) and [[appendToBranch]]:
+    * the two differ only in the head they resolve and the `branch` field
+    * they stage. */
+  private def appendTo(spark: SparkSession, tableDir: String, branch: Option[String],
+      df: DataFrame, transforms: Seq[Transform], batchId: Option[String])(
+      audit: DataFrame => Seq[String]): Either[Seq[String], Long] = {
+    def head: Long = branch.fold(mainVersions(spark, tableDir).lastOption.getOrElse(-1L))(
+      branchHead(spark, tableDir, _)) // a branch head also validates existence
+    val head0 = head
     val spec =
-      if (vs0.nonEmpty)
-        currentSpec(spark, tableDir, snapshot(spark, tableDir, vs0.max)._1)
+      if (head0 >= 0) currentSpec(spark, tableDir, snapshot(spark, tableDir, head0)._1)
       else transforms // empty = an unpartitioned table
     // the DATA write runs outside any lock (an unreferenced era is
     // invisible), so concurrent appends overlap their expensive part fully
@@ -934,32 +979,14 @@ object VersionedHiddenTable {
     // the first one's era. Same-JVM writers linearize under the lock; a
     // CROSS-PROCESS committer surfaces as a publish-time
     // [[CommitConflictException]], on which the append REBASES: re-resolve
-    // the latest snapshot, restage with the same (already-written) era,
-    // re-run the audit against the new composite, retry.
+    // the head, restage with the same (already-written) era, re-run the
+    // audit against the new composite, retry.
     commitLockFor(spark, tableDir).synchronized {
-      var attempts = 0
-      while (true) {
-        attempts += 1
-        val vs = mainVersions(spark, tableDir)
-        val base = if (vs.isEmpty) -1L else vs.max
-        val (eras, dels) =
-          if (vs.isEmpty) (Nil, Nil) else snapshot(spark, tableDir, vs.max)
-        // delete files carry forward UNCHANGED: the new era is outside every
-        // del's `over` set, so re-appended tuples equal to deleted ones survive
-        val staged = eras :+ era
-        val token = stageSnapshotDels(spark, tableDir, staged, dels, batchId,
-          "append", Some(base))
-        val violations = try audit(readEras(spark, tableDir, staged, dels))
-        catch { case e: Throwable => abort(spark, tableDir, token); throw e }
-        if (violations.nonEmpty) { abort(spark, tableDir, token); return Left(violations) }
-        try return Right(publish(spark, tableDir, token))
-        catch {
-          case c: CommitConflictException =>
-            abort(spark, tableDir, token) // rebase: loop re-resolves the base
-            if (attempts >= 16) throw c
-        }
-      }
-      throw new IllegalStateException("unreachable")
+      // delete files carry forward UNCHANGED: the new era is outside every
+      // del's `over` set, so re-appended tuples equal to deleted ones survive
+      commitRebasing(spark, tableDir, "append", batchId, branch)(head)(
+        (eras, dels) => (eras :+ era, dels),
+        (eras, dels) => Some(audit(readEras(spark, tableDir, eras, dels))).filter(_.nonEmpty))
     }
   }
 
@@ -973,7 +1000,7 @@ object VersionedHiddenTable {
     val vs = mainVersions(spark, tableDir)
     require(vs.nonEmpty, s"cannot evolve a table that was never created: $tableDir")
     val (eras, dels) = snapshot(spark, tableDir, vs.max)
-    val era = s"era-${nextEraId(spark, tableDir)}"
+    val era = s"era-${nextId(spark, tableDir, "era")}"
     HiddenPartitioning.writeSpecFile(spark, eraPath(tableDir, era), transforms)
     publish(spark, tableDir,
       stageSnapshotDels(spark, tableDir, eras :+ era, dels, None, "evolve",
@@ -1059,40 +1086,25 @@ object VersionedHiddenTable {
         "delete", Some(vs.max)))
   }
 
-  /** Rebase loop shared by the merge-on-read DML publishes: restage the
-    * already-written delete file / era against the LATEST snapshot when the
-    * publish detects a conflicting commit — legal under snapshot isolation
-    * (the mask covers exactly the eras the operation probed; rows a
-    * concurrent commit added are outside its `over` set and survive, the
-    * same scoping an un-raced operation gives later appends). The one
-    * un-rebasable case: a concurrent compaction/vacuum retired a COVERED
-    * era, so the mask's scope no longer exists — that surfaces as an error
-    * telling the caller to re-run, never as a silent partial delete. */
+  /** The merge-on-read DML publish: [[commitRebasing]] with a FIXED mask —
+    * restaging the already-written delete file / era against the latest
+    * snapshot is legal under snapshot isolation (the mask covers exactly
+    * the eras the operation probed; rows a concurrent commit added are
+    * outside its `over` set and survive, the same scoping an un-raced
+    * operation gives later appends). The one un-rebasable case: a
+    * concurrent compaction/vacuum retired a COVERED era, so the mask's
+    * scope no longer exists — that surfaces as an error telling the caller
+    * to re-run, never as a silent partial delete. */
   private def publishMorRebasing(spark: SparkSession, tableDir: String,
-      myEra: Option[String], myDel: Option[Del], op: String,
-      batchId: Option[String] = None): Long = {
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      val base = mainLatest(spark, tableDir)
-      val (baseEras, baseDels) = snapshot(spark, tableDir, base)
-      myDel.foreach { d =>
-        val missing = d.over -- baseEras.toSet
+      myEra: Option[String], myDel: Del, op: String): Long =
+    commitRebasing(spark, tableDir, op, None)(mainLatest(spark, tableDir)) {
+      (baseEras, baseDels) =>
+        val missing = myDel.over -- baseEras.toSet
         require(missing.isEmpty,
           s"cannot rebase $op on $tableDir: covered eras ${missing.mkString(",")} " +
             "were rewritten by a concurrent commit — re-run the operation")
-      }
-      val token = stageSnapshotDels(spark, tableDir, baseEras ++ myEra,
-        baseDels ++ myDel, batchId, op, Some(base))
-      try return publish(spark, tableDir, token)
-      catch {
-        case c: CommitConflictException =>
-          abort(spark, tableDir, token) // rebase: loop re-resolves the base
-          if (attempts >= 16) throw c
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+        (baseEras ++ myEra, baseDels :+ myDel)
+    }.merge
 
   /** Merge-on-read DELETE — the second Iceberg delete mode (equality-delete
     * files): instead of rewriting any data, the matching VISIBLE tuples are
@@ -1119,7 +1131,7 @@ object VersionedHiddenTable {
     val del = writeDel(spark, tableDir, matching)
     val covered = eras.filter(e =>
       HiddenPartitioning.eraHasData(spark, eraPath(tableDir, e))).toSet
-    publishMorRebasing(spark, tableDir, None, Some(Del(del, covered)), "delete")
+    publishMorRebasing(spark, tableDir, None, Del(del, covered), "delete")
   }
 
   /** Row-level UPDATE with snapshot semantics — the second half of the
@@ -1219,7 +1231,7 @@ object VersionedHiddenTable {
         .map(_.cast(f.dataType).as(f.name)).getOrElse(col(f.name))
     }: _*)
     val era = writeEra(spark, tableDir, updated, spec)
-    publishMorRebasing(spark, tableDir, Some(era), Some(Del(del, covered)), "update")
+    publishMorRebasing(spark, tableDir, Some(era), Del(del, covered), "update")
   }
 
   /** Positional merge-on-read DELETE — Iceberg v2's SECOND delete-file
@@ -1255,7 +1267,7 @@ object VersionedHiddenTable {
     if (matching.isEmpty) return vs.max
     val del = writeDel(spark, tableDir, matching)
     publishMorRebasing(spark, tableDir, None,
-      Some(Del(del, dataEras.toSet, Nil, "pos")), "delete")
+      Del(del, dataEras.toSet, Nil, "pos"), "delete")
   }
 
   /** Positional merge-on-read UPDATE — [[updateMergeOnRead]]'s flavor twin
@@ -1293,7 +1305,7 @@ object VersionedHiddenTable {
     }: _*)
     val era = writeEra(spark, tableDir, updated, spec)
     publishMorRebasing(spark, tableDir, Some(era),
-      Some(Del(del, dataEras.toSet, Nil, "pos")), "update")
+      Del(del, dataEras.toSet, Nil, "pos"), "update")
   }
 
   /** Storage-level MERGE — the upsert workhorse of incremental pipelines
@@ -1352,25 +1364,13 @@ object VersionedHiddenTable {
         .select(cols.map(col).toSeq: _*) // column ORDER aligned
       val delOpt = if (srcKeys.isEmpty) None else Some(writeDel(spark, tableDir, srcKeys))
       val eraOpt = if (upserts.isEmpty) None else Some(writeEra(spark, tableDir, upserts, spec))
-      var attempts = 0
-      while (true) {
-        attempts += 1
-        val base = mainLatest(spark, tableDir)
-        val (baseEras, baseDels) = snapshot(spark, tableDir, base)
-        val newDels = baseDels ++ delOpt.map(d =>
-          Del(d, baseEras.filter(e =>
-            HiddenPartitioning.eraHasData(spark, eraPath(tableDir, e))).toSet, keys))
-        val newEras = baseEras ++ eraOpt
-        val token = stageSnapshotDels(spark, tableDir, newEras, newDels, batchId,
-          "merge", Some(base))
-        try return publish(spark, tableDir, token)
-        catch {
-          case c: CommitConflictException =>
-            abort(spark, tableDir, token) // rebase: loop re-resolves the base
-            if (attempts >= 16) throw c
-        }
-      }
-      throw new IllegalStateException("unreachable")
+      // the key mask's `over` widens to each rebased base's data eras
+      commitRebasing(spark, tableDir, "merge", batchId)(mainLatest(spark, tableDir)) {
+        (baseEras, baseDels) =>
+          (baseEras ++ eraOpt, baseDels ++ delOpt.map(d =>
+            Del(d, baseEras.filter(e =>
+              HiddenPartitioning.eraHasData(spark, eraPath(tableDir, e))).toSet, keys)))
+      }.merge
     } finally src.unpersist(blocking = false): Unit
   }
 
@@ -1846,32 +1846,8 @@ object VersionedHiddenTable {
     * like two main appenders (same-JVM lock + cross-process rebase). */
   def appendToBranch(spark: SparkSession, tableDir: String, name: String,
       df: DataFrame, batchId: Option[String] = None)(
-      audit: DataFrame => Seq[String] = _ => Nil): Either[Seq[String], Long] = {
-    val head0 = branchHead(spark, tableDir, name) // also validates existence
-    val spec = currentSpec(spark, tableDir, snapshot(spark, tableDir, head0)._1)
-    val era = writeEra(spark, tableDir, df, spec)
-    commitLockFor(spark, tableDir).synchronized {
-      var attempts = 0
-      while (true) {
-        attempts += 1
-        val base = branchHead(spark, tableDir, name)
-        val (eras, dels) = snapshot(spark, tableDir, base)
-        val staged = eras :+ era
-        val token = stageSnapshotDels(spark, tableDir, staged, dels, batchId,
-          "append", Some(base), branch = Some(name))
-        val violations = try audit(readEras(spark, tableDir, staged, dels))
-        catch { case e: Throwable => abort(spark, tableDir, token); throw e }
-        if (violations.nonEmpty) { abort(spark, tableDir, token); return Left(violations) }
-        try return Right(publish(spark, tableDir, token))
-        catch {
-          case c: CommitConflictException =>
-            abort(spark, tableDir, token) // rebase: loop re-resolves the head
-            if (attempts >= 16) throw c
-        }
-      }
-      throw new IllegalStateException("unreachable")
-    }
-  }
+      audit: DataFrame => Seq[String] = _ => Nil): Either[Seq[String], Long] =
+    appendTo(spark, tableDir, Some(name), df, Nil, batchId)(audit)
 
   /** Fast-forward main to the branch head — Iceberg's `fastForward`
     * (fast-forward-ONLY, its own default: no merge semantics). Publishes

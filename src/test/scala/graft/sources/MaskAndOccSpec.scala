@@ -377,4 +377,142 @@ class MaskAndOccSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!fs.exists(new Path(s"$t/data/$orphan")),
       "a grace-0 maintain reclaims unreferenced data")
   }
+
+  /** Run `body` with a publish hook on table `t` that counts the body's
+    * publish attempts in `publishes` and, on each attempt `landOn` picks,
+    * first lands `compete` — a competing commit in exactly the window a
+    * cross-process publisher would use (its own publish passes the hook). */
+  private def racing[A](t: String, publishes: java.util.concurrent.atomic.AtomicInteger,
+      landOn: Int => Boolean)(compete: => Unit)(body: => A): A = {
+    var inside = false
+    VersionedHiddenTable.preRenameHook = (dir, _) =>
+      if (dir == t && !inside) {
+        if (landOn(publishes.incrementAndGet())) {
+          inside = true
+          try compete finally inside = false
+        }
+      }
+    try body finally VersionedHiddenTable.preRenameHook = (_, _) => ()
+  }
+
+  /** Three fresh rows (ids shifted past the corpus) — one competing commit. */
+  private def fresh(ev: DataFrame, n: Int): DataFrame =
+    ev.orderBy("event_id").limit(3).withColumn("event_id", col("event_id") + n * 1000000L)
+
+  test("commit loop: one competing commit forces exactly one rebase of each rebasing writer") {
+    val t = tmp("rebase1")
+    val ev = events.filter(col("event_id") < 4000L)
+    VersionedHiddenTable.create(spark, t, ev, Seq(HiddenPartitioning.DayT("ts")))
+    VersionedHiddenTable.createBranch(spark, t, "b")
+    var n = 0
+    val onMain = Seq.newBuilder[DataFrame]
+    def next(main: Boolean): DataFrame = {
+      n += 1
+      if (main) onMain += fresh(ev, n)
+      fresh(ev, n)
+    }
+    val src = ev.filter(pmod(col("event_id"), lit(10)) === 3L).withColumn("value", lit(7.0))
+    val writers: Seq[(String, Option[String], () => Long)] = Seq(
+      ("append", None, () => VersionedHiddenTable.append(spark, t, next(true))().toOption.get),
+      ("appendToBranch", Some("b"),
+        () => VersionedHiddenTable.appendToBranch(spark, t, "b", next(false))().toOption.get),
+      ("deleteMergeOnRead", None, () => VersionedHiddenTable.deleteMergeOnRead(spark, t,
+        pmod(col("event_id"), lit(7)) === 0L && col("event_id") < 4000L)),
+      ("merge", None, () => VersionedHiddenTable.merge(spark, t, src, Seq("event_id"))))
+    writers.foreach { case (name, branch, write) =>
+      var competitor = -1L
+      def compete(): Unit = competitor = branch match {
+        case Some(b) => VersionedHiddenTable.appendToBranch(spark, t, b, next(false))().toOption.get
+        case None => VersionedHiddenTable.append(spark, t, next(true))().toOption.get
+      }
+      val publishes = new java.util.concurrent.atomic.AtomicInteger
+      val before = VersionedHiddenTable.commitCounters
+      val v = racing(t, publishes, _ == 1)(compete())(write())
+      val after = VersionedHiddenTable.commitCounters
+      assert(publishes.get == 2, s"$name: one lost publish, then one that lands")
+      assert(after.rebases - before.rebases == 1, s"$name: exactly one rebase")
+      assert(after.idSteps - before.idSteps == 1, s"$name: the raced version id is stepped once")
+      assert(after.commits - before.commits == 2, s"$name: the competitor's commit and its own")
+      val m = VersionedHiddenTable.manifest(spark, t, v)
+      assert(v == competitor + 1 && m.base.contains(competitor) && m.branch == branch,
+        s"$name must publish on top of the competitor v=$competitor, got v=$v $m")
+      assert(VersionedHiddenTable.snapshot(spark, t, competitor)._1.forall(m.eras.contains),
+        s"$name must carry the competitor's eras")
+    }
+    // the merge re-inserts the deleted rows of its own keys
+    val read = VersionedHiddenTable.read(spark, t)
+    val expect = (ids(ev.filter(!(pmod(col("event_id"), lit(7)) === 0L) ||
+      pmod(col("event_id"), lit(10)) === 3L)) ++
+      ids(onMain.result().reduce(_.union(_)))).sorted
+    assert(ids(read) == expect, "every main commit's rows survive, the delete's mask applies")
+    assert(read.filter(pmod(col("event_id"), lit(10)) === 3L && col("event_id") < 4000L)
+      .select("value").distinct().collect().map(_.getDouble(0)).toSeq == Seq(7.0),
+      "the rebased merge's images replace the matched rows")
+  }
+
+  test("commit loop: a competitor on every attempt exhausts the 16-publish cap, leaving no token") {
+    val t = tmp("rebase16")
+    val ev = events.filter(col("event_id") < 4000L)
+    VersionedHiddenTable.create(spark, t, ev, Seq(HiddenPartitioning.DayT("ts")))
+    val fs = new Path(t).getFileSystem(spark.sessionState.newHadoopConf())
+    var n = 0
+    val ops: Seq[(String, () => Any)] = Seq(
+      ("append", () => VersionedHiddenTable.append(spark, t, fresh(ev, 100))()),
+      ("deleteMergeOnRead", () => VersionedHiddenTable.deleteMergeOnRead(spark, t,
+        col("event_id") < 200L)))
+    ops.foreach { case (name, op) =>
+      val vs0 = VersionedHiddenTable.versions(spark, t)
+      val competitors = Seq.newBuilder[Long]
+      val publishes = new java.util.concurrent.atomic.AtomicInteger
+      val before = VersionedHiddenTable.commitCounters
+      intercept[CommitConflictException] {
+        racing(t, publishes, _ => true) {
+          n += 1
+          competitors += VersionedHiddenTable.append(spark, t, fresh(ev, n))().toOption.get
+        }(op())
+      }
+      val after = VersionedHiddenTable.commitCounters
+      assert(publishes.get == 16, s"$name: the rebase cap is 16 publish attempts")
+      assert(after.rebases - before.rebases == 15, s"$name: 15 rebases between them")
+      assert(VersionedHiddenTable.versions(spark, t) == vs0 ++ competitors.result(),
+        s"$name: only the competitors' versions are added")
+      val staged = Option(fs.listStatus(new Path(t, "_staging"))).toSeq.flatten
+      assert(staged.isEmpty, s"$name: every attempt's token is aborted, got $staged")
+    }
+  }
+
+  test("claims: racing era writers and merge-on-read deletes land in distinct directories") {
+    import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+    val t = tmp("claims")
+    val ev = events.filter(col("event_id") < 4000L)
+    val spec = Seq(HiddenPartitioning.DayT("ts"))
+    VersionedHiddenTable.create(spark, t, ev, spec)
+    val pool = Executors.newFixedThreadPool(4)
+    def together[A](tasks: Seq[() => A]): Seq[A] = {
+      val gate = new CountDownLatch(1)
+      val futures = tasks.map(task => pool.submit(new java.util.concurrent.Callable[A] {
+        def call(): A = { gate.await(); task() }
+      }))
+      gate.countDown()
+      futures.map(_.get(5, TimeUnit.MINUTES))
+    }
+    try {
+      val eras = together((0 until 4).map(i => () =>
+        VersionedHiddenTable.writeEra(spark, t, fresh(ev, i + 1), spec)))
+      assert(eras.distinct.size == 4, s"every writer claims its own era: $eras")
+      eras.zipWithIndex.foreach { case (e, i) =>
+        assert(ids(HiddenPartitioning.readEra(spark, s"$t/data/$e")) == ids(fresh(ev, i + 1)),
+          s"$e holds exactly its writer's rows")
+      }
+      val Seq(k1, k2) = Seq(1L, 2L).map(k => pmod(col("event_id"), lit(10)) === k)
+      val vs = together(Seq(k1, k2).map(k => () =>
+        VersionedHiddenTable.deleteMergeOnRead(spark, t, k)))
+      assert(vs.toSet == Set(1L, 2L), s"both deletes publish: $vs")
+      val dels = VersionedHiddenTable.snapshot(spark, t, 2L)._2.map(_.dir)
+      assert(dels.size == 2 && dels.distinct.size == 2 && dels.forall(_.startsWith("del-")),
+        s"each delete lands in its own del-<k> dir: $dels")
+      assert(ids(VersionedHiddenTable.read(spark, t)) == ids(ev.filter(!(k1 || k2))),
+        "both masks apply")
+    } finally pool.shutdown()
+  }
 }
