@@ -8,6 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
+import org.apache.spark.sql.types.StructType
 import graft.sources.{FileStats, JoinAdvisor, VersionedHiddenTable}
 
 /** One pipeline model — the Spark equivalent of a dbt model: a named,
@@ -45,6 +47,9 @@ sealed trait Materialization {
   private[pipeline] def exists(spark: SparkSession, n: String): Boolean
   private[pipeline] def write(spark: SparkSession, n: String, df: DataFrame): Unit
   private[pipeline] def read(spark: SparkSession, n: String): DataFrame
+  /** Model `n` read back just after `runAs` wrote a frame of `schema` to it. */
+  private[pipeline] def readWritten(spark: SparkSession, n: String, schema: StructType): DataFrame =
+    read(spark, n)
 }
 
 object Materialization {
@@ -70,6 +75,12 @@ object Materialization {
     // ladder's byte rung; content unchanged — the golden digests gate that)
     private[pipeline] def read(spark: SparkSession, n: String) =
       JoinAdvisor.autoHinted(spark, where(n), spark.read.parquet(where(n)))
+    // the written schema, every field nullable as parquet stores it, spares
+    // the read its schema-inference job
+    override private[pipeline] def readWritten(spark: SparkSession, n: String,
+        schema: StructType) =
+      JoinAdvisor.autoHinted(spark, where(n),
+        spark.read.schema(GraftSqlBridge.asNullable(schema)).parquet(where(n)))
   }
 
   /** Catalog tables via `saveAsTable` into the reference's three schemas
@@ -229,6 +240,16 @@ final class DagRunner(models: Seq[Model]) {
     * session's cores), each carrying the Spark local properties the calling
     * thread had when it handed the model over.
     *
+    * Every write runs with code generation off on its writer thread only
+    * ([[GraftSqlBridge.interpreted]]): compiling a model's generated code
+    * costs more than it saves on this DAG. Over the fixture feeds copied up
+    * to 10000 times (an 832 MB corpus, the largest model reading 861 MB), a
+    * compiled build never beat an interpreted one by more than the noise
+    * (SCALE.md). A session
+    * that sets `spark.sql.codegen.factoryMode` or
+    * `spark.sql.codegen.wholeStage` itself keeps its setting, and so
+    * compiles every model.
+    *
     * A model whose build, write or read-back throws fails; its dependents
     * are skipped and never built, while independent models still launch
     * and finish. Once nothing is in flight, `runAs` throws an
@@ -267,8 +288,11 @@ final class DagRunner(models: Seq[Model]) {
             // the body hands back its own error; `e` is set only if the
             // capture around it throws, so every launch reports to `finished`
             SQLExecution.withThreadLocalCaptured(castToImpl(spark), pool) {
-              try { mat.write(spark, n, df); built.put(n, mat.read(spark, n)); None }
-              catch { case e: Throwable => Some(e) }
+              try {
+                GraftSqlBridge.interpreted(spark)(mat.write(spark, n, df))
+                built.put(n, mat.readWritten(spark, n, df.schema))
+                None
+              } catch { case e: Throwable => Some(e) }
             }.whenComplete((r, e) => finished.put(n -> Option(e).orElse(r)))
             inFlight += 1
           } catch { case NonFatal(e) => failed(n) = e }

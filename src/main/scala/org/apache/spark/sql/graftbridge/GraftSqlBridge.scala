@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Minimal `private[sql]` bridge: turning a hand-built [[LogicalPlan]] back
@@ -77,4 +78,36 @@ object GraftSqlBridge {
     * serializer: the counterpart of [[localRows]]. */
   def localFrame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
     ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** `schema` with every field nullable, nested fields included, as a
+    * parquet file stores it (`StructType.asNullable` is `private[spark]`). */
+  def asNullable(schema: StructType): StructType = schema.asNullable
+
+  // expression code generation off: interpreted projections, predicates
+  // and orderings, and no whole-stage code
+  private val noCodegen = Seq(
+    SQLConf.CODEGEN_FACTORY_MODE.key -> "NO_CODEGEN",
+    SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false")
+
+  /** Runs `body` with code generation off for the calling thread only;
+    * other threads on `spark` still compile. Driver-side planning reads
+    * `SQLConf.get`, which prefers the thread's existing conf, so `body`
+    * runs under a clone of the session conf with the two settings. The
+    * job's tasks read their SQL conf from local properties, so the two
+    * keys are set there too, and restored on exit (pool threads are
+    * reused). A key the session sets itself keeps the session's value:
+    * `SQLExecution` copies the session's explicit settings over the local
+    * properties anyway. */
+  def interpreted[T](spark: SparkSession)(body: => T): T = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val off = noCodegen.filterNot { case (k, _) => session.sessionState.conf.contains(k) }
+    val conf = session.sessionState.conf.clone()
+    off.foreach { case (k, v) => conf.setConfString(k, v) }
+    val sc = spark.sparkContext
+    val saved = off.map { case (k, _) => k -> sc.getLocalProperty(k) }
+    try {
+      off.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      SQLConf.withExistingConf(conf)(body)
+    } finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+  }
 }

@@ -20,8 +20,9 @@ import org.scalacheck.rng.Seed
   * `runAs`'s `ref()` contract in every materialization mode over a
   * 3-model chain `a -> b -> c`, and its scheduling: independent models
   * write at the same time, every `build` runs on the caller's thread, a
-  * failed model skips its dependents while its siblings finish, and a
-  * fatal error waits for the writes in flight. */
+  * failed model skips its dependents while its siblings finish, a fatal
+  * error waits for the writes in flight, and every write runs with code
+  * generation off. */
 class DagRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -191,6 +192,76 @@ class DagRunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
       intercept[LinkageError](new DagRunner(Seq(slow, fatal)).runAs(spark, mat))
       assert(mat.exists(spark, "x"), s"$mat: x's write must commit before runAs throws")
     }
+  }
+
+  test("every model writes interpreted; a session that sets the codegen keys itself compiles") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{lit, max, rank, sum}
+    val root = Files.createTempDirectory("graft-dag-codegen")
+    // a filter, a join, an aggregate, a window and a sort; `salt` is a
+    // literal in each expression, so a fresh salt makes every class that
+    // carries the model's expressions new to Spark's code cache
+    def dag(salt: Long) = new DagRunner(Seq(Model("w", Nil) { (s, _) =>
+      val facts = s.range(0, 400, 1, 2).select((col("id") % 7).as("k"), col("id").as("v"))
+      val dims = s.range(0, 7).select(col("id").as("k"), (col("id") * salt).as("w"))
+      facts.filter(col("v") > lit(salt % 5)).join(dims, "k")
+        .groupBy("k").agg(sum(col("v") + salt).as("s"), max("w").as("w"))
+        .withColumn("r", rank().over(Window.orderBy(col("s").desc)))
+        .orderBy("k")
+    }))
+    // (classes compiled by runAs, rows written)
+    def run(salt: Long, tag: String): (Long, Seq[String]) = {
+      val (n, out) = compiles(dag(salt).runAs(spark, Materialization.ParquetDir(s"$root/$tag")))
+      (n, out("w").collect().map(_.toString).toSeq)
+    }
+    // Spark generates a few classes whatever the factory mode: a partial
+    // aggregate's row joiner and some orderings in tasks, and a broadcast
+    // relation's key projection and a range partitioner's ordering on its
+    // exchange threads, which read the session conf. They depend on the
+    // schema only, so one warm-up run compiles them for good.
+    run(1L, "warm")
+    val (interpreted, rows) = run(2L, "interpreted")
+    assert(interpreted == 0L, "a model's write must compile nothing")
+    codegenKeys.foreach { k =>
+      assert(!spark.conf.getAll.contains(k), s"the session must not hold $k")
+      assert(spark.sparkContext.getLocalProperty(k) == null, s"the calling thread must not hold $k")
+    }
+    assert(compiles(spark.range(10).select(col("id") * System.nanoTime).collect())._1 > 0L,
+      "a query on the calling thread must still compile")
+    // the defaults, set explicitly: the session's own setting wins
+    codegenKeys.zip(Seq("FALLBACK", "true")).foreach { case (k, v) => spark.conf.set(k, v) }
+    val (compiled, same) = try run(2L, "compiled") finally codegenKeys.foreach(spark.conf.unset)
+    assert(compiled > 0L, "a session that sets the codegen keys itself must compile")
+    assert(same == rows, "both paths must write the same rows")
+  }
+
+  test("interpreted leaves a reused thread as it found it: a later query there compiles") {
+    import org.apache.spark.sql.functions.{lit, sum}
+    import org.apache.spark.sql.graftbridge.GraftSqlBridge
+    def query(salt: Long) = spark.range(0, 200, 1, 2).filter(col("id") % 3 =!= lit(salt % 3))
+      .groupBy((col("id") % 7).as("k")).agg(sum(col("id") * salt).as("s"))
+    val thread = java.util.concurrent.Executors.newSingleThreadExecutor()
+    def onThread[T](body: => T): T =
+      thread.submit(new java.util.concurrent.Callable[T] { def call(): T = body }).get()
+    try {
+      onThread(GraftSqlBridge.interpreted(spark)(query(1L).collect())) // warm-up
+      assert(onThread(compiles(GraftSqlBridge.interpreted(spark)(query(2L).collect()))._1) == 0L,
+        "the body must compile nothing")
+      codegenKeys.foreach(k => assert(onThread(spark.sparkContext.getLocalProperty(k)) == null,
+        s"the thread must not keep $k"))
+      assert(onThread(compiles(query(3L).collect()))._1 > 0L,
+        "a later query on the same thread must compile")
+    } finally thread.shutdown()
+  }
+
+  private val codegenKeys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+
+  /** (classes compiled while `body` ran, its result) */
+  private def compiles[T](body: => T): (Long, T) = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val r = body
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0, r)
   }
 }
 

@@ -685,6 +685,27 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
           "\n(if the change was INTENDED, regenerate: sbt \"runMain graft.pipeline.GoldenGen\")"))
   }
 
+  test("a fully compiled build matches the same golden map; read-backs take the written schema") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // the build in beforeAll wrote every model interpreted. A session that
+    // sets the two codegen keys itself keeps them, so this build compiles
+    // every model, and plans the same size-based broadcasts
+    val compiled = spark.newSession()
+    compiled.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    compiled.conf.set("spark.sql.codegen.wholeStage", "true")
+    val dir = Files.createTempDirectory("graft-mat-compiled").toString
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val built = Pipeline.run(compiled, root, Materialization.ParquetDir(dir))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0 > 100L,
+      "a build whose session keeps code generation on must compile its models")
+    assert(GoldenGen.gated.map(n => n -> Checks.contentDigest(built(n))).toMap == golden)
+    // the digest compares simpleString types only: the schema given to each
+    // read-back must equal the one parquet infers, nullability and field
+    // metadata included
+    for ((frames, at) <- Seq(out -> matDir, built -> dir); n <- GoldenGen.gated)
+      assert(frames(n).schema == spark.read.parquet(s"$at/$n").schema, s"$n under $at")
+  }
+
   test("structural invariants hold across randomized fixture seeds", graft.Slow) {
     // the fixed-seed tests above pin hand-computed values; this pins the
     // STRUCTURE — budget conservation, contiguous value-sorted ranks — on
